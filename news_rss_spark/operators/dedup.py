@@ -10,10 +10,12 @@ Reference semantics (src/feeds/rss_feeds/mod.rs:128-151):
 - publish-then-mark ordering -> at-least-once                 (D3)
 
 Spark mapping: the sink table itself is the dedup state.  Within-run
-duplicates -> ``dropDuplicates``; cross-run duplicates -> LEFT ANTI join
-against the sink keys, with the TTL becoming a retention predicate on the
-sink side (rows older than TTL no longer suppress re-publish — exactly the
-moka/Redis expiry semantics).
+duplicates -> ``dropDuplicates``; cross-run duplicates in the streaming
+sink -> LEFT ANTI join against the sink keys, with the TTL becoming a
+retention predicate on the sink side (rows older than TTL no longer
+suppress re-publish — exactly the moka/Redis expiry semantics).  The
+batch job needs no join: its lineage skip plus bucket-wise overwrite
+already keeps every id once (plans/pipeline.py).
 
 Scale notes:
 - the anti-join shuffles on the key only after the sink side is pruned by

@@ -11,10 +11,12 @@ Protocol:
 - after data lands, one lineage row per bucket is appended:
   (bucket, doc_count, ok_count, failure_count, byte_count,
   extractor_version, run_id);
-- resume = anti-join the input's buckets against lineage rows whose
-  extractor_version matches: completed buckets are skipped BEFORE the
-  extraction stage (scan-level filter; partition-prunable when the input
-  is laid out by the same bucket expression).
+- resume = collect the buckets of lineage rows whose extractor_version
+  matches (≤ n_buckets rows) and filter the input with ``bucket NOT IN
+  (...)``: completed buckets are skipped BEFORE the extraction stage
+  (scan-level filter; partition-prunable when the input is laid out by
+  the same bucket expression).  No cross-run anti-join is needed: every
+  bucket that is not completed is rewritten wholesale.
 
 Crash window analysis: data-then-lineage ordering means a crash between the
 two leaves an un-recorded bucket whose next run overwrites it in place —
@@ -29,7 +31,7 @@ pin a single reducer at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_N_BUCKETS = 64
@@ -49,13 +51,15 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS,
 
 
 def lineage_rows(extracted: DataFrame, extractor_version: str,
-                 run_id: str) -> DataFrame:
+                 run_id: str, *extra_aggs: Column) -> DataFrame:
     """One row per bucket; partial aggregation makes this map-side cheap.
 
     ``doc_count`` counts the rows that LANDED in the sink — i.e. documents
     after in-run dedup (first occurrence of each doc_id wins), not raw
     input occurrences; dropped repeats are invisible to the ledger by
     design (the sink read-back is the source of truth for what exists).
+    ``extra_aggs`` ride along in the same aggregate (the batch job's
+    duplicate-id counts), so a caller needs no second pass.
     """
     return (
         extracted.groupBy("bucket")
@@ -64,6 +68,7 @@ def lineage_rows(extracted: DataFrame, extractor_version: str,
             F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok_count"),
             F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("failure_count"),
             F.sum(F.coalesce(F.col("byte_count"), F.lit(0))).alias("byte_count"),
+            *extra_aggs,
         )
         .withColumn("extractor_version", F.lit(extractor_version))
         .withColumn("run_id", F.lit(run_id))
@@ -81,7 +86,9 @@ def completed_buckets(lineage: DataFrame | None, extractor_version: str) -> Data
 
 def skip_completed(docs_with_bucket: DataFrame,
                    completed: DataFrame | None) -> DataFrame:
-    """Resume filter: drop documents in already-completed buckets.
+    """Resume filter as a plan: drop documents in already-completed
+    buckets.  (The batch jobs collect the set and filter with ``isin``
+    instead — plans/pipeline.py.)
 
     The completed-bucket set is tiny (≤ n_buckets rows) — broadcast hint
     guarantees no shuffle of the 100 TB side.

@@ -162,6 +162,96 @@ class TestLineageAndResume:
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
+    def test_truncated_ledger_raises_and_leaves_sink(self, spark, paths):
+        """An unreadable ledger is not "nothing completed": the resume
+        raises before writing, and the sink stays byte-identical."""
+        import glob
+        import os
+        from pathlib import Path
+        sink, lineage = paths
+        docs = documents_df(spark, 120, seed=3, num_partitions=4)
+        run_extraction_job(spark, docs, sink, lineage, NOW, "r1", n_buckets=8)
+
+        def sink_bytes():
+            return {os.path.relpath(f, sink): Path(f).read_bytes()
+                    for f in glob.glob(f"{sink}/**", recursive=True)
+                    if os.path.isfile(f)}
+
+        before = sink_bytes()
+        ledger_file = glob.glob(f"{lineage}/*.parquet")[0]
+        with open(ledger_file, "r+b") as f:
+            f.truncate(os.path.getsize(ledger_file) // 2)
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            run_extraction_job(spark, docs, sink, lineage, NOW, "r2",
+                               n_buckets=8, resume=True)
+        assert sink_bytes() == before
+
+    def test_unreachable_ledger_raises_before_write(self, spark, paths):
+        """A ledger on a filesystem that cannot be opened raises before the
+        sink is touched, instead of reading as "no ledger"."""
+        import os
+        sink, lineage = paths
+        with pytest.raises(Exception, match="nosuchfs"):
+            run_extraction_job(spark, documents_df(spark, 60, seed=3), sink,
+                               f"nosuchfs://{lineage}", NOW, "r1", n_buckets=4)
+        assert not os.path.exists(sink)
+
+    def test_resume_reads_uri_addressed_ledger(self, spark, paths):
+        """The ledger is found through Spark's filesystem layer, so a
+        URI-addressed ledger (file://, hdfs://, s3a://) resumes too."""
+        sink, lineage = paths
+        docs = documents_df(spark, 60, seed=3)
+        run_extraction_job(spark, docs, sink, f"file://{lineage}", NOW, "r1",
+                           n_buckets=4)
+        r2 = run_extraction_job(spark, docs, sink, f"file://{lineage}", NOW,
+                                "r2", n_buckets=4)
+        assert r2.skipped_buckets == 4 and r2.lineage_buckets == 0
+
+    def test_jobs_leave_session_confs_alone(self, spark, paths, tmp_path):
+        """Dynamic overwrite and lz4 are per-write options: neither batch
+        job changes the caller's session confs."""
+        from news_rss_spark.plans.pipeline import run_page_bundle_job
+        sink, lineage = paths
+        keys = {"spark.sql.sources.partitionOverwriteMode": "static",
+                "spark.sql.parquet.compression.codec": "zstd"}
+        prev = {k: spark.conf.get(k) for k in keys}
+        try:
+            for k, v in keys.items():
+                spark.conf.set(k, v)
+            run_extraction_job(spark, documents_df(spark, 60, seed=3),
+                               sink, lineage, NOW, "r1", n_buckets=4)
+            assert {k: spark.conf.get(k) for k in keys} == keys
+            pages = spark.createDataFrame(
+                [(f"p{i}", f"<p>page {i}</p>", "https://s.example/")
+                 for i in range(20)],
+                "doc_id string, html string, base_url string")
+            run_page_bundle_job(spark, pages, str(tmp_path / "bs"),
+                                str(tmp_path / "bl"), "b1", n_buckets=4)
+            assert {k: spark.conf.get(k) for k in keys} == keys
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+
+    def test_resume_spark_job_budget(self, spark, paths):
+        """A half-completed resume runs a fixed number of Spark jobs; a
+        change that adds a pass over the data shows up here.  Measured on
+        Spark 4.1.2: 9 jobs -- the ledger collect; 4 for the bucket
+        exchange, the in-run dedup exchange and the write; 3 for the
+        lineage aggregate with its distinct-id count; the ledger append."""
+        sink, lineage = paths
+        docs = documents_df(spark, 120, seed=3, num_partitions=4)
+        run_extraction_job(spark, docs, sink, lineage, NOW, "crash",
+                           n_buckets=8, resume=False, only_buckets=[0, 2, 4, 6])
+        sc = spark.sparkContext
+        sc.setJobGroup("resume-budget", "half-completed resume")
+        try:
+            res = run_extraction_job(spark, docs, sink, lineage, NOW, "r",
+                                     n_buckets=8)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert res.skipped_buckets == 4 and res.lineage_buckets == 4
+        assert len(sc.statusTracker().getJobIdsForGroup("resume-budget")) <= 9
+
     def test_lineage_counts(self, spark, paths):
         sink, lineage = paths
         docs = documents_df(spark, 120, seed=3, num_partitions=4)
@@ -257,22 +347,22 @@ class TestFeedIngestionJob:
 
 
 class TestClusteredLayoutGuard:
-    def test_warns_when_clustering_promise_violated(self, spark, tmp_path):
+    def test_raises_when_clustering_promise_violated(self, spark, tmp_path):
         """input_clustered_by_bucket=True on input that is NOT clustered
-        (duplicate ids in different partitions) must emit the guard warning
-        and surface the surviving duplicates rather than silently trusting
-        the layout."""
-        import warnings as w
+        (duplicate ids in different partitions) must raise before the
+        ledger append rather than silently trusting the layout, so no
+        bucket holding duplicates is ever recorded as done."""
+        import os
         docs = documents_df(spark, 60, seed=9, num_partitions=1)
         # duplicate every doc into a second partition -> equal ids never
         # share a partition
         dup = docs.union(docs).repartition(6)
-        with w.catch_warnings(record=True) as caught:
-            w.simplefilter("always")
-            run_extraction_job(spark, dup, str(tmp_path / "s"),
-                               str(tmp_path / "l"), NOW, "guard",
-                               n_buckets=4, input_clustered_by_bucket=True)
-        assert any("clustering" in str(c.message) for c in caught)
+        lineage = str(tmp_path / "l")
+        with pytest.raises(RuntimeError, match="clustering"):
+            run_extraction_job(spark, dup, str(tmp_path / "s"), lineage,
+                               NOW, "guard", n_buckets=4,
+                               input_clustered_by_bucket=True)
+        assert not os.path.exists(lineage)
 
     def test_no_warning_on_honest_layout(self, spark, tmp_path):
         import warnings as w
