@@ -9,19 +9,23 @@ Reference semantics (src/feeds/rss_feeds/mod.rs:128-151):
   config/production.toml:8,14)
 - publish-then-mark ordering -> at-least-once                 (D3)
 
-Spark mapping: the sink table itself is the dedup state.  Within-run
-duplicates -> ``dropDuplicates``; cross-run duplicates in the streaming
-sink -> LEFT ANTI join against the sink keys, with the TTL becoming a
-retention predicate on the sink side (rows older than TTL no longer
-suppress re-publish — exactly the moka/Redis expiry semantics).  The
-batch job needs no join: its lineage skip plus bucket-wise overwrite
+Spark mapping: the sink table itself is the dedup state, and batch and
+stream share one rule.  Within-run duplicates -> ``dedup_within_run``
+(first occurrence wins).  Cross-run duplicates -> LEFT ANTI join against
+the sink keys, with the TTL becoming a retention predicate on the sink
+side: rows whose insertion time is older than the TTL no longer suppress
+re-publish — exactly the moka/Redis expiry semantics.  The streaming sink
+(streaming/stream.py) applies both steps to each micro-batch, keyed on the
+``first_seen`` insertion time it writes; there is no watermark.  The batch
+job needs only the first: its lineage skip plus bucket-wise overwrite
 already keeps every id once (plans/pipeline.py).
 
 Scale notes:
 - the anti-join shuffles on the key only after the sink side is pruned by
-  the retention predicate AND reduced to distinct keys — at 100 TB the sink
-  key set is the small side far more often than not; AQE converts the join
-  to broadcast when it fits, and skew-join splitting handles hot keys.
+  the retention predicate; it is not reduced to distinct keys, because a
+  left-anti join drops the same rows whatever the duplicates on its right
+  side.  AQE converts the join to broadcast when the key set fits, and
+  skew-join splitting handles hot keys.
 - ``dropDuplicates`` is a partial-agg (map-side combine) under the hood, so
   within-run dedup does not move full rows around twice.
 """
@@ -48,9 +52,10 @@ def seen_keys(
     key: str = "id",
     ts_col: str = "datetime",
 ) -> DataFrame:
-    """The still-live dedup state: sink keys younger than the TTL (D2)."""
+    """The still-live dedup state: sink keys younger than the TTL (D2).
+    A key may appear more than once; callers only anti-join against it."""
     cutoff = now_utc - timedelta(seconds=ttl_secs)
-    return sink.filter(F.col(ts_col) >= F.lit(cutoff)).select(key).distinct()
+    return sink.filter(F.col(ts_col) >= F.lit(cutoff)).select(key)
 
 
 def anti_join_seen(

@@ -1,151 +1,68 @@
-"""Structured-Streaming parity for the reference daemon's steady-state loop
-(SURVEY.md §7 M5).
+"""Structured-Streaming form of the reference daemon's steady-state loop
+(SURVEY.md §7 M5): one poller with one dedup rule, plus the registry's
+streaming analytics sinks.
 
 Reference semantics being mirrored:
 
 - S3 interval poller (src/feeds/rss_feeds/mod.rs:71-92: infinite loop,
-  ``tokio::time::interval`` tick -> fetch -> process) -> a
-  ``trigger(availableNow=True)`` run processes everything that has landed
-  since the last checkpoint and stops; re-invoking it on a schedule IS the
-  poller, with the checkpoint replacing the in-process loop state.
+  ``tokio::time::interval`` tick -> fetch -> process) -> one
+  ``trigger(availableNow=True)`` pass of
+  :func:`run_streaming_feed_ingestion_exactly_once` processes every raw
+  feed snapshot landed since the last checkpoint and stops; re-invoking it
+  on a schedule IS the poller, with the checkpoint replacing the
+  in-process loop state.
 - D1/D2 TTL dedup cache (cacher.contains/set with ``expired_secs``,
-  src/cache/local/mod.rs:31-54) -> ``dropDuplicatesWithinWatermark`` keyed
-  on the article guid: state for a guid is retained while its event time is
-  within the watermark delay — exactly a TTL keyed on pub_date — and is
-  dropped afterwards, bounding state like moka/Redis expiry bounds the
-  reference's cache.
+  src/cache/local/mod.rs:31-54) -> the batch job's rule, applied inside
+  :func:`exactly_once_news_sink`: ``dedup_within_run`` over the
+  micro-batch, then a left-anti join against the ids of the sink's other
+  ``batch_id`` partitions whose ``first_seen`` lies within
+  ``DEFAULT_TTL_SECS``.  ``first_seen`` is the pass's ``now_utc``, written
+  on every row, so the TTL runs from insertion like moka's
+  ``time_to_live`` (src/cache/local/mod.rs:32-34) and an undated or old
+  article is suppressed like any other.  There is no watermark and no
+  state store: the sink is the dedup state.  A
+  ``dropDuplicatesWithinWatermark`` in front of the same sink was
+  measured and rejected: it runs a no-data micro-batch after every data
+  batch, and a poll tick took about 1.5x as long.
 - The per-item extraction (mod.rs:157-211) runs unchanged: ``mapInArrow``
   stages compose with streaming sources, so batch and streaming share ONE
   kernel code path.
 
-Scale notes: the checkpoint directory carries source offsets + dedup state;
-state volume = live (unexpired) guids only.  At 100 TB-scale ingest the
-watermark keeps that bounded regardless of total history, which the batch
-path achieves with the lineage/anti-join protocol instead.
+A lost checkpoint is refused, never silently re-batched.  Each micro-batch
+overwrites only its own ``batch_id=<n>`` partition, so replaying batch
+``n`` (a crash before the checkpoint commit, or a wipe after the first
+pass) rewrites identical rows.  A checkpoint that is behind its sink by
+more than that restarts batch ids below partitions the sink already holds,
+and the pass would overwrite history; the sink raises before it writes.
+Recover by restoring the checkpoint, or by wiping the sink with it.
+
+Scale note: each pass lists the whole sink and anti-joins the live ids,
+so a pass's cost grows with the sink's history.
 """
 
 from __future__ import annotations
 
+import re
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from news_rss_spark.kernel.dates import EPOCH
+from news_rss_spark.operators.dedup import (
+    DEFAULT_TTL_SECS,
+    anti_join_seen,
+    dedup_within_run,
+)
 from news_rss_spark.operators.extraction import extract_articles, to_publish_news
-from news_rss_spark.sources.synth import SPANS_DDL
-
-# reference prod TTL: expired_secs=10368000 (120 days), config/production.toml:8
-DEFAULT_WATERMARK = "120 days"
-
-
-def stream_documents(spark: SparkSession, input_path: str,
-                     max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming scan of the landed documents table (S1's fetch loop becomes
-    file-arrival discovery; schema is the BASELINE input_hint shape)."""
-    reader = spark.readStream.schema(SPANS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_path)
-
-
-def streaming_news(docs: DataFrame, now_utc: datetime = EPOCH,
-                   watermark: str = DEFAULT_WATERMARK) -> DataFrame:
-    """documents stream -> deduped PublishNews stream.
-
-    ``dropDuplicatesWithinWatermark`` implements the reference's TTL cache
-    (D2).  The watermark rides an INGESTION-time column, not pub_date: moka
-    expires entries by time-since-``cache.set`` (src/cache/local/mod.rs:
-    32-34), and the reference never drops an article for being old — a
-    pub_date watermark would discard epoch-defaulted rows (P7 missing-date
-    fallback) as late data, silently diverging from the reference.
-    State for a guid thus lives ``watermark`` past its ingestion and then
-    expires — exactly the TTL cache, with bounded state.
-    """
-    extracted = extract_articles(docs, now_utc=now_utc)
-    news = to_publish_news(extracted)
-    return (
-        news.withColumn("_ingest_ts", F.current_timestamp())
-        .withWatermark("_ingest_ts", watermark)
-        .dropDuplicatesWithinWatermark(["id"])
-        .drop("_ingest_ts")
-    )
-
+from news_rss_spark.sources.rss_xml import documents_from_feeds
 
 FEEDS_DDL = "feed_id string, xml string, fetched_at timestamp"
 
-
-def stream_feed_documents(spark: SparkSession, feeds_path: str,
-                          max_files_per_trigger: int | None = None) -> DataFrame:
-    """S1 x S3 composed on RAW feed XML: a streaming scan of landed feed
-    snapshots (feed_id, xml, fetched_at) through the mapInArrow feed parser
-    into kernel documents.  Each poller tick re-fetches the same feeds with
-    mostly-unchanged items — exactly the reference's steady-state loop —
-    and the downstream TTL dedup suppresses the repeats, so only genuinely
-    new articles reach the sink."""
-    from news_rss_spark.sources.rss_xml import documents_from_feeds
-    reader = spark.readStream.schema(FEEDS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return documents_from_feeds(reader.parquet(feeds_path))
+_BATCH_PARTITION = re.compile(r"/batch_id=(\d+)/")
 
 
-def run_streaming_feed_ingestion(
-    spark: SparkSession,
-    feeds_path: str,
-    sink_path: str,
-    checkpoint_path: str,
-    now_utc: datetime = EPOCH,
-    watermark: str = DEFAULT_WATERMARK,
-    timeout_secs: int = 300,
-) -> None:
-    """availableNow pass over raw feed XML: parse -> extract -> TTL-dedup
-    -> append.  Re-invoking on a schedule IS the reference's poller, with
-    repeated guids from re-fetched feeds suppressed by the dedup state."""
-    docs = stream_feed_documents(spark, feeds_path)
-    news = streaming_news(docs, now_utc=now_utc, watermark=watermark)
-    q = (
-        news.writeStream.format("parquet")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_secs)
-    if q.isActive:
-        q.stop()
-
-
-def run_streaming_extraction(
-    spark: SparkSession,
-    input_path: str,
-    sink_path: str,
-    checkpoint_path: str,
-    now_utc: datetime = EPOCH,
-    watermark: str = DEFAULT_WATERMARK,
-    timeout_secs: int = 300,
-) -> None:
-    """One availableNow pass: process all unseen files, append to the sink,
-    stop.  Scheduling repeated invocations reproduces S3's interval poller
-    with exactly-once progress tracked in the checkpoint."""
-    docs = stream_documents(spark, input_path)
-    news = streaming_news(docs, now_utc=now_utc, watermark=watermark)
-    q = (
-        news.writeStream.format("parquet")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_secs)
-    if q.isActive:
-        q.stop()
-
-
-def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH,
-                           ttl_secs: int | None = None):
+def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH):
     """foreachBatch sink with REAL exactly-once semantics (not just
     at-least-once append): each micro-batch lands in its own
     ``batch_id=<n>`` partition via dynamic partition overwrite, so a batch
@@ -154,19 +71,21 @@ def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH,
     the same idempotent-replace protocol as the batch pipeline's bucket
     resume, keyed by batch id instead of bucket.
 
-    Cross-batch dedup: a left-anti join against every OTHER batch's ids
-    (own partition excluded — on replay the batch's previous rows must not
-    suppress themselves) with the TTL retention predicate on the seen side.
+    Dedup is the batch job's rule: first within the micro-batch (two
+    snapshots of one feed landed before a pass share most guids), then a
+    left-anti join against every OTHER batch's ids (own partition excluded
+    — on replay the batch's previous rows must not suppress themselves)
+    with the TTL retention predicate on their ``first_seen``.  Raises
+    before writing if the sink holds a partition above ``batch_id`` (the
+    checkpoint is behind its sink; see the module docstring).
     """
-    from news_rss_spark.operators.dedup import DEFAULT_TTL_SECS, anti_join_seen
-
-    ttl = DEFAULT_TTL_SECS if ttl_secs is None else ttl_secs
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.errors import AnalysisException
 
         spark = batch_df.sparkSession
-        out = batch_df
+        out = (dedup_within_run(batch_df, key="id")
+               .withColumn("first_seen", F.lit(now_utc)))
         # only the genuinely-missing/empty-sink case may skip the dedup
         # (first batch ever); a corrupt sink, IO failure, or schema drift
         # must FAIL the batch loudly — a swallowed error here would
@@ -189,13 +108,24 @@ def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH,
                 raise ValueError(
                     f"sink at {sink_path} lacks the batch_id partition "
                     "column — not an exactly-once sink; refusing to write")
+            # the file listing the read already holds: no Spark job
+            newest = max((int(m.group(1)) for m in
+                          map(_BATCH_PARTITION.search, prev.inputFiles())
+                          if m), default=-1)
+            if newest > batch_id:
+                raise RuntimeError(
+                    f"sink at {sink_path} holds batch_id={newest} but the "
+                    f"checkpoint is at batch {batch_id}: the checkpoint is "
+                    "behind its sink and this pass would overwrite history; "
+                    "restore the checkpoint, or wipe the sink with it")
             seen = prev.filter(F.col("batch_id") != batch_id) \
-                       .select("id", "datetime")
-            out = anti_join_seen(out, seen, now_utc, ttl,
-                                 key="id", ts_col="datetime")
-            # sever the self-read before overwriting the same location
-            out = out.localCheckpoint(eager=True)
-        # per-write options, NOT session confs: a session-wide
+                       .select("id", "first_seen")
+            out = anti_join_seen(out, seen, now_utc, DEFAULT_TTL_SECS,
+                                 key="id", ts_col="first_seen")
+        # Reading and overwriting the same path in one plan is safe here:
+        # the read is pruned to the other partitions, and the dynamic
+        # overwrite replaces only batch_id=<n>.
+        # Per-write options, NOT session confs: a session-wide
         # partitionOverwriteMode / codec mutation here would leak into
         # concurrent jobs sharing the session (the hazard components.py
         # documents); incremental_hll_sink already follows this rule
@@ -217,11 +147,14 @@ def run_streaming_feed_ingestion_exactly_once(
     now_utc: datetime = EPOCH,
     timeout_secs: int = 300,
 ) -> None:
-    """Raw feed XML -> parse -> extract -> exactly-once sink.  Dedup here
-    is the cross-batch anti-join inside the sink (no watermark state):
-    state lives in the sink itself, which also makes replays inspectable."""
-    docs = stream_feed_documents(spark, feeds_path)
-    news = to_publish_news(extract_articles(docs, now_utc=now_utc))
+    """One poller tick: an availableNow pass over the raw feed snapshots
+    (``FEEDS_DDL`` rows) landed since the last pass -> parse -> extract ->
+    :func:`exactly_once_news_sink`.  A pass still running after
+    ``timeout_secs`` is stopped and raises ``TimeoutError``; the next pass
+    resumes from the checkpoint."""
+    feeds = spark.readStream.schema(FEEDS_DDL).parquet(feeds_path)
+    news = to_publish_news(extract_articles(documents_from_feeds(feeds),
+                                            now_utc=now_utc))
     q = (
         news.writeStream
         .foreachBatch(exactly_once_news_sink(sink_path, now_utc))
@@ -230,9 +163,11 @@ def run_streaming_feed_ingestion_exactly_once(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_secs)
-    if q.isActive:
+    if not q.awaitTermination(timeout_secs):
         q.stop()
+        raise TimeoutError(
+            f"poll pass over {feeds_path} did not finish within "
+            f"{timeout_secs} s; stopped it")
 
 
 def streaming_windowed_counts(events: DataFrame, window: str = "1 hour",
