@@ -18,10 +18,12 @@ that dataflow Spark-first:
   per-partition lineage rows enabling idempotent checkpoint-resume
   (news_rss_spark.plans.pipeline, news_rss_spark.operators.lineage).
 
-Additionally the package ships the large-scale training-data operators the
-reference lacks: exact/MinHash-LSH/SimHash/n-gram-Jaccard dedup, embedding
-ANN search, text quality analysis, and multimodal column plumbing
-(news_rss_spark.operators.*).
+Beside the ingestion path sit the feed-source registry
+(news_rss_spark.sources.registry), the Iceberg adapter
+(news_rss_spark.plans.iceberg) and the semantic-block column functions
+(news_rss_spark.functions.semantic_blocks).  The corpus operators built
+on top of this package (dedup, ANN, quality, graphs, sketches, media
+kernels) are the separate ``corpus_lab`` package; nothing here imports it.
 """
 
 __version__ = "0.1.0"

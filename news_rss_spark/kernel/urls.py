@@ -20,13 +20,6 @@ import re
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 _IPV4_RE = re.compile(r"^\d{1,3}(\.\d{1,3}){3}$")
 
-# shared URL-authority grammar (single source of truth — operators/url_ops,
-# operators/robots, and kernel/robotsx all consume these; RE2-safe so the
-# same pattern text runs in DuckDB oracles)
-SCHEME_PATTERN = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
-HOST_PATTERN = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)"
-AFTER_AUTH_PATTERN = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)"
-
 
 def url_domain(link: str | None) -> str | None:
     """Return the registrable host of ``link``, mimicking rust-url semantics.

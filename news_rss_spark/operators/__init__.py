@@ -1,1 +1,1 @@
-"""Spark-side operators: extraction, dedup, lineage, training-data ops."""
+"""Spark-side operators: extraction, dedup, lineage."""

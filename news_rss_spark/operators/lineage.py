@@ -23,10 +23,6 @@ two leaves an un-recorded bucket whose next run overwrites it in place —
 no duplicates, strictly stronger than the reference's at-least-once.
 
 Skew: buckets are uniform by construction (hash of a high-cardinality key).
-The skewed dimension in this workload is the publisher domain (a few
-publishers own most docs — FIXTURES.md §1); ``salted_agg`` below is the
-two-stage aggregation used for per-publisher stats so one hot key cannot
-pin a single reducer at 100 TB.
 """
 
 from __future__ import annotations
@@ -87,7 +83,7 @@ def completed_buckets(lineage: DataFrame | None, extractor_version: str) -> Data
 def skip_completed(docs_with_bucket: DataFrame,
                    completed: DataFrame | None) -> DataFrame:
     """Resume filter as a plan: drop documents in already-completed
-    buckets.  (The batch jobs collect the set and filter with ``isin``
+    buckets.  (The batch job collects the set and filters with ``isin``
     instead — plans/pipeline.py.)
 
     The completed-bucket set is tiny (≤ n_buckets rows) — broadcast hint
@@ -96,36 +92,3 @@ def skip_completed(docs_with_bucket: DataFrame,
     if completed is None:
         return docs_with_bucket
     return docs_with_bucket.join(F.broadcast(completed), on="bucket", how="left_anti")
-
-
-def salted_agg(df: DataFrame, group_col: str, agg_exprs: dict,
-               n_salts: int = 16) -> DataFrame:
-    """Two-stage aggregation for skewed group keys.
-
-    Stage 1 groups by (key, salt) — the hot key's rows spread over
-    ``n_salts`` reducers; stage 2 combines the ``n_salts`` partials per key.
-    ``agg_exprs`` maps output column name -> ("sum"|"count"|"max"|"min",
-    input column). Only decomposable aggregates are supported (that is the
-    point of salting).
-    """
-    first = []
-    second = []
-    for out, (fn, col) in agg_exprs.items():
-        if fn == "count":
-            first.append(F.count(col if col != "*" else "*").alias(out))
-            second.append(F.sum(out).alias(out))
-        elif fn == "sum":
-            first.append(F.sum(col).alias(out))
-            second.append(F.sum(out).alias(out))
-        elif fn == "max":
-            first.append(F.max(col).alias(out))
-            second.append(F.max(out).alias(out))
-        elif fn == "min":
-            first.append(F.min(col).alias(out))
-            second.append(F.min(out).alias(out))
-        else:
-            raise ValueError(f"non-decomposable aggregate: {fn}")
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                                           F.lit(n_salts)))
-    partial = salted.groupBy(group_col, "_salt").agg(*first)
-    return partial.groupBy(group_col).agg(*second)

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from datetime import datetime
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,24 +60,21 @@ def _gc_orphan_staging(spark: SparkSession, sink_path: str) -> int:
 
     Scheme-agnostic via the Hadoop FileSystem API — works for file://,
     hdfs:// and s3a:// sinks alike; Spark's own scans never read dot/
-    underscore-prefixed dirs, so this is purely a storage reclaim.
+    underscore-prefixed dirs, so this is purely a storage reclaim.  A
+    missing sink is a first run (nothing to reclaim); any other failure to
+    resolve, list or delete raises, before the job writes anything.
     """
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(sink_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return 0
-        removed = 0
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if name.startswith(".spark-staging-") or name == "_temporary":
-                fs.delete(st.getPath(), True)
-                removed += 1
-        return removed
-    except Exception:
-        # best-effort reclaim: a listing/permission hiccup must never fail
-        # the job itself
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(sink_path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
         return 0
+    removed = 0
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if name.startswith(".spark-staging-") or name == "_temporary":
+            fs.delete(st.getPath(), True)
+            removed += 1
+    return removed
 
 
 def _completed(spark: SparkSession, lineage_path: str,
@@ -105,8 +101,8 @@ def _completed(spark: SparkSession, lineage_path: str,
 
 
 def _bucketed_input(spark: SparkSession, df: DataFrame, n_buckets: int,
-                    done: set[int], only_buckets: list[int] | None = None,
-                    clustered: bool = False) -> tuple[DataFrame, bool]:
+                    done: set[int], only_buckets: list[int] | None,
+                    clustered: bool) -> tuple[DataFrame, bool]:
     """Assign buckets, drop completed (and out-of-wave) buckets, and spread
     an under-split scan over ``bucket``.  Returns the pending rows and
     whether equal buckets now share a partition."""
@@ -138,24 +134,21 @@ def _bucketed_input(spark: SparkSession, df: DataFrame, n_buckets: int,
 
 def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
              lineage_path: str, extractor_version: str, run_id: str,
-             done: set[int],
-             lineage_source: Callable[[DataFrame], DataFrame],
-             id_col: str | None = None) -> JobResult:
-    """The bucketed-write-plus-ledger step both batch jobs share.
+             done: set[int]) -> JobResult:
+    """The bucketed write plus the ledger append.
 
     Orphaned staging dirs of a dead run are reclaimed first.  ``rows``
     (carrying ``bucket``) replace their buckets in the sink via
-    dynamic partition overwrite; then ONE aggregate over a column-pruned
-    read-back of what landed yields the ledger rows — the ledger can never
-    claim more than the sink holds (a crash between write and append
-    leaves an un-recorded bucket that the next run idempotently rewrites).
-    ``lineage_source`` maps the landed sink to ``(bucket, status,
-    byte_count[, id_col])``.
+    dynamic partition overwrite; then ONE aggregate over a read-back of
+    the landed ``(bucket, status, byte_count, id)`` yields the ledger
+    rows — the ledger can never claim more than the sink holds (a crash
+    between write and append leaves an un-recorded bucket that the next
+    run idempotently rewrites).
 
-    With ``id_col``, the same aggregate counts non-null ids and distinct
-    ids per bucket, and the job raises before the ledger append when a
-    newly written bucket holds a duplicate id (null ids are legitimate
-    repeats: missing-guid skip rows).
+    The same aggregate counts non-null ids and distinct ids per bucket,
+    and the job raises before the ledger append when a newly written
+    bucket holds a duplicate id (null ids are legitimate repeats:
+    missing-guid skip rows).
     """
     gc_staging = _gc_orphan_staging(spark, sink_path)
     # per-write options, NOT session confs, so the caller's session is left
@@ -171,11 +164,11 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
          .parquet(sink_path))
 
     # the schema just written: the read-back runs no schema-inference job
-    landed = lineage_source(spark.read.schema(rows.schema).parquet(sink_path))
-    id_aggs = ([F.count(id_col).alias("id_count"),
-                F.countDistinct(id_col).alias("id_distinct")]
-               if id_col else [])
-    lin = lineage_rows(landed, extractor_version, run_id, *id_aggs)
+    landed = (spark.read.schema(rows.schema).parquet(sink_path)
+              .select("bucket", "status", "byte_count", "id"))
+    lin = lineage_rows(landed, extractor_version, run_id,
+                       F.count("id").alias("id_count"),
+                       F.countDistinct("id").alias("id_distinct"))
     # the collected aggregate (≤ n_buckets rows) carries ok_count per
     # bucket, so the published total needs no second sink scan.  Only
     # buckets NOT already recorded get appended — the read-back sees the
@@ -183,7 +176,7 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
     lin_rows = lin.collect()
     new_rows = [r for r in lin_rows if r["bucket"] not in done]
     dup_buckets = sorted(r["bucket"] for r in new_rows
-                         if id_col and r["id_count"] != r["id_distinct"])
+                         if r["id_count"] != r["id_distinct"])
     if dup_buckets:
         # the clustered-layout promise (equal ids share one scan split, so
         # partition-local dedup is globally correct) is trusted, not
@@ -191,7 +184,7 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
         # append leaves these buckets un-recorded, so the next run rewrites
         # them.
         raise RuntimeError(
-            f"duplicate {id_col}s landed in sink buckets {dup_buckets}: the"
+            f"duplicate ids landed in sink buckets {dup_buckets}: the"
             " input layout violated the clustering promise; rerun with"
             " input_clustered_by_bucket=False")
     if new_rows:
@@ -263,11 +256,8 @@ def run_extraction_job(
     # the text column is byte-for-byte derivable from the text spans
     # (kernel joins them with "\n") — storing both would double the write
     # volume; readers re-attach it via extraction.with_text_from_spans
-    return _publish(
-        spark, extracted.drop("text"), sink_path, lineage_path,
-        extractor_version, run_id, done,
-        lambda sink: sink.select("bucket", "status", "byte_count", "id"),
-        id_col="id")
+    return _publish(spark, extracted.drop("text"), sink_path, lineage_path,
+                    extractor_version, run_id, done)
 
 
 def run_feed_ingestion_job(
@@ -296,77 +286,3 @@ def run_feed_ingestion_job(
     docs = documents_from_feeds(feeds, xml_col=xml_col, id_col=feed_id_col)
     return run_extraction_job(spark, docs, sink_path, lineage_path,
                               now_utc, run_id, **job_kwargs)
-
-
-def run_warc_extraction_job(
-    spark: SparkSession,
-    warc_files: DataFrame,
-    sink_path: str,
-    lineage_path: str,
-    now_utc: datetime,
-    run_id: str,
-    content_col: str = "content",
-    file_id_col: str = "file_id",
-    **job_kwargs,
-) -> JobResult:
-    """The web-crawl user story in one batch call: WARC archives
-    (file_id, content bytes) -> HTTP 200 HTML records -> kernel documents
-    -> the full idempotent extraction pipeline (resume, dedup, bucketed
-    sink, lineage).
-
-    Same single-pass plan as ``run_extraction_job``; the WARC record
-    parse (kernel/warcx.py — gzip members, Content-Length slicing) is one
-    extra narrow mapInArrow stage fused ahead of the extraction kernel,
-    no added shuffle.  Discovery and politeness live upstream:
-    sources/sitemap.py::crawl_frontier -> operators/robots.py::
-    filter_by_robots produce the fetch list whose responses land here.
-    """
-    from news_rss_spark.sources.warc import documents_from_warc
-
-    docs = documents_from_warc(warc_files, content_col=content_col,
-                               id_col=file_id_col)
-    return run_extraction_job(spark, docs, sink_path, lineage_path,
-                              now_utc, run_id, **job_kwargs)
-
-
-def run_page_bundle_job(
-    spark: SparkSession,
-    pages: DataFrame,
-    sink_path: str,
-    lineage_path: str,
-    run_id: str,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    resume: bool = True,
-    extractor_version: str = EXTRACTOR_VERSION,
-) -> JobResult:
-    """The raw-page user story with the same idempotent checkpoint-resume
-    protocol as the flagship job: pages ``(doc_id, html, base_url)`` ->
-    ONE fused Arrow pass (body spans + head metadata + outlinks + table
-    census — ``operators/full_page.py``) -> bucketed dynamic-overwrite
-    sink + lineage ledger.
-
-    Shares the flagship machinery: the ledger skip, orphan-staging GC, the
-    parallelism/clustering exchange and the bucketed-write-plus-ledger
-    step.  Differences, documented: the fused kernels never raise (empty
-    products, not failures), so lineage ``status`` is constant ``'ok'``
-    and ``byte_count`` records bytes EMITTED (span text) rather than the
-    article path's extracted-byte accounting; duplicate doc_ids are the
-    caller's contract (pre-deduped crawl tables), as re-running the pure
-    kernel on repeats is wasteful but harmless.
-    """
-    from news_rss_spark.operators.full_page import extract_page_bundle_df
-
-    done = _completed(spark, lineage_path, extractor_version) if resume else set()
-    pages_b, _ = _bucketed_input(spark, pages, n_buckets, done)
-
-    bundle = extract_page_bundle_df(
-        pages_b.select("doc_id", "html", "base_url"))
-    bundle = with_bucket(bundle, n_buckets=n_buckets, key="doc_id")
-    return _publish(
-        spark, bundle, sink_path, lineage_path, extractor_version, run_id,
-        done,
-        lambda sink: sink.select(
-            "bucket", F.lit("ok").alias("status"),
-            F.octet_length(F.concat_ws(
-                "\n", F.transform("spans", lambda s: s["text"])))
-            .cast("bigint").alias("byte_count")))

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Derive the next round's 50-slot correctness window mechanically.
 
-Policy (see the comment block in ``__spark_entry__.queries()``):
+Policy (see the comment above ``__spark_entry__._R5_WINDOW``):
 
 * Slots 1-8: the permanently reserved SURVEY §2 reference-parity core.
 * Slots 9-50: never-driver-verified entries first (registry order),

@@ -4,7 +4,7 @@ the banding/Jaccard arithmetic and invariant checks."""
 import hashlib
 import re
 
-from news_rss_spark.operators.audit import lsh_dedup_audit, table_column_stats
+from corpus_lab.operators.audit import lsh_dedup_audit, table_column_stats
 
 
 # ---------------------------------------------------- python reference

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.bitext import (
+from corpus_lab.operators.bitext import (
     margin_mining,
     margin_mining_lsh,
     scaled_cosine_pairs,
@@ -132,7 +132,7 @@ def test_lsh_variant_subset_semantics(spark):
     # LSH-restricted mining with ONE plane cell split: every surviving
     # pair must also satisfy brute mutual-top-1 WITHIN its bucket;
     # verify against a bucketed reference built from the same planes.
-    from news_rss_spark.operators.similarity import with_lsh_bucket
+    from corpus_lab.operators.similarity import with_lsh_bucket
     xv, yv = _vecs(13, 20), _vecs(14, 20)
     xdf, ydf = _df(spark, xv), _df(spark, yv, 100)
     got = sorted((r["x"], r["y"], r["margin"])

@@ -5,7 +5,7 @@ import random
 
 import pytest
 
-from news_rss_spark.kernel.acmatch import AhoCorasick
+from corpus_lab.kernel.acmatch import AhoCorasick
 
 
 def naive_count(text: str, pattern: str) -> int:
@@ -86,7 +86,7 @@ class TestBlocklistOperator:
         return spark.createDataFrame(rows, "doc_id string, text string")
 
     def test_hits(self, spark, docs):
-        from news_rss_spark.operators.blocklist import blocklist_hits
+        from corpus_lab.operators.blocklist import blocklist_hits
         got = {(r["doc_id"], r["phrase"]): (r["n_hits"], r["first_end"])
                for r in blocklist_hits(
                    docs, ["table table", "hash value", "a a"]).collect()}
@@ -98,7 +98,7 @@ class TestBlocklistOperator:
         assert not any(k[0] in ("d2", "d4") for k in got)
 
     def test_verdict_includes_clean_docs(self, spark, docs):
-        from news_rss_spark.operators.blocklist import blocklist_verdict
+        from corpus_lab.operators.blocklist import blocklist_verdict
         got = {r["doc_id"]: (r["total_hits"], r["blocked"])
                for r in blocklist_verdict(
                    docs, ["table table", "a a"], max_hits=1).collect()}
@@ -108,7 +108,7 @@ class TestBlocklistOperator:
         assert got["d4"] == (0, False)
 
     def test_no_join_no_shuffle_in_hits_plan(self, spark, docs):
-        from news_rss_spark.operators.blocklist import blocklist_hits
+        from corpus_lab.operators.blocklist import blocklist_hits
         plan = blocklist_hits(docs, ["x y"])._jdf.queryExecution() \
             .executedPlan().toString()
         assert "Join" not in plan

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.bloom import (
+from corpus_lab.operators.bloom import (
     bloom_anti_join,
     bloom_prune,
     bloom_words,

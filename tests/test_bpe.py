@@ -6,7 +6,7 @@ import collections
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.bpe import (
+from corpus_lab.operators.bpe import (
     END, apply_merge, bpe_apply, bpe_train, pair_counts, with_symbols,
     word_counts,
 )

@@ -6,8 +6,8 @@ import math
 
 import pytest
 
-from news_rss_spark.operators.cdc import cdc_chunks, cdc_shared_chunks
-from news_rss_spark.operators.cleaning import (
+from corpus_lab.operators.cdc import cdc_chunks, cdc_shared_chunks
+from corpus_lab.operators.cleaning import (
     MOJIBAKE_MAP, char_entropy, mojibake_repair)
 
 
@@ -187,7 +187,7 @@ def test_cdc_shared_chunks_finds_common_passage(spark):
 
 
 def test_cdc_gear_matches_python_reference(spark):
-    from news_rss_spark.operators.cdc import cdc_chunks_gear, gear_anchors_py
+    from corpus_lab.operators.cdc import cdc_chunks_gear, gear_anchors_py
     texts = [_mk_text(400, "ga"), _mk_text(37, "gb"), "tiny",
              _mk_text(900, "gc"), "exactly"]
     df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
@@ -210,7 +210,7 @@ def test_cdc_gear_matches_python_reference(spark):
 
 
 def test_cdc_gear_insertion_resync(spark):
-    from news_rss_spark.operators.cdc import cdc_chunks_gear
+    from corpus_lab.operators.cdc import cdc_chunks_gear
     base = _mk_text(2000, "gear-resync")
     edited = base[:901] + "XYZ" + base[901:]
     df = spark.createDataFrame([(0, base), (1, edited)], ["doc_id", "text"])
@@ -224,7 +224,7 @@ def test_cdc_gear_insertion_resync(spark):
 def test_cdc_gear_unicode_positions(spark):
     """Gear anchor positions are CHARACTER offsets even for non-ASCII
     text (utf-32 codepoint view), matching the JVM substring slicing."""
-    from news_rss_spark.operators.cdc import cdc_chunks_gear, gear_anchors_py
+    from corpus_lab.operators.cdc import cdc_chunks_gear, gear_anchors_py
     text = "héllo wörld " * 40 + "日本語テキスト " * 20
     df = spark.createDataFrame([(0, text)], ["doc_id", "text"])
     chunks = sorted(cdc_chunks_gear(df, divisor=16).collect(),
@@ -235,7 +235,7 @@ def test_cdc_gear_unicode_positions(spark):
 
 
 def test_cdc_revision_pairs_finds_planted_edits(spark):
-    from news_rss_spark.operators.cdc import cdc_revision_pairs
+    from corpus_lab.operators.cdc import cdc_revision_pairs
     base = {i: _mk_text(1200, f"rev{i}") for i in range(6)}
     rows = [(i, t) for i, t in base.items()]
     # planted revisions: insert mid-document
@@ -251,7 +251,7 @@ def test_cdc_revision_pairs_finds_planted_edits(spark):
 def test_cdc_revision_pairs_prunes_boilerplate(spark):
     """A chunk shared by > max_df docs is boilerplate: pairs supported
     ONLY by it must not surface."""
-    from news_rss_spark.operators.cdc import cdc_revision_pairs
+    from corpus_lab.operators.cdc import cdc_revision_pairs
     boiler = _mk_text(300, "boilerplate-footer")
     rows = [(i, _mk_text(400, f"bp{i}") + " " + boiler) for i in range(8)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
@@ -260,7 +260,7 @@ def test_cdc_revision_pairs_prunes_boilerplate(spark):
 
 
 def test_cdc_revision_pairs_gear_variant(spark):
-    from news_rss_spark.operators.cdc import cdc_revision_pairs
+    from corpus_lab.operators.cdc import cdc_revision_pairs
     base = _mk_text(1500, "gearrev")
     df = spark.createDataFrame(
         [(0, base), (1, base[:701] + " X " + base[701:]),

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.clustering import (
+from corpus_lab.operators.clustering import (
     assign_clusters,
     kmeans_fit,
     kmeans_predict,
@@ -62,7 +62,7 @@ def test_kmeans_predict_deterministic(spark):
 
 def test_pinned_init_matches_similarity_constants(spark):
     import numpy as np
-    from news_rss_spark.operators.similarity import pinned_centroids
+    from corpus_lab.operators.similarity import pinned_centroids
     init = pinned_init(8, k=4)
     ref = pinned_centroids(8, n_cells=4)
     assert [c[0] for c in init] == [0, 1, 2, 3]

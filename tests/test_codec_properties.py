@@ -9,13 +9,13 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from news_rss_spark.kernel.jpegx import (
+from corpus_lab.kernel.jpegx import (
     decode_jpeg,
     decode_mjpeg,
     encode_jpeg,
     encode_mjpeg,
 )
-from news_rss_spark.operators.multimodal import (
+from corpus_lab.operators.multimodal import (
     decode_adpcm_wav,
     decode_gif,
     encode_adpcm_wav,
@@ -148,7 +148,7 @@ class TestG711Properties:
     codecs: decode returns int16 or raises ValueError, never garbage)."""
 
     def test_spec_anchor_bytes(self):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             _ALAW_LUT, _MULAW_LUT)
         # both mu-law zero codes decode to 0; A-law 0xD5/0x55 are +-8
         assert _MULAW_LUT[0xFF] == 0 and _MULAW_LUT[0x7F] == 0
@@ -161,7 +161,7 @@ class TestG711Properties:
     @given(st.sampled_from(["mulaw", "alaw"]), st.integers(0, 2**32 - 1),
            st.integers(1, 2000))
     def test_lattice_roundtrip_and_error_bound(self, law, seed, n):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             _ALAW_LUT, _MULAW_LUT, decode_g711_wav, encode_g711_wav)
         lut = _MULAW_LUT if law == "mulaw" else _ALAW_LUT
         lattice = np.unique(lut).astype(np.int64)
@@ -182,7 +182,7 @@ class TestG711Properties:
     @given(st.sampled_from(["mulaw", "alaw"]), st.integers(0, 2**32 - 1),
            st.integers(0, 5000), st.integers(0, 255))
     def test_mutated_bytes_return_or_valueerror(self, law, seed, pos, val):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_g711_wav, encode_g711_wav)
         s = np.random.RandomState(seed).randint(
             -32768, 32768, 300).astype(np.int64)
@@ -198,7 +198,7 @@ class TestG711Properties:
     @given(st.sampled_from(["mulaw", "alaw"]), st.integers(0, 2**32 - 1),
            st.integers(0, 400))
     def test_truncation_return_or_valueerror(self, law, seed, cut):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_g711_wav, encode_g711_wav)
         s = np.random.RandomState(seed).randint(
             -32768, 32768, 200).astype(np.int64)
@@ -215,7 +215,7 @@ class TestPngProperties:
     @given(st.integers(0, 2**32 - 1), st.integers(0, 899),
            st.integers(0, 255))
     def test_mutated_bytes_return_or_valueerror(self, seed, pos, val):
-        from news_rss_spark.operators.multimodal import decode_png, encode_png
+        from corpus_lab.operators.multimodal import decode_png, encode_png
         rng = np.random.RandomState(seed)
         arr = rng.randint(0, 256, (6, 8, 3 + seed % 2)).astype(np.uint8)
         raw = bytearray(encode_png(arr))
@@ -229,7 +229,7 @@ class TestPngProperties:
     @settings(max_examples=40, deadline=None)
     @given(st.integers(0, 2**32 - 1), st.integers(1, 200))
     def test_truncation_return_or_valueerror(self, seed, cut):
-        from news_rss_spark.operators.multimodal import decode_png, encode_png
+        from corpus_lab.operators.multimodal import decode_png, encode_png
         arr = np.random.RandomState(seed).randint(
             0, 256, (5, 7, 3)).astype(np.uint8)
         raw = encode_png(arr)
@@ -244,7 +244,7 @@ class TestWavProperties:
     @given(st.integers(0, 2**32 - 1), st.integers(0, 899),
            st.integers(0, 255))
     def test_mutated_bytes_return_or_valueerror(self, seed, pos, val):
-        from news_rss_spark.operators.multimodal import decode_wav, encode_wav
+        from corpus_lab.operators.multimodal import decode_wav, encode_wav
         rng = np.random.RandomState(seed)
         s = rng.randint(-2048, 2048, 64 + seed % 64).astype(np.int16)
         raw = bytearray(encode_wav(s, 8000))
@@ -258,7 +258,7 @@ class TestWavProperties:
     @settings(max_examples=40, deadline=None)
     @given(st.integers(0, 2**32 - 1), st.integers(1, 120))
     def test_truncation_return_or_valueerror(self, seed, cut):
-        from news_rss_spark.operators.multimodal import decode_wav, encode_wav
+        from corpus_lab.operators.multimodal import decode_wav, encode_wav
         s = np.random.RandomState(seed).randint(
             -2048, 2048, 64).astype(np.int16)
         raw = encode_wav(s, 8000)

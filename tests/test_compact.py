@@ -5,7 +5,7 @@ from datetime import datetime
 
 import pyspark.sql.functions as F
 
-from news_rss_spark.plans.compact import compact_sink
+from corpus_lab.plans.compact import compact_sink
 from news_rss_spark.plans.pipeline import run_extraction_job
 from news_rss_spark.sources.synth import documents_df
 

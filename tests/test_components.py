@@ -3,7 +3,7 @@ and convergence behavior."""
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.components import (
+from corpus_lab.operators.components import (
     connected_components,
     dedup_clusters,
     keep_only_keepers,
@@ -58,7 +58,7 @@ class TestRankedKeeper:
         return spark.createDataFrame(rows, "doc_id long, rank_len long")
 
     def test_keeper_is_highest_rank(self, spark):
-        from news_rss_spark.operators.components import dedup_clusters_ranked
+        from corpus_lab.operators.components import dedup_clusters_ranked
         # cluster {1,2,3}: 2 is longest -> keeper; singleton 9 keeps itself
         df = self._ranked(spark, [(1, 5), (2, 50), (3, 10), (9, 1)])
         out = dedup_clusters_ranked(
@@ -69,7 +69,7 @@ class TestRankedKeeper:
                        9: (9, True)}
 
     def test_rank_tie_breaks_to_min_id(self, spark):
-        from news_rss_spark.operators.components import dedup_clusters_ranked
+        from corpus_lab.operators.components import dedup_clusters_ranked
         df = self._ranked(spark, [(4, 7), (5, 7), (6, 3)])
         out = dedup_clusters_ranked(
             df, _pairs(spark, [(4, 5), (5, 6)]), "rank_len")
@@ -77,7 +77,7 @@ class TestRankedKeeper:
         assert got == {4: True, 5: False, 6: False}
 
     def test_star_algorithm_same_output(self, spark):
-        from news_rss_spark.operators.components import dedup_clusters_ranked
+        from corpus_lab.operators.components import dedup_clusters_ranked
         df = self._ranked(spark, [(1, 5), (2, 50), (3, 10), (9, 1)])
         prs = _pairs(spark, [(1, 2), (2, 3)])
         want = {tuple(r) for r in dedup_clusters_ranked(
@@ -93,7 +93,7 @@ class TestStarVariant:
     fewer rounds than the diameter."""
 
     def test_matches_propagation_on_known_graphs(self, spark):
-        from news_rss_spark.operators.components import (
+        from corpus_lab.operators.components import (
             connected_components_star,
         )
         cases = [
@@ -114,7 +114,7 @@ class TestStarVariant:
     def test_long_chain_converges_sublinearly(self, spark):
         """A 64-node chain (diameter 63) must fully label with max_iter
         far below the diameter — the whole point of the star alternation."""
-        from news_rss_spark.operators.components import (
+        from corpus_lab.operators.components import (
             connected_components_star,
         )
         n = 64
@@ -144,7 +144,7 @@ class TestLabelPropagation:
         """Two 4-cliques joined by ONE bridge edge: connected components
         merges them into one id; LPA keeps two communities because the
         bridge loses the neighbour vote on both sides."""
-        from news_rss_spark.operators.components import (
+        from corpus_lab.operators.components import (
             connected_components, label_propagation)
         import itertools
         c1 = list(itertools.combinations([0, 1, 2, 3], 2))
@@ -163,7 +163,7 @@ class TestLabelPropagation:
 
     def test_matches_python_reference(self, spark):
         """Synchronous rounds + min-label ties replayed in pure Python."""
-        from news_rss_spark.operators.components import label_propagation
+        from corpus_lab.operators.components import label_propagation
         edges = [(0, 1), (1, 2), (2, 3), (3, 4), (0, 2), (5, 6), (6, 7),
                  (5, 7), (4, 5)]
         adj = {}
@@ -186,7 +186,7 @@ class TestLabelPropagation:
         assert got == labels
 
     def test_deterministic_under_repartition(self, spark):
-        from news_rss_spark.operators.components import label_propagation
+        from corpus_lab.operators.components import label_propagation
         edges = [(i, (i * 7 + 3) % 20) for i in range(20) if i != (i * 7 + 3) % 20]
         p = self._pairs(spark, edges)
         a = sorted(map(tuple, label_propagation(p, rounds=3).collect()))

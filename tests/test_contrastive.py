@@ -7,7 +7,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.contrastive import negative_samples
+from corpus_lab.operators.contrastive import negative_samples
 
 
 def _ids(spark, ids):
@@ -126,7 +126,7 @@ def test_hard_negatives_match_reference(spark):
     rng = np.random.RandomState(21)
     vecs = rng.randn(15, 6).astype(np.float32)
     labels = [i % 3 for i in range(15)]
-    from news_rss_spark.operators.contrastive import hard_negatives
+    from corpus_lab.operators.contrastive import hard_negatives
     got = sorted(tuple(r) for r in hard_negatives(
         _vdf(spark, vecs, labels), k=3).collect())
     assert got == _hard_ref(vecs, labels, 3)
@@ -150,7 +150,7 @@ def test_hard_negatives_planted_boundary_vector(spark):
                      base + rng.randn(6).astype(np.float32) * 0.01]
                     + [rng.randn(6).astype(np.float32) for _ in range(8)])
     labels = [0, 1] + [i % 2 for i in range(8)]
-    from news_rss_spark.operators.contrastive import hard_negatives
+    from corpus_lab.operators.contrastive import hard_negatives
     got = {(r["x"], r["rank"]): r["neg_id"] for r in hard_negatives(
         _vdf(spark, vecs, labels), k=2).collect()}
     assert got[(0, 1)] == 1
@@ -158,7 +158,7 @@ def test_hard_negatives_planted_boundary_vector(spark):
 
 def test_hard_negatives_validation(spark):
     import numpy as np
-    from news_rss_spark.operators.contrastive import hard_negatives
+    from corpus_lab.operators.contrastive import hard_negatives
     with pytest.raises(ValueError):
         hard_negatives(_vdf(spark, np.zeros((2, 3), dtype=np.float32),
                             [0, 1]), k=0)

@@ -4,11 +4,11 @@ benchmark decontamination, and deterministic stratified sampling."""
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.text_analysis import (
+from corpus_lab.operators.text_analysis import (
     repetition_stats,
     stratified_sample,
 )
-from news_rss_spark.operators.text_dedup import (
+from corpus_lab.operators.text_dedup import (
     contamination_check,
     dedup_chunks,
 )
@@ -134,7 +134,7 @@ class TestStratifiedSample:
 
 
 def test_frequent_ngrams_counts(spark):
-    from news_rss_spark.operators.text_analysis import frequent_ngrams
+    from corpus_lab.operators.text_analysis import frequent_ngrams
     docs = spark.createDataFrame([
         (1, "accept all cookies to continue reading"),
         (2, "please accept all cookies now"),
@@ -150,7 +150,7 @@ def test_frequent_ngrams_counts(spark):
 
 
 def test_frequent_ngrams_within_doc_repetition(spark):
-    from news_rss_spark.operators.text_analysis import frequent_ngrams
+    from corpus_lab.operators.text_analysis import frequent_ngrams
     docs = spark.createDataFrame([
         (1, "ha ha ha ha"),
         (2, "ha ha zz"),
@@ -172,18 +172,18 @@ class TestTemperatureSample:
                     .repartition(7)
 
     def test_alpha_one_keeps_everything(self, spark):
-        from news_rss_spark.operators.text_analysis import temperature_sample
+        from corpus_lab.operators.text_analysis import temperature_sample
         df = self._df(spark)
         assert temperature_sample(df, alpha=1.0).count() == df.count()
 
     def test_smallest_group_always_kept_in_full(self, spark):
-        from news_rss_spark.operators.text_analysis import temperature_sample
+        from corpus_lab.operators.text_analysis import temperature_sample
         df = self._df(spark)
         out = temperature_sample(df, alpha=0.3)
         assert out.filter(F.col("source") == "small").count() == 20
 
     def test_flattens_toward_equal_counts_as_alpha_drops(self, spark):
-        from news_rss_spark.operators.text_analysis import temperature_sample
+        from corpus_lab.operators.text_analysis import temperature_sample
         df = self._df(spark)
         kept = {a: {r["source"]: r["n"] for r in
                     temperature_sample(df, alpha=a).groupBy("source")
@@ -196,7 +196,7 @@ class TestTemperatureSample:
         assert kept[0.0]["big"] <= kept[0.5]["big"] <= kept[1.0]["big"]
 
     def test_deterministic_under_repartition(self, spark):
-        from news_rss_spark.operators.text_analysis import temperature_sample
+        from corpus_lab.operators.text_analysis import temperature_sample
         df = self._df(spark)
         a = {r["doc_id"] for r in temperature_sample(df, alpha=0.4).collect()}
         b = {r["doc_id"] for r in
@@ -204,7 +204,7 @@ class TestTemperatureSample:
         assert a == b
 
     def test_rates_join_is_broadcast(self, spark):
-        from news_rss_spark.operators.text_analysis import temperature_sample
+        from corpus_lab.operators.text_analysis import temperature_sample
         plan = temperature_sample(self._df(spark), alpha=0.5) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
@@ -215,7 +215,7 @@ class TestTemperatureSample:
 
 class TestTopKPerGroup:
     def test_keeps_k_best_with_id_tiebreak(self, spark):
-        from news_rss_spark.operators.text_analysis import top_k_per_group
+        from corpus_lab.operators.text_analysis import top_k_per_group
         rows = [(1, "en", 0.9), (2, "en", 0.9), (3, "en", 0.5),
                 (4, "de", 0.7), (5, "de", 0.1)]
         df = spark.createDataFrame(rows, "doc_id long, lang string, q double")
@@ -224,7 +224,7 @@ class TestTopKPerGroup:
         assert out == {("en", 1, 1), ("en", 2, 2), ("de", 4, 1), ("de", 5, 2)}
 
     def test_plan_uses_window_group_limit(self, spark):
-        from news_rss_spark.operators.text_analysis import top_k_per_group
+        from corpus_lab.operators.text_analysis import top_k_per_group
         df = spark.createDataFrame(
             [(i, "g%d" % (i % 3), float(i)) for i in range(50)],
             "doc_id long, lang string, q double")
@@ -235,7 +235,7 @@ class TestTopKPerGroup:
 
 class TestTemperatureSampleNullGroup:
     def test_null_group_rows_are_sampled_not_dropped(self, spark):
-        from news_rss_spark.operators.text_analysis import temperature_sample
+        from corpus_lab.operators.text_analysis import temperature_sample
         rows = ([(i, "big") for i in range(200)]
                 + [(1000 + i, None) for i in range(40)])
         df = spark.createDataFrame(rows, "doc_id long, source string")
@@ -252,7 +252,7 @@ class TestPiiExtended:
     def test_iban_redacted_before_phone_sees_its_digits(self, spark):
         """An IBAN's digit body must land in n_iban, NOT leak a phone
         match — the ordering contract PII_PATTERNS_EXTENDED documents."""
-        from news_rss_spark.operators.text_analysis import (
+        from corpus_lab.operators.text_analysis import (
             PII_PATTERNS_EXTENDED, redact_pii,
         )
 
@@ -271,7 +271,7 @@ class TestPiiExtended:
         assert out[3]["clean_text"] == "mail <EMAIL> or call <PHONE>"
 
     def test_default_patterns_unchanged(self, spark):
-        from news_rss_spark.operators.text_analysis import redact_pii
+        from corpus_lab.operators.text_analysis import redact_pii
 
         df = spark.createDataFrame([(1, "x a@b.io 1.2.3.4")],
                                    "doc_id int, text string")
@@ -282,7 +282,7 @@ class TestPiiExtended:
 
 class TestC4LineFilter:
     def test_rules_applied_per_line_and_per_doc(self, spark):
-        from news_rss_spark.operators.text_analysis import c4_line_filter
+        from corpus_lab.operators.text_analysis import c4_line_filter
 
         df = spark.createDataFrame([
             (1, 'one two three four five six ends here.\nshort.\n'
@@ -301,7 +301,7 @@ class TestC4LineFilter:
             'a quoted "line" ends well?')
 
     def test_min_words_knob(self, spark):
-        from news_rss_spark.operators.text_analysis import c4_line_filter
+        from corpus_lab.operators.text_analysis import c4_line_filter
 
         df = spark.createDataFrame([(1, "just four words here.")],
                                    "doc_id int, text string")
@@ -311,7 +311,7 @@ class TestC4LineFilter:
 
 class TestGroupSplit:
     def test_one_split_per_group(self, spark):
-        from news_rss_spark.operators.text_analysis import assign_group_split
+        from corpus_lab.operators.text_analysis import assign_group_split
         rows = [(i, f"src{i % 7}", i * 10) for i in range(100)]
         d = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
         out = assign_group_split(d, group_col="source")
@@ -324,7 +324,7 @@ class TestGroupSplit:
     def test_assignment_is_content_stable(self, spark):
         """Same group -> same split regardless of row order, partitioning,
         or which other rows exist (corpus growth never moves a domain)."""
-        from news_rss_spark.operators.text_analysis import assign_group_split
+        from corpus_lab.operators.text_analysis import assign_group_split
         rows = [(i, f"src{i % 7}", 0) for i in range(100)]
         d = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
         full = {r["source"]: r["split"]
@@ -338,7 +338,7 @@ class TestGroupSplit:
             assert full[k] == v
 
     def test_null_group_goes_to_train(self, spark):
-        from news_rss_spark.operators.text_analysis import assign_group_split
+        from corpus_lab.operators.text_analysis import assign_group_split
         d = spark.createDataFrame([(0, None, 0)],
                                   "doc_id long, source string, n_chars long")
         assert assign_group_split(d).collect()[0]["split"] == "train"
@@ -346,7 +346,7 @@ class TestGroupSplit:
     def test_matches_doc_split_thresholds(self, spark):
         """Shares the md5_draw32 carve with assign_split: hashing the
         same VALUE yields the same split for the same salt."""
-        from news_rss_spark.operators.text_analysis import (
+        from corpus_lab.operators.text_analysis import (
             assign_group_split, assign_split)
         rows = [(i, str(i), 0) for i in range(50)]
         d = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")

@@ -6,7 +6,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.corpus_stats import (
+from corpus_lab.operators.corpus_stats import (
     group_quantiles,
     histogram,
     pmi_pairs,
@@ -134,7 +134,7 @@ def test_histogram_rejects_uneven_bins(spark):
 
 
 def test_rollup_levels_and_markers(spark):
-    from news_rss_spark.operators.corpus_stats import rollup_counts
+    from corpus_lab.operators.corpus_stats import rollup_counts
     df = spark.createDataFrame(
         [("a", "en", 10), ("a", "de", 20), ("b", "en", 5)],
         "source string, lang string, n_chars long")
@@ -148,7 +148,7 @@ def test_rollup_levels_and_markers(spark):
 
 
 def test_pivot_matrix_with_zeros(spark):
-    from news_rss_spark.operators.corpus_stats import pivot_counts
+    from corpus_lab.operators.corpus_stats import pivot_counts
     df = spark.createDataFrame(
         [("a", "en"), ("a", "en"), ("a", "de"), ("b", "en")],
         "source string, lang string")
@@ -159,7 +159,7 @@ def test_pivot_matrix_with_zeros(spark):
 
 
 def test_rollup_int_dim_cast_explicitly(spark):
-    from news_rss_spark.operators.corpus_stats import rollup_counts
+    from corpus_lab.operators.corpus_stats import rollup_counts
     df = spark.createDataFrame([("a", 2024, 1), ("a", 2025, 2)],
                                "source string, year int, n_chars long")
     out = {(r["source"], r["year"]): r["n_docs"]
@@ -169,7 +169,7 @@ def test_rollup_int_dim_cast_explicitly(spark):
 
 
 def test_pivot_value_with_dot(spark):
-    from news_rss_spark.operators.corpus_stats import pivot_counts
+    from corpus_lab.operators.corpus_stats import pivot_counts
     df = spark.createDataFrame([("a", "zh.Hans"), ("a", "en")],
                                "source string, lang string")
     row = pivot_counts(df, "source", "lang", ["zh.Hans", "en"]).collect()[0]
@@ -178,7 +178,7 @@ def test_pivot_value_with_dot(spark):
 
 def test_prefix_sum_rejects_string_order_col(spark):
     import pytest
-    from news_rss_spark.operators.packing import with_global_prefix_sum
+    from corpus_lab.operators.packing import with_global_prefix_sum
     df = spark.createDataFrame([("u", 1)], "url string, n long")
     with pytest.raises(TypeError, match="numeric order keys"):
         with_global_prefix_sum(df, "url", "n")
@@ -195,7 +195,7 @@ class TestWeightedSampleK:
         return {i for _, i in sorted(keyed)[:k]}
 
     def test_matches_reference_selection(self, spark):
-        from news_rss_spark.operators.corpus_stats import weighted_sample_k
+        from corpus_lab.operators.corpus_stats import weighted_sample_k
         rows = [(i, "g", float(1 + i % 7)) for i in range(200)]
         df = spark.createDataFrame(rows, "doc_id long, g string, w double")
         got = {r["doc_id"] for r in
@@ -204,7 +204,7 @@ class TestWeightedSampleK:
                                        for i in range(200)], 20)
 
     def test_weight_bias(self, spark):
-        from news_rss_spark.operators.corpus_stats import weighted_sample_k
+        from corpus_lab.operators.corpus_stats import weighted_sample_k
         # 50 heavy (w=50) + 450 light (w=1) rows in one group: the
         # heavy minority must be strongly over-represented in a k=100 draw
         rows = [(i, "g", 50.0 if i < 50 else 1.0) for i in range(500)]
@@ -215,7 +215,7 @@ class TestWeightedSampleK:
         assert heavy >= 35  # expectation ~48; uniform draw would give ~10
 
     def test_zero_and_null_weights_excluded(self, spark):
-        from news_rss_spark.operators.corpus_stats import weighted_sample_k
+        from corpus_lab.operators.corpus_stats import weighted_sample_k
         df = spark.createDataFrame(
             [(1, "g", 0.0), (2, "g", None), (3, "g", 2.0)],
             "doc_id long, g string, w double")
@@ -224,7 +224,7 @@ class TestWeightedSampleK:
         assert got == {3}
 
     def test_deterministic_under_repartition(self, spark):
-        from news_rss_spark.operators.corpus_stats import weighted_sample_k
+        from corpus_lab.operators.corpus_stats import weighted_sample_k
         rows = [(i, "g%d" % (i % 2), float(1 + i % 5)) for i in range(300)]
         df = spark.createDataFrame(rows, "doc_id long, g string, w double")
         a = sorted(r["doc_id"] for r in
@@ -243,7 +243,7 @@ class TestSampledQuantiles:
                         F.col("id").cast("double").alias("v")))
 
     def test_small_group_is_exact(self, spark):
-        from news_rss_spark.operators.corpus_stats import (
+        from corpus_lab.operators.corpus_stats import (
             group_quantiles, sampled_quantiles)
         df = self._df(spark, 50)
         probs = [0.1, 0.5, 0.9]
@@ -254,7 +254,7 @@ class TestSampledQuantiles:
         assert sk == exact  # k > group size: the sample IS the group
 
     def test_dkw_error_bound(self, spark):
-        from news_rss_spark.operators.corpus_stats import sampled_quantiles
+        from corpus_lab.operators.corpus_stats import sampled_quantiles
         # uniform 0..1999: true q(p) ~ 2000p; DKW at k=1024, 95%:
         # CDF error <= sqrt(ln(2/0.05)/(2*1024)) ~ 0.0424 -> ~85 units.
         # The md5 draw is fixed, so this is a deterministic regression
@@ -265,12 +265,12 @@ class TestSampledQuantiles:
             assert abs(r["q"] - 2000 * r["p"]) <= 0.0424 * 2000 + 1
 
     def test_mergeable_like_bottomk(self, spark):
-        from news_rss_spark.operators.corpus_stats import sampled_quantiles
+        from corpus_lab.operators.corpus_stats import sampled_quantiles
         # sharded sampling then re-rank == whole-corpus sampling: the k
         # smallest draws of the union are within the union of per-shard
         # k smallest.  Emulate by running on each half with the SAME
         # salt as the sketch, unioning the samples, and re-running.
-        from news_rss_spark.operators.corpus_stats import uniform_sample_k
+        from corpus_lab.operators.corpus_stats import uniform_sample_k
         df = self._df(spark, 600)
         h1, h2 = df.filter("doc_id < 300"), df.filter("doc_id >= 300")
         merged = (uniform_sample_k(h1, "g", 64, salt="qsketch-v1")
@@ -284,7 +284,7 @@ class TestSampledQuantiles:
 
     def test_k_validation_and_determinism(self, spark):
         import pytest
-        from news_rss_spark.operators.corpus_stats import sampled_quantiles
+        from corpus_lab.operators.corpus_stats import sampled_quantiles
         with pytest.raises(ValueError):
             sampled_quantiles(self._df(spark), "g", "v", [0.5], k=0)
         df = self._df(spark, 500)
@@ -298,7 +298,7 @@ class TestSampledQuantiles:
 
 class TestCorpusHealthReport:
     def test_hand_checked(self, spark):
-        from news_rss_spark.operators.corpus_stats import corpus_health_report
+        from corpus_lab.operators.corpus_stats import corpus_health_report
         rows = [
             (1, "aaaa", "en", "s1"), (2, "aaaa", "en", "s1"),
             (3, "bb", "fr", "s2"), (4, "cccccc", "en", "s1"),

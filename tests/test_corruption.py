@@ -6,7 +6,7 @@ import hashlib
 
 import pytest
 
-from news_rss_spark.operators.corruption import corruption_spans
+from corpus_lab.operators.corruption import corruption_spans
 
 
 def _df(spark, rows):
@@ -124,7 +124,7 @@ def _fim_ref(rows, salt="fim-v1"):
 
 
 def test_fim_matches_reference(spark):
-    from news_rss_spark.operators.corruption import fim_splits
+    from corpus_lab.operators.corruption import fim_splits
     rows = _mk_rows(60, 50) + [(1000, "one"), (1001, None), (1002, "  ")]
     got = sorted(tuple(r) for r in fim_splits(_df(spark, rows)).collect())
     assert got == _fim_ref(rows)
@@ -132,7 +132,7 @@ def test_fim_matches_reference(spark):
 
 
 def test_fim_segments_partition_document(spark):
-    from news_rss_spark.operators.corruption import fim_splits
+    from corpus_lab.operators.corruption import fim_splits
     rows = _mk_rows(80, 33)
     modes = set()
     for r in fim_splits(_df(spark, rows)).collect():

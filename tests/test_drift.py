@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.drift import vocab_divergence
+from corpus_lab.operators.drift import vocab_divergence
 
 
 def _df(spark, texts):

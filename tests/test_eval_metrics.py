@@ -5,7 +5,7 @@ and agreement with a naive per-row AUC computation."""
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.eval_metrics import pr_curve, roc_auc
+from corpus_lab.operators.eval_metrics import pr_curve, roc_auc
 
 
 def _df(spark, rows):

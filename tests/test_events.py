@@ -4,7 +4,7 @@ from datetime import datetime, timedelta
 
 import pyspark.sql.functions as F
 
-from news_rss_spark.operators.events import latest_event_per_user, sessionize
+from corpus_lab.operators.events import latest_event_per_user, sessionize
 
 
 def _ev(spark, rows):
@@ -36,7 +36,7 @@ def test_latest_event_tie_break(spark):
 
 class TestEwma:
     def test_hand_computed_fold(self, spark):
-        from news_rss_spark.operators.events import ewma_latest
+        from corpus_lab.operators.events import ewma_latest
         rows = [(1, "2026-01-01 00:00:00", 7, 10.0),
                 (2, "2026-01-01 00:01:00", 7, 20.0),
                 (3, "2026-01-01 00:02:00", 7, 0.0)]
@@ -48,7 +48,7 @@ class TestEwma:
         assert (got["user_id"], got["n_events"], got["ewma"]) == (7, 3, 7.5)
 
     def test_order_is_event_time_not_arrival(self, spark):
-        from news_rss_spark.operators.events import ewma_latest
+        from corpus_lab.operators.events import ewma_latest
         rows = [(2, "2026-01-01 00:01:00", 7, 20.0),   # arrives first
                 (1, "2026-01-01 00:00:00", 7, 10.0)]
         df = spark.createDataFrame(
@@ -58,7 +58,7 @@ class TestEwma:
         assert got["ewma"] == 15.0  # 10 then 20, not 20 then 10
 
     def test_null_value_and_ts_rows_excluded(self, spark):
-        from news_rss_spark.operators.events import ewma_latest
+        from corpus_lab.operators.events import ewma_latest
         rows = [(1, "2026-01-01 00:00:00", 7, 10.0),
                 (2, None, 7, 99.0), (3, "2026-01-01 00:02:00", 7, None)]
         df = spark.createDataFrame(
@@ -70,7 +70,7 @@ class TestEwma:
 
 class TestTrendingCounts:
     def test_ratio_gap_and_first_window(self, spark):
-        from news_rss_spark.operators.events import trending_counts
+        from corpus_lab.operators.events import trending_counts
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         rows = []
         # key A: 2 -> 6 adjacent, then a silent hour, then 3
@@ -96,7 +96,7 @@ class TestTrendingCounts:
         assert ("2024-01-01 00:00:00", "A") not in got
 
     def test_lag_runs_on_aggregated_relation(self, spark):
-        from news_rss_spark.operators.events import trending_counts
+        from corpus_lab.operators.events import trending_counts
         ev = spark.createDataFrame(
             [(1, "2024-01-01 00:00:00", "A")],
             "event_id long, ts string, event_type string"

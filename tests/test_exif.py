@@ -2,7 +2,7 @@
 
 import pytest
 
-from news_rss_spark.kernel.exifx import extract_exif, synth_exif_jpeg
+from corpus_lab.kernel.exifx import extract_exif, synth_exif_jpeg
 
 
 class TestExif:
@@ -43,7 +43,7 @@ class TestExif:
 
     def test_real_encoder_jpeg_has_no_exif(self):
         np = pytest.importorskip("numpy")
-        from news_rss_spark.kernel.jpegx import encode_jpeg
+        from corpus_lab.kernel.jpegx import encode_jpeg
         arr = np.zeros((8, 8, 3), dtype=np.uint8)
         m = extract_exif(encode_jpeg(arr))
         assert all(v is None for v in m.values())

@@ -27,13 +27,13 @@ def pages(spark):
 
 @pytest.fixture(scope="module")
 def bundle(spark, pages):
-    from news_rss_spark.operators.full_page import extract_page_bundle_df
+    from corpus_lab.operators.full_page import extract_page_bundle_df
     return {r["doc_id"]: r for r in extract_page_bundle_df(pages).collect()}
 
 
 class TestFusedEqualsSeparate:
     def test_metadata_product(self, spark, pages, bundle):
-        from news_rss_spark.operators.metadata import extract_metadata_df
+        from corpus_lab.operators.metadata import extract_metadata_df
         sep = {r["doc_id"]: r for r in extract_metadata_df(pages).collect()}
         for did, want in sep.items():
             got = bundle[did]
@@ -42,7 +42,7 @@ class TestFusedEqualsSeparate:
                 assert got[f] == want[f], (did, f)
 
     def test_links_product(self, spark, pages, bundle):
-        from news_rss_spark.operators.links import extract_links_df
+        from corpus_lab.operators.links import extract_links_df
         sep = {}
         for r in extract_links_df(pages).collect():
             sep.setdefault(r["doc_id"], []).append(
@@ -53,7 +53,7 @@ class TestFusedEqualsSeparate:
             assert got == sep.get(did, []), did
 
     def test_table_census_product(self, spark, pages, bundle):
-        from news_rss_spark.operators.tables import extract_tables_df
+        from corpus_lab.operators.tables import extract_tables_df
         counts = {r["doc_id"]: r["n"] for r in
                   extract_tables_df(pages).groupBy("doc_id")
                   .agg(F.count(F.lit(1)).alias("n")).collect()}
@@ -69,12 +69,12 @@ class TestFusedEqualsSeparate:
             assert got == want, did
 
     def test_policy_product(self, spark, bundle):
-        from news_rss_spark.operators.metadata import page_policy_df
+        from corpus_lab.operators.metadata import page_policy_df
         pages = spark.createDataFrame(
             PAGES + [("p4", '<html><head><meta name="robots" '
                             'content="noai"></head><body></body></html>',
                       "https://s.example/")], SCHEMA)
-        from news_rss_spark.operators.full_page import extract_page_bundle_df
+        from corpus_lab.operators.full_page import extract_page_bundle_df
         fused = {r["doc_id"]: r for r in
                  extract_page_bundle_df(pages).collect()}
         sep = {r["doc_id"]: r for r in page_policy_df(pages).collect()}
@@ -86,7 +86,7 @@ class TestFusedEqualsSeparate:
     def test_bundle_job_resume_idempotent(self, spark, tmp_path):
         """run_page_bundle_job: full-run -> resume skips all buckets;
         truncated lineage -> rerun restores a value-identical sink."""
-        from news_rss_spark.plans.pipeline import run_page_bundle_job
+        from corpus_lab.plans.pages import run_page_bundle_job
         rows = [(f"d{i}",
                  f'<html><head><title>T{i}</title></head><body><p>'
                  + ("body text long enough to be kept by the scorer "

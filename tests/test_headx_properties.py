@@ -5,16 +5,16 @@ contract plus structural invariants, over adversarial soup."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from news_rss_spark.kernel.exifx import extract_exif
-from news_rss_spark.kernel.id3x import extract_id3
-from news_rss_spark.kernel.linkx import extract_links, resolve_url
-from news_rss_spark.kernel.metax import (
+from corpus_lab.kernel.exifx import extract_exif
+from corpus_lab.kernel.id3x import extract_id3
+from corpus_lab.kernel.linkx import extract_links, resolve_url
+from corpus_lab.kernel.metax import (
     discover_feeds,
     extract_metadata,
     robots_directives,
 )
-from news_rss_spark.kernel.subx import parse_subtitles
-from news_rss_spark.kernel.tablex import extract_tables
+from corpus_lab.kernel.subx import parse_subtitles
+from corpus_lab.kernel.tablex import extract_tables
 
 plain = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=60)

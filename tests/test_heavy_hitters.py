@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.heavy_hitters import (
+from corpus_lab.operators.heavy_hitters import (
     _merge_mg,
     heavy_hitters,
     mg_candidates,

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.hits import hits
+from corpus_lab.operators.hits import hits
 
 
 def _ref_hits(edges, iters):
@@ -75,7 +75,7 @@ class TestTriangles:
     def test_known_graph_counts(self, spark):
         """Triangle {0,1,2} + pendant 3: per-node counts and coefficients
         hand-checked."""
-        from news_rss_spark.operators.hits import clustering_coefficient
+        from corpus_lab.operators.hits import clustering_coefficient
         p = self._p(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])
         got = {r["node"]: (r["degree"], r["n_triangles"], r["coeff"])
                for r in clustering_coefficient(p).collect()}
@@ -86,7 +86,7 @@ class TestTriangles:
 
     def test_k4_every_node_in_three_triangles(self, spark):
         import itertools
-        from news_rss_spark.operators.hits import clustering_coefficient
+        from corpus_lab.operators.hits import clustering_coefficient
         p = self._p(spark, list(itertools.combinations(range(4), 2)))
         got = {r["node"]: (r["degree"], r["n_triangles"], r["coeff"])
                for r in clustering_coefficient(p).collect()}
@@ -95,7 +95,7 @@ class TestTriangles:
     def test_duplicate_and_reversed_edges_collapse(self, spark):
         """Symmetrized, repeated, and self-loop input edges must not
         change counts — the orientation dedups them."""
-        from news_rss_spark.operators.hits import triangle_counts
+        from corpus_lab.operators.hits import triangle_counts
         clean = self._p(spark, [(0, 1), (1, 2), (0, 2)])
         noisy = self._p(spark, [(0, 1), (1, 0), (1, 2), (2, 1),
                                 (0, 2), (0, 2), (1, 1)])
@@ -104,13 +104,13 @@ class TestTriangles:
         assert a == b == [(0, 1), (1, 1), (2, 1)]
 
     def test_triangle_free_graph_empty(self, spark):
-        from news_rss_spark.operators.hits import triangle_counts
+        from corpus_lab.operators.hits import triangle_counts
         p = self._p(spark, [(0, 1), (1, 2), (2, 3), (3, 4)])  # path
         assert triangle_counts(p).count() == 0
 
     def test_matches_brute_force(self, spark):
         import itertools
-        from news_rss_spark.operators.hits import triangle_counts
+        from corpus_lab.operators.hits import triangle_counts
         edges = [(i, (i * 13 + 5) % 30) for i in range(30)]
         edges += [(i, i + 1) for i in range(29)]
         eset = {frozenset(e) for e in edges if e[0] != e[1]}
@@ -127,7 +127,7 @@ class TestTriangles:
         assert got == want
 
     def test_no_nested_loop_join(self, spark):
-        from news_rss_spark.operators.hits import clustering_coefficient
+        from corpus_lab.operators.hits import clustering_coefficient
         p = self._p(spark, [(0, 1), (1, 2), (0, 2)])
         plan = clustering_coefficient(p)._jdf.queryExecution() \
             .executedPlan().toString()

@@ -5,7 +5,7 @@ import math
 
 import pytest
 
-from news_rss_spark.operators.hyperball import harmonic_centrality, hyperball
+from corpus_lab.operators.hyperball import harmonic_centrality, hyperball
 
 P = 6
 M = 1 << P
@@ -102,7 +102,7 @@ class TestHyperball:
             assert series[5] == series[6]
 
     def test_effective_diameter_replay(self, nf):
-        from news_rss_spark.operators.hyperball import effective_diameter
+        from corpus_lab.operators.hyperball import effective_diameter
         row = effective_diameter(nf, fraction=0.9).collect()[0]
         want_balls = balls(EDGES, 3)
         nt = {t: round(sum(round(hll_est_of(want_balls[t][n]) * 1e6)

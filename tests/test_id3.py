@@ -2,7 +2,7 @@
 
 import pytest
 
-from news_rss_spark.kernel.id3x import extract_id3, synth_id3_mp3
+from corpus_lab.kernel.id3x import extract_id3, synth_id3_mp3
 
 
 class TestId3:

@@ -6,8 +6,8 @@ nodes, giant-component merge, no-op batch)."""
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.components import connected_components
-from news_rss_spark.operators.inc_components import incremental_components
+from corpus_lab.operators.components import connected_components
+from corpus_lab.operators.inc_components import incremental_components
 
 
 def _pairs(spark, pairs):

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.incremental import (
+from corpus_lab.operators.incremental import (
     build_signature_index, dedup_against_index)
 
 CORPUS = [

@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.interleaved import (
+from corpus_lab.operators.interleaved import (
     assemble_sequences,
     interleaved_sequence_stats,
     pack_interleaved_sequences,
@@ -181,7 +181,7 @@ class TestRebaseSpanOffsets:
         return spark.createDataFrame([("d", spans)], self.SPAN_DDL)
 
     def test_python_replay(self, spark):
-        from news_rss_spark.operators.interleaved import rebase_span_offsets
+        from corpus_lab.operators.interleaved import rebase_span_offsets
         from pyspark.sql import functions as F
         spans = [("meta", "hello  world", None, 99),
                  ("img", None, "m1", 99),
@@ -206,7 +206,7 @@ class TestRebaseSpanOffsets:
 
     def test_identity_clean_matches_kernel_rule(self, spark):
         from news_rss_spark.kernel.extract import _finalize_spans
-        from news_rss_spark.operators.interleaved import rebase_span_offsets
+        from corpus_lab.operators.interleaved import rebase_span_offsets
         spans = [("a", "xx", None, 0), ("m", None, "r", 0),
                  ("b", "yyy", None, 0)]
         df = self._mk(spark, spans)
@@ -217,7 +217,7 @@ class TestRebaseSpanOffsets:
         assert got == want
 
     def test_codegen_only_plan(self, spark):
-        from news_rss_spark.operators.interleaved import rebase_span_offsets
+        from corpus_lab.operators.interleaved import rebase_span_offsets
         from pyspark.sql import functions as F
         df = self._mk(spark, [("a", "x", None, 0)])
         plan = rebase_span_offsets(df, lambda t: F.upper(t)) \

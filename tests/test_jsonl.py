@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.sources.jsonl import parse_jsonl_documents, quarantine_split
+from corpus_lab.sources.jsonl import parse_jsonl_documents, quarantine_split
 
 
 class TestJsonlIngest:
@@ -59,14 +59,14 @@ class TestKAnonymity:
             "doc_id long, lang string, source string")
 
     def test_report(self, df):
-        from news_rss_spark.operators.audit import k_anonymity_report
+        from corpus_lab.operators.audit import k_anonymity_report
         got = {(r["lang"], r["source"]): r["class_n"]
                for r in k_anonymity_report(df, ["lang", "source"],
                                            k=5).collect()}
         assert got == {("en", "s2"): 3, ("fr", "s1"): 1}
 
     def test_summary(self, df):
-        from news_rss_spark.operators.audit import k_anonymity_summary
+        from corpus_lab.operators.audit import k_anonymity_summary
         row = k_anonymity_summary(df, ["lang", "source"], k=5).collect()[0]
         assert row["n_classes"] == 4
         assert row["n_violating"] == 2

@@ -6,7 +6,7 @@ normalization, fuzz."""
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.kcore import k_core, k_core_stats
+from corpus_lab.operators.kcore import k_core, k_core_stats
 
 
 def _df(spark, edges):

@@ -151,7 +151,7 @@ class TestPdfRobustness:
     @settings(max_examples=200, deadline=None)
     @given(st.binary(max_size=300))
     def test_pdf_raises_only_valueerror(self, payload):
-        from news_rss_spark.kernel.pdfx import extract_pdf_text
+        from corpus_lab.kernel.pdfx import extract_pdf_text
         try:
             out = extract_pdf_text(b"%PDF-1.4\n" + payload)
             assert isinstance(out, str)
@@ -165,6 +165,6 @@ class TestPdfRobustness:
         max_size=40), min_size=1, max_size=4),
         st.booleans())
     def test_pdf_text_roundtrip(self, lines, compress):
-        from news_rss_spark.kernel.pdfx import extract_pdf_text, synth_pdf
+        from corpus_lab.kernel.pdfx import extract_pdf_text, synth_pdf
         out = extract_pdf_text(synth_pdf(lines, compress=compress))
         assert out == "\n".join(lines)

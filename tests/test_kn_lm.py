@@ -6,7 +6,7 @@ import math
 
 import pytest
 
-from news_rss_spark.operators.kn_lm import kn_bigram_probs
+from corpus_lab.operators.kn_lm import kn_bigram_probs
 
 
 def kn_reference(texts):

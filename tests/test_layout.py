@@ -4,7 +4,7 @@ makes min/max pruning work on every interleaved dimension."""
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.layout import (
+from corpus_lab.operators.layout import (
     cluster_by_zorder, zorder_key, zorder_sql_expr)
 
 

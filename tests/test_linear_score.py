@@ -5,7 +5,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.linear_score import (
+from corpus_lab.operators.linear_score import (
     N_BUCKETS,
     W_MOD,
     W_SCALE,

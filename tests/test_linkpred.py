@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.linkpred import adamic_adar
+from corpus_lab.operators.linkpred import adamic_adar
 
 
 def _df(spark, edges):

@@ -2,7 +2,7 @@
 
 import pytest
 
-from news_rss_spark.kernel.linkx import extract_links, resolve_url
+from corpus_lab.kernel.linkx import extract_links, resolve_url
 
 BASE = "https://news.example.org/world/asia/story.html?p=1"
 
@@ -105,7 +105,7 @@ class TestExtractLinks:
 class TestSparkOperators:
     @pytest.fixture(scope="class")
     def links_df(self, spark):
-        from news_rss_spark.operators.links import extract_links_df
+        from corpus_lab.operators.links import extract_links_df
         rows = [
             ("d1", '<a href="/t">alpha</a><a href="/t" rel="nofollow">beta'
                    "</a>", "https://a.example/p"),
@@ -127,7 +127,7 @@ class TestSparkOperators:
         }
 
     def test_anchor_index(self, spark, links_df):
-        from news_rss_spark.operators.links import anchor_text_index
+        from corpus_lab.operators.links import anchor_text_index
         idx = {r["target_url"]: r
                for r in anchor_text_index(links_df).collect()}
         row = idx["https://a.example/t"]
@@ -138,7 +138,7 @@ class TestSparkOperators:
 
 class TestHreflang:
     def test_kernel(self):
-        from news_rss_spark.kernel.metax import hreflang_links
+        from corpus_lab.kernel.metax import hreflang_links
         html = ('<html><head>'
                 '<link rel="alternate" hreflang="EN" href="/en">'
                 '<link rel="alternate" hreflang="fr" href="/fr">'
@@ -151,7 +151,7 @@ class TestHreflang:
         assert hreflang_links(None) == []
 
     def test_clusters(self, spark):
-        from news_rss_spark.operators.links import hreflang_clusters
+        from corpus_lab.operators.links import hreflang_clusters
         # symmetric 2-variant cluster + a singleton self-referencing page
         rows = [
             ("https://s/en", "en", "https://s/en"),

@@ -4,7 +4,7 @@ below in-distribution text)."""
 
 import math
 
-from news_rss_spark.operators.lm_score import lm_doc_scores, train_bigram_model
+from corpus_lab.operators.lm_score import lm_doc_scores, train_bigram_model
 
 
 def _corpus(spark, rows):

@@ -4,7 +4,7 @@ import json
 
 import pytest
 
-from news_rss_spark.kernel.metax import extract_metadata
+from corpus_lab.kernel.metax import extract_metadata
 
 
 def page(head: str, body: str = "") -> str:
@@ -155,7 +155,7 @@ class TestParsingRobustness:
 class TestSparkOperator:
     @pytest.fixture(scope="class")
     def result(self, spark):
-        from news_rss_spark.operators.metadata import extract_metadata_df
+        from corpus_lab.operators.metadata import extract_metadata_df
         rows = [
             ("a", page('<meta property="og:title" content="OG A">'
                        "<title>T A</title>")),
@@ -176,7 +176,7 @@ class TestSparkOperator:
 
 class TestFeedDiscovery:
     def test_kernel_cases(self):
-        from news_rss_spark.kernel.metax import discover_feeds
+        from corpus_lab.kernel.metax import discover_feeds
         html = page(
             '<link rel="alternate" type="application/rss+xml" '
             'href="/rss.xml" title="Main">'
@@ -195,7 +195,7 @@ class TestFeedDiscovery:
         assert discover_feeds("<p>none</p>") == []
 
     def test_spark_operator(self, spark):
-        from news_rss_spark.operators.metadata import discover_feeds_df
+        from corpus_lab.operators.metadata import discover_feeds_df
         rows = [
             ("a", page('<link rel="alternate" '
                        'type="application/rss+xml" href="/f">')),
@@ -209,7 +209,7 @@ class TestFeedDiscovery:
 
 class TestRobotsDirectives:
     def test_kernel_cases(self):
-        from news_rss_spark.kernel.metax import robots_directives
+        from corpus_lab.kernel.metax import robots_directives
         d = robots_directives(page(
             '<meta name="robots" content="NOINDEX, nofollow noai">'))
         assert d["noindex"] and d["nofollow"] and d["noai"]
@@ -223,7 +223,7 @@ class TestRobotsDirectives:
                                "nosnippet", "noai", "noimageai")}
 
     def test_train_ok_gate(self, spark):
-        from news_rss_spark.operators.metadata import page_policy_df
+        from corpus_lab.operators.metadata import page_policy_df
         rows = [
             ("ok", page("")),
             ("ni", page('<meta name="robots" content="noindex">')),

@@ -2,7 +2,7 @@
 
 import pytest
 
-from news_rss_spark.kernel.mp3x import parse_mp3_frames, synth_mp3
+from corpus_lab.kernel.mp3x import parse_mp3_frames, synth_mp3
 
 
 class TestMp3Kernel:
@@ -66,7 +66,7 @@ class TestMp3Kernel:
 
 class TestMp3Operator:
     def test_stats_match_synthesis_rule(self, spark):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             mp3_frame_stats_df, synth_mp3_documents)
         ids = spark.createDataFrame([(i,) for i in range(24)],
                                     "doc_id long")
@@ -92,7 +92,7 @@ class TestMp3Sidecar:
     """Xing/Info/VBRI VBR sidecar parse (parse_mp3_sidecar)."""
 
     def test_xing_roundtrip_exact_bytes_and_duration(self):
-        from news_rss_spark.kernel.mp3x import parse_mp3_sidecar
+        from corpus_lab.kernel.mp3x import parse_mp3_sidecar
         m = parse_mp3_sidecar(synth_mp3(10, 44100, [128, 192],
                                         sidecar="xing", sc_quality=77))
         # 5 frames at 417 B (floor 144*128e3/44100) + 5 at 626 B
@@ -101,14 +101,14 @@ class TestMp3Sidecar:
                      "duration_ms": 10 * 1152 * 1000 // 44100}
 
     def test_info_cbr_and_id3_skip(self):
-        from news_rss_spark.kernel.mp3x import parse_mp3_sidecar
+        from corpus_lab.kernel.mp3x import parse_mp3_sidecar
         m = parse_mp3_sidecar(synth_mp3(7, 48000, 160, with_id3=True,
                                         sidecar="info", sc_quality=3))
         assert m["sidecar"] == "info" and m["sc_frames"] == 7
         assert m["sc_bytes"] == 7 * 480 and m["duration_ms"] == 168
 
     def test_vbri_fixed_offset(self):
-        from news_rss_spark.kernel.mp3x import parse_mp3_sidecar
+        from corpus_lab.kernel.mp3x import parse_mp3_sidecar
         m = parse_mp3_sidecar(synth_mp3(5, 32000, 96,
                                         sidecar="vbri", sc_quality=80))
         assert m == {"sidecar": "vbri", "sc_frames": 5,
@@ -116,7 +116,7 @@ class TestMp3Sidecar:
                      "duration_ms": 180}
 
     def test_no_sidecar_reports_null(self):
-        from news_rss_spark.kernel.mp3x import parse_mp3_sidecar
+        from corpus_lab.kernel.mp3x import parse_mp3_sidecar
         for p in (synth_mp3(4, 44100, 112),          # CBR, no sidecar
                   synth_mp3(6, 44100, [64, 96]),     # true VBR, no sidecar
                   None, b"", b"\xff\xfbZZ"):
@@ -125,7 +125,7 @@ class TestMp3Sidecar:
     def test_mono_side_info_offset(self):
         # hand-build a MONO MPEG1 LIII frame: side info is 17 bytes, so
         # the Xing tag sits at +21 (not the stereo +36 the synth uses)
-        from news_rss_spark.kernel.mp3x import parse_mp3_sidecar
+        from corpus_lab.kernel.mp3x import parse_mp3_sidecar
         flen = 144 * 128 * 1000 // 44100  # 417
         body = bytearray(bytes((0xFF, 0xFB, 0x90, 0xC0))  # mode=3 mono
                          + b"\x00" * (flen - 4))
@@ -139,21 +139,21 @@ class TestMp3Sidecar:
 
     def test_truncated_sidecar_never_raises(self):
         # flags promise fields the frame doesn't hold -> all-None, no raise
-        from news_rss_spark.kernel.mp3x import parse_mp3_sidecar
+        from corpus_lab.kernel.mp3x import parse_mp3_sidecar
         p = bytearray(synth_mp3(3, 44100, 128, sidecar="xing"))
         truncated = bytes(p[:4 + 32 + 4 + 4 + 2])  # cut mid-frames-field
         m = parse_mp3_sidecar(truncated)
         assert m["sidecar"] is None
 
     def test_sidecar_does_not_disturb_frame_walk(self):
-        from news_rss_spark.kernel.mp3x import parse_mp3_sidecar
+        from corpus_lab.kernel.mp3x import parse_mp3_sidecar
         plain = parse_mp3_frames(synth_mp3(8, 44100, [128, 192]))
         with_sc = parse_mp3_frames(synth_mp3(8, 44100, [128, 192],
                                              sidecar="xing"))
         assert plain == with_sc  # sidecar lives inside frame 0's body
 
     def test_operator_matches_kernel(self, spark):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             mp3_sidecar_stats_df, synth_mp3_sidecar_documents)
         ids = spark.createDataFrame([(i,) for i in range(15)],
                                     "doc_id long")

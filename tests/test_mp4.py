@@ -4,7 +4,7 @@ import struct
 
 import pytest
 
-from news_rss_spark.kernel.mp4x import parse_mp4_boxes, synth_mp4
+from corpus_lab.kernel.mp4x import parse_mp4_boxes, synth_mp4
 
 
 class TestMp4Kernel:
@@ -93,7 +93,7 @@ class TestMp4Kernel:
 
 class TestMp4Operator:
     def test_stats_match_synthesis_rule(self, spark):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             mp4_box_stats_df, synth_mp4_documents)
         ids = spark.createDataFrame([(i,) for i in range(18)],
                                     "doc_id long")

@@ -3,7 +3,7 @@ repeat-counting, prior behaviour, plan shape."""
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.nb_classifier import nb_score, nb_train
+from corpus_lab.operators.nb_classifier import nb_score, nb_train
 
 
 def _docs(spark, rows):

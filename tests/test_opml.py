@@ -2,7 +2,7 @@
 
 import pytest
 
-from news_rss_spark.kernel.opmlx import parse_opml
+from corpus_lab.kernel.opmlx import parse_opml
 
 OPML = """<?xml version="1.0"?>
 <opml version="2.0">
@@ -51,7 +51,7 @@ class TestKernel:
 
 class TestSparkOperator:
     def test_registry_rows(self, spark):
-        from news_rss_spark.sources.opml import registry_from_opml
+        from corpus_lab.sources.opml import registry_from_opml
         df = spark.createDataFrame([("u1", OPML), ("u2", "<bad")],
                                    "user_id string, opml string")
         got = {(r["user_id"], r["feed_url"]): (r["category"], r["title"])

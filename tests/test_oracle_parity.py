@@ -1,6 +1,8 @@
 """Local replica of the driver's correctness gate: run every queries()
-entry at sf0.001 and compare row count, sorted-column schema, and
-order-insensitive values against the DuckDB oracle_sql()."""
+entry of the ingestion registry (``__spark_entry__``) and of the corpus
+registry (``corpus_lab.registry``) at sf0.001 and compare row count,
+sorted-column schema, and order-insensitive values against the DuckDB
+oracle_sql()."""
 
 import math
 import os
@@ -55,10 +57,14 @@ def _rowset(cols, rows):
 
 def _pairs():
     import __spark_entry__ as entrymod
+    from corpus_lab import registry
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    return [(name, fn, oracles.get(name)) for name, fn in qs.items()]
+    pairs = []
+    for reg in (entrymod, registry):
+        oracles = reg.oracle_sql()
+        pairs += [(name, fn, oracles.get(name))
+                  for name, fn in reg.queries().items()]
+    return pairs
 
 
 @pytest.mark.parametrize("name,fn,sql", _pairs(), ids=[p[0] for p in _pairs()])

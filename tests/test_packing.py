@@ -6,7 +6,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.packing import (
+from corpus_lab.operators.packing import (
     pack_into_shards,
     with_global_prefix_sum,
 )
@@ -75,7 +75,7 @@ def _naive_chunks(vals, c):
 
 
 def test_chunk_matches_naive_layout(spark):
-    from news_rss_spark.operators.packing import concat_and_chunk
+    from corpus_lab.operators.packing import concat_and_chunk
     df = _df(spark, n=400, parts=9, seed=5)
     vals = {r["doc_id"]: r["n_tokens"] for r in df.collect()}
     got = sorted(tuple(r) for r in concat_and_chunk(df, 1000).collect())
@@ -83,7 +83,7 @@ def test_chunk_matches_naive_layout(spark):
 
 
 def test_chunk_slices_tile_every_window_exactly(spark):
-    from news_rss_spark.operators.packing import concat_and_chunk
+    from corpus_lab.operators.packing import concat_and_chunk
     df = _df(spark, n=200, parts=5, seed=8)
     rows = concat_and_chunk(df, 512).collect()
     total = sum(r["n_tokens"] for r in df.collect())
@@ -103,7 +103,7 @@ def test_chunk_slices_tile_every_window_exactly(spark):
 
 
 def test_chunk_zero_token_docs_contribute_nothing(spark):
-    from news_rss_spark.operators.packing import concat_and_chunk
+    from corpus_lab.operators.packing import concat_and_chunk
     df = spark.createDataFrame(
         [(1, 10), (2, 0), (3, 5)], "doc_id long, n_tokens long")
     rows = concat_and_chunk(df, 8).collect()
@@ -113,7 +113,7 @@ def test_chunk_zero_token_docs_contribute_nothing(spark):
 
 
 def test_chunk_plan_has_no_global_window(spark):
-    from news_rss_spark.operators.packing import concat_and_chunk
+    from corpus_lab.operators.packing import concat_and_chunk
     df = _df(spark, n=100)
     plan = concat_and_chunk(df, 100)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -131,7 +131,7 @@ def test_duplicate_order_col_rejected(spark):
     the determinism contract rejects them up front (ADVICE r2)."""
     import pytest
 
-    from news_rss_spark.operators.packing import with_global_prefix_sum
+    from corpus_lab.operators.packing import with_global_prefix_sum
 
     df = spark.createDataFrame(
         [(1, 10), (2, 20), (2, 30), (3, 40)], "k int, v int")
@@ -147,7 +147,7 @@ class TestShuffleIntoShards:
         return spark.range(n).withColumnRenamed("id", "doc_id")
 
     def test_deterministic_and_salt_rerolls(self, spark):
-        from news_rss_spark.operators.packing import shuffle_into_shards
+        from corpus_lab.operators.packing import shuffle_into_shards
 
         d = self._df(spark)
         a = {r["doc_id"]: (r["shard"], r["pos"])
@@ -162,7 +162,7 @@ class TestShuffleIntoShards:
     def test_positions_contiguous_and_shards_balanced(self, spark):
         from collections import Counter
 
-        from news_rss_spark.operators.packing import shuffle_into_shards
+        from corpus_lab.operators.packing import shuffle_into_shards
 
         rows = shuffle_into_shards(self._df(spark), 8).collect()
         by_shard = {}
@@ -178,7 +178,7 @@ class TestShuffleIntoShards:
     def test_shuffle_breaks_input_adjacency(self, spark):
         """Consecutive doc_ids must not stay consecutive within a shard
         (the whole point of the epoch shuffle)."""
-        from news_rss_spark.operators.packing import shuffle_into_shards
+        from corpus_lab.operators.packing import shuffle_into_shards
 
         rows = shuffle_into_shards(self._df(spark, 1000), 4).collect()
         order = {}
@@ -194,7 +194,7 @@ class TestShuffleIntoShards:
         assert total > 0 and adjacent / total < 0.05
 
     def test_single_hash_shuffle_in_plan(self, spark):
-        from news_rss_spark.operators.packing import shuffle_into_shards
+        from corpus_lab.operators.packing import shuffle_into_shards
 
         plan = shuffle_into_shards(self._df(spark), 16) \
             ._jdf.queryExecution().executedPlan().toString()
@@ -229,7 +229,7 @@ class TestEpochMix:
     def test_copy_counts_match_python_reference(self, spark):
         from collections import Counter
 
-        from news_rss_spark.operators.packing import epoch_mix
+        from corpus_lab.operators.packing import epoch_mix
 
         rows = epoch_mix(self._df(spark), self.WEIGHTS).collect()
         got = Counter(r["doc_id"] for r in rows)
@@ -243,7 +243,7 @@ class TestEpochMix:
         assert all(sorted(v) == list(range(len(v))) for v in by_doc.values())
 
     def test_zero_weight_and_unknown_source_default(self, spark):
-        from news_rss_spark.operators.packing import epoch_mix
+        from corpus_lab.operators.packing import epoch_mix
 
         d = self._df(spark).withColumn(
             "source", F.when(F.col("doc_id") < 100, "never-seen-source")
@@ -256,7 +256,7 @@ class TestEpochMix:
         assert not [r for r in rows if r["source"] == "src3"]
 
     def test_null_ids_dropped(self, spark):
-        from news_rss_spark.operators.packing import epoch_mix
+        from corpus_lab.operators.packing import epoch_mix
 
         d = self._df(spark, 50).withColumn(
             "doc_id", F.when(F.col("doc_id") % 2 == 0, F.col("doc_id")))
@@ -266,7 +266,7 @@ class TestEpochMix:
     def test_copies_scatter_across_epoch(self, spark):
         """The two+ copies of one doc must not sit at adjacent stream
         positions (per-copy hash key, not per-doc)."""
-        from news_rss_spark.operators.packing import epoch_mix
+        from corpus_lab.operators.packing import epoch_mix
 
         rows = epoch_mix(self._df(spark, 2000), {"src0": 2.0},
                          n_shards=4).collect()
@@ -280,7 +280,7 @@ class TestEpochMix:
         assert adjacent / len(multi) < 0.05
 
     def test_positions_contiguous_and_deterministic(self, spark):
-        from news_rss_spark.operators.packing import epoch_mix
+        from corpus_lab.operators.packing import epoch_mix
 
         a = epoch_mix(self._df(spark), self.WEIGHTS).collect()
         b = epoch_mix(self._df(spark), self.WEIGHTS).collect()
@@ -293,7 +293,7 @@ class TestEpochMix:
             assert sorted(poss) == list(range(len(poss))), shard
 
     def test_single_hash_shuffle_in_plan(self, spark):
-        from news_rss_spark.operators.packing import epoch_mix
+        from corpus_lab.operators.packing import epoch_mix
 
         plan = epoch_mix(self._df(spark), self.WEIGHTS) \
             ._jdf.queryExecution().executedPlan().toString()

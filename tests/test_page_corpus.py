@@ -20,7 +20,7 @@ def mk_page(i, head="", body=None):
 
 @pytest.fixture(scope="module")
 def funnel(spark):
-    from news_rss_spark.plans.page_corpus import build_page_corpus
+    from corpus_lab.plans.page_corpus import build_page_corpus
     pages = (
         [mk_page(i) for i in range(8)]                      # pass
         + [mk_page(i, head='<meta name="robots" content="noai">')

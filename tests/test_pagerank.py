@@ -5,7 +5,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.pagerank import pagerank
+from corpus_lab.operators.pagerank import pagerank
 
 
 def _r9(x):
@@ -87,7 +87,7 @@ class TestPersonalizedPagerank:
     EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (5, 6)]  # 5,6 unreachable
 
     def _run(self, spark, seeds, iters=3):
-        from news_rss_spark.operators.pagerank import personalized_pagerank
+        from corpus_lab.operators.pagerank import personalized_pagerank
         e = spark.createDataFrame(self.EDGES, "src long, dst long")
         s = spark.createDataFrame([(x,) for x in seeds], "node long")
         return {r["node"]: r["rank"]

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.pagination import (
+from corpus_lab.operators.pagination import (
     assemble_chain_texts,
     chain_positions,
 )

@@ -3,7 +3,7 @@ and plan shape."""
 
 import pytest
 
-from news_rss_spark.operators.passages import sliding_passages
+from corpus_lab.operators.passages import sliding_passages
 
 
 def py_windows(n, size, stride):

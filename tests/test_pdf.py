@@ -5,7 +5,7 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.kernel.pdfx import extract_pdf_text, synth_pdf
+from corpus_lab.kernel.pdfx import extract_pdf_text, synth_pdf
 
 
 def _raw_pdf(content: bytes, length: bool = True, filt: bytes = b"") -> bytes:
@@ -48,7 +48,7 @@ class TestKernel:
 
 class TestOperator:
     def test_skip_rows_for_bad_payloads(self, spark):
-        from news_rss_spark.operators.pdf_text import extract_pdf_text_df
+        from corpus_lab.operators.pdf_text import extract_pdf_text_df
         rows = [("1", synth_pdf(["fine"])), ("2", b"junk"), ("3", None)]
         df = spark.createDataFrame(rows, "doc_id string, payload binary")
         out = {r["doc_id"]: (r["status"], r["text"])
@@ -57,7 +57,7 @@ class TestOperator:
         assert out["2"][0] == "skip" and out["3"][0] == "skip"
 
     def test_synth_roundtrip_distributed(self, spark):
-        from news_rss_spark.operators.pdf_text import (
+        from corpus_lab.operators.pdf_text import (
             extract_pdf_text_df, synth_pdf_documents)
         d = spark.range(0, 40).select(
             F.col("id").alias("doc_id"),
@@ -85,7 +85,7 @@ class TestReviewRegressions:
         """'/Length 123 0 R' must NOT parse as length 12 (regex
         backtracking defeated the lookahead) — it falls back to the
         delimiter scan and still extracts."""
-        from news_rss_spark.kernel.pdfx import _LENGTH_RE
+        from corpus_lab.kernel.pdfx import _LENGTH_RE
         assert _LENGTH_RE.search(b"<< /Length 123 0 R >>") is None
         assert _LENGTH_RE.search(b"<< /Length 123 >>").group(1) == b"123"
         content = b"BT (indirect ok) Tj ET"
@@ -99,7 +99,7 @@ class TestReviewRegressions:
         become a ValueError (skip row), not an executor OOM."""
         import zlib
 
-        from news_rss_spark.kernel.pdfx import decompress_capped
+        from corpus_lab.kernel.pdfx import decompress_capped
 
         bomb = zlib.compress(b"\x00" * (1 << 20))  # ~1 KB -> 1 MiB
         with pytest.raises(ValueError, match="bomb"):

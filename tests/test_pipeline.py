@@ -10,7 +10,8 @@ import pytest
 
 from news_rss_spark.operators.dedup import anti_join_seen, dedup_within_run
 from news_rss_spark.operators.extraction import extract_articles, to_publish_news, with_text_from_spans
-from news_rss_spark.operators.lineage import salted_agg, with_bucket
+from news_rss_spark.operators.lineage import with_bucket
+from corpus_lab.operators.skew import salted_agg
 from news_rss_spark.plans.pipeline import run_extraction_job
 from news_rss_spark.sources.synth import SPANS_DDL, documents_df
 from tests.fixture_docs import fixture_corpus
@@ -141,6 +142,15 @@ class TestLineageAndResume:
         assert after == before
         assert r2.skipped_buckets == 8  # GC never touches the ledger
 
+    def test_orphan_staging_gc_raises_on_unresolvable_sink(self, spark):
+        """A sink whose filesystem cannot be resolved fails the reclaim
+        loudly, before any write; it is not reported as 0 dirs removed."""
+        from py4j.protocol import Py4JJavaError
+
+        from news_rss_spark.plans.pipeline import _gc_orphan_staging
+        with pytest.raises(Py4JJavaError, match="nosuchfs"):
+            _gc_orphan_staging(spark, "nosuchfs://x/sink")
+
     def test_resume_survives_static_overwrite_conf(self, spark, paths):
         """Regression: resume must not truncate completed buckets even when
         the caller's session carries the default STATIC partition-overwrite
@@ -210,7 +220,7 @@ class TestLineageAndResume:
     def test_jobs_leave_session_confs_alone(self, spark, paths, tmp_path):
         """Dynamic overwrite and lz4 are per-write options: neither batch
         job changes the caller's session confs."""
-        from news_rss_spark.plans.pipeline import run_page_bundle_job
+        from corpus_lab.plans.pages import run_page_bundle_job
         sink, lineage = paths
         keys = {"spark.sql.sources.partitionOverwriteMode": "static",
                 "spark.sql.parquet.compression.codec": "zstd"}

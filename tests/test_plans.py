@@ -21,7 +21,8 @@ def _plan(df) -> str:
 @pytest.fixture(scope="module")
 def queries():
     import __spark_entry__ as entrymod
-    return entrymod.queries()
+    from corpus_lab import registry
+    return {**entrymod.queries(), **registry.queries()}
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, queries):
@@ -78,7 +79,7 @@ def test_feed_parse_plan_is_narrow(spark):
 def test_warc_parse_plan_is_narrow(spark):
     # WARC file -> records is one Arrow stage: record fan-out happens
     # inside the batch, so no exchange and no generate appear
-    from news_rss_spark.sources.warc import warc_records
+    from corpus_lab.sources.warc import warc_records
     files = spark.createDataFrame([("f", bytearray(b""))],
                                   "file_id string, content binary")
     p = _plan(warc_records(files))
@@ -119,7 +120,7 @@ def test_ivf_cell_layout_prunes_partitions(spark, tmp_path):
     n_probe/n_cells of the data, visible as PartitionFilters + a pruned
     partition count in the plan."""
     import numpy as np
-    from news_rss_spark.operators.similarity import (
+    from corpus_lab.operators.similarity import (
         train_ivf_centroids, with_ivf_cell)
     e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cents = train_ivf_centroids(e, n_cells=8, seed=42)
@@ -149,7 +150,7 @@ def test_cms_estimate_broadcasts_counters(spark, queries):
 def test_star_cc_per_round_has_no_nested_loop(spark):
     """One large-star/small-star round compiles to groupBy + equi-joins
     only — never a cartesian/nested-loop product."""
-    from news_rss_spark.operators.components import connected_components_star
+    from corpus_lab.operators.components import connected_components_star
     nodes = spark.range(0, 50).withColumnRenamed("id", "doc_id")
     pairs = nodes.filter("doc_id > 0").select(
         F.col("doc_id").alias("a"), (F.col("doc_id") - 1).alias("b"))

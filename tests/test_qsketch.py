@@ -6,7 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.sketch import (
+from corpus_lab.operators.sketch import (
     merge_quantile_sketches,
     quantile_sample_sketch,
     sketch_quantile_estimates,

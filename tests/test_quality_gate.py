@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.quality_gate import (
+from corpus_lab.operators.quality_gate import (
     GATE_RULES, gate_reason_counts, quality_gate)
 
 GOOD = ("The quick brown fox jumps over the lazy dog and runs to the "

@@ -4,7 +4,7 @@ agreement with exact dot products, and plan shape."""
 import numpy as np
 import pytest
 
-from news_rss_spark.operators.quantize import sq_dot_topk, sq_encode
+from corpus_lab.operators.quantize import sq_dot_topk, sq_encode
 
 
 def np_encode(v, amax, levels=256):

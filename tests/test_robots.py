@@ -1,11 +1,11 @@
 """robots.txt kernel (RFC 9309 semantics) and the Spark frontier filter."""
 
-from news_rss_spark.kernel.robotsx import (
+from corpus_lab.kernel.robotsx import (
     is_allowed,
     parse_robots,
     url_path,
 )
-from news_rss_spark.operators.robots import filter_by_robots
+from corpus_lab.operators.robots import filter_by_robots
 
 ROBOTS = """
 # news site policy
@@ -148,7 +148,7 @@ class TestRuleMatcherLinearTime:
 
         from hypothesis import given, settings, strategies as st
 
-        from news_rss_spark.kernel.robotsx import _rule_regex
+        from corpus_lab.kernel.robotsx import _rule_regex
 
         def reference_regex(pattern):
             out, last = [], len(pattern) - 1

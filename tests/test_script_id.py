@@ -3,7 +3,7 @@ plan shape."""
 
 import pytest
 
-from news_rss_spark.operators.script_id import SCRIPTS, script_profile
+from corpus_lab.operators.script_id import SCRIPTS, script_profile
 
 
 class TestScriptProfile:

@@ -4,7 +4,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.search import (
+from corpus_lab.operators.search import (
     bm25_search,
     build_inverted_index,
     doc_lengths,
@@ -90,7 +90,7 @@ class TestRRFFusion:
         return spark.createDataFrame(rows, "id long, score double")
 
     def test_fused_scores_match_formula(self, spark):
-        from news_rss_spark.operators.search import rrf_fusion
+        from corpus_lab.operators.search import rrf_fusion
         r1 = self._rank(spark, [(1, 9.0), (2, 7.0), (3, 5.0)])
         r2 = self._rank(spark, [(3, 0.9), (1, 0.8), (4, 0.7)])
         got = {r["id"]: (r["rrf_score"], r["n_lists"])
@@ -106,20 +106,20 @@ class TestRRFFusion:
     def test_consensus_doc_wins(self, spark):
         """A doc ranked 2nd in BOTH lists outranks each list's exclusive
         #1 — the property that makes RRF a consensus fusion."""
-        from news_rss_spark.operators.search import rrf_fusion
+        from corpus_lab.operators.search import rrf_fusion
         r1 = self._rank(spark, [(10, 9.0), (1, 8.0)])
         r2 = self._rank(spark, [(20, 0.9), (1, 0.8)])
         top = rrf_fusion([r1, r2], k=60, top_n=1).collect()
         assert top[0]["id"] == 1
 
     def test_score_ties_rank_by_id(self, spark):
-        from news_rss_spark.operators.search import rrf_fusion
+        from corpus_lab.operators.search import rrf_fusion
         r1 = self._rank(spark, [(5, 1.0), (2, 1.0)])
         got = {r["id"]: r["rrf_score"]
                for r in rrf_fusion([r1], k=60).collect()}
         assert got == {2: round(1 / 61, 9), 5: round(1 / 62, 9)}
 
     def test_top_n_cut(self, spark):
-        from news_rss_spark.operators.search import rrf_fusion
+        from corpus_lab.operators.search import rrf_fusion
         r1 = self._rank(spark, [(i, float(100 - i)) for i in range(30)])
         assert rrf_fusion([r1], top_n=7).count() == 7

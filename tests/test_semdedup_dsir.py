@@ -5,11 +5,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.dsir import (
+from corpus_lab.operators.dsir import (
     bucket_log_ratio, dsir_select, dsir_weights, hashed_feature_counts,
 )
-from news_rss_spark.operators.semdedup import semdedup, with_centroid_cos
-from news_rss_spark.operators.similarity import pinned_centroids
+from corpus_lab.operators.semdedup import semdedup, with_centroid_cos
+from corpus_lab.operators.similarity import pinned_centroids
 
 
 def _emb_df(spark, vecs):
@@ -117,8 +117,8 @@ def test_dsir_salt_changes_the_draw_not_the_weights(spark):
 
 
 def test_pandas_route_matches_fold_route(spark):
-    from news_rss_spark.operators.semdedup import semdedup_pandas
-    from news_rss_spark.sources.synth import embeddings_df_distributed
+    from corpus_lab.operators.semdedup import semdedup_pandas
+    from corpus_lab.sources.synth_dist import embeddings_df_distributed
 
     emb = embeddings_df_distributed(spark, 400, seed=7, dup_every=20,
                                     num_partitions=4)
@@ -135,8 +135,8 @@ def test_pandas_route_matches_fold_route(spark):
 
 
 def test_planted_twins_are_flagged(spark):
-    from news_rss_spark.operators.semdedup import semdedup_pandas
-    from news_rss_spark.sources.synth import embeddings_df_distributed
+    from corpus_lab.operators.semdedup import semdedup_pandas
+    from corpus_lab.sources.synth_dist import embeddings_df_distributed
 
     emb = embeddings_df_distributed(spark, 500, seed=3, dup_every=50,
                                     num_partitions=4)
@@ -150,7 +150,7 @@ def test_planted_twins_are_flagged(spark):
 
 
 def test_generator_is_partitioning_independent(spark):
-    from news_rss_spark.sources.synth import embeddings_df_distributed
+    from corpus_lab.sources.synth_dist import embeddings_df_distributed
 
     a = embeddings_df_distributed(spark, 64, seed=5, num_partitions=2) \
         .orderBy("vec_id").collect()
@@ -169,7 +169,7 @@ def test_dsir_select_empty_target_yields_no_rows_not_arbitrary_ids(spark):
 
 
 def test_pandas_route_supports_string_ids(spark):
-    from news_rss_spark.operators.semdedup import semdedup_pandas
+    from corpus_lab.operators.semdedup import semdedup_pandas
 
     df = spark.createDataFrame(
         [(f"doc-{i}", [float(i == j) for j in range(4)]) for i in range(4)],

@@ -3,7 +3,7 @@ string, abbreviation guard, opener gate, blank-segment numbering."""
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.sentences import split_sentences
+from corpus_lab.operators.sentences import split_sentences
 
 ROWS = [
     (0, "Hello there. Dr. Smith went home. The end!"),

@@ -5,13 +5,13 @@ import numpy as np
 import pytest
 import pyspark.sql.functions as F
 
-from news_rss_spark.operators.multimodal import (
+from corpus_lab.operators.multimodal import (
     extract_features,
     frame_sample_plan,
     media_from_documents,
     resize_images,
 )
-from news_rss_spark.operators.similarity import (
+from corpus_lab.operators.similarity import (
     brute_force_near_dup_pairs,
     cosine_topk,
     embedding_near_dup_pairs,
@@ -108,7 +108,7 @@ class TestMultimodal:
 class TestRealCodecs:
     def test_ppm_roundtrip_exact_pixels(self, spark):
         import numpy as np
-        from news_rss_spark.operators.multimodal import decode_ppm, encode_ppm
+        from corpus_lab.operators.multimodal import decode_ppm, encode_ppm
         arr = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
         assert (decode_ppm(encode_ppm(arr)) == arr).all()
         # comment + arbitrary whitespace in header
@@ -117,13 +117,13 @@ class TestRealCodecs:
 
     def test_wav_roundtrip_exact_samples(self, spark):
         import numpy as np
-        from news_rss_spark.operators.multimodal import decode_wav, encode_wav
+        from corpus_lab.operators.multimodal import decode_wav, encode_wav
         s = (np.sin(np.arange(100) * 0.3) * 10000).astype(np.int16)
         out, rate = decode_wav(encode_wav(s, 8000))
         assert rate == 8000 and (out == s).all()
 
     def test_synth_media_features_really_decoded(self, spark):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             extract_features, synth_media)
         d = spark.range(0, 30).withColumnRenamed("id", "doc_id")
         feats = extract_features(synth_media(d)).collect()
@@ -138,7 +138,7 @@ class TestRealCodecs:
 
     def test_resize_really_resamples_ppm(self, spark):
         import numpy as np
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_ppm, resize_images, synth_media)
         d = spark.range(0, 9).withColumnRenamed("id", "doc_id")
         media = synth_media(d)
@@ -186,7 +186,7 @@ class TestCodecRobustness:
         raise ValueError (-> sha1 stand-in), never wave.Error escaping the
         Spark task."""
         import pytest
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_wav, extract_features)
         with pytest.raises(ValueError):
             decode_wav(b"RIFF\x10\x00\x00\x00AVI LIST")
@@ -199,7 +199,7 @@ class TestCodecRobustness:
         assert out["feature"][0] < 1.0  # fallback, not crash
 
     def test_truncated_ppm_resize_passthrough(self, spark):
-        from news_rss_spark.operators.multimodal import resize_images
+        from corpus_lab.operators.multimodal import resize_images
         bad = b"P6\n100 100\n255\nshort"  # claims 100x100, has 5 bytes
         rows = [("1", "image", bad, "image/x-portable-pixmap",
                  None, None, None)]
@@ -226,7 +226,7 @@ class TestWorkerInfoNullStats:
 class TestSecondReviewRegressions:
     def test_zero_dimension_ppm_is_valueerror(self, spark):
         import pytest
-        from news_rss_spark.operators.multimodal import decode_ppm, resize_images
+        from corpus_lab.operators.multimodal import decode_ppm, resize_images
         with pytest.raises(ValueError, match="dimensions"):
             decode_ppm(b"P6\n5 0\n255\n\n")
         rows = [("1", "image", b"P6\n5 0\n255\n\n", "x", None, None, None)]
@@ -244,7 +244,7 @@ class TestPinnedOracles:
     def test_pinned_centroids_deterministic_unit_norm(self, spark):
         import numpy as np
 
-        from news_rss_spark.operators.similarity import pinned_centroids
+        from corpus_lab.operators.similarity import pinned_centroids
         c1, c2 = pinned_centroids(64, 16), pinned_centroids(64, 16)
         assert c1.dtype == np.float64 and c1.shape == (16, 64)
         assert (c1 == c2).all()
@@ -253,7 +253,7 @@ class TestPinnedOracles:
     def test_ivf_pinned_finds_query_vector(self, spark):
         import numpy as np
 
-        from news_rss_spark.operators.similarity import ivf_topk, pinned_centroids
+        from corpus_lab.operators.similarity import ivf_topk, pinned_centroids
         e = _emb(spark).select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
         q = _query(spark)
@@ -264,7 +264,7 @@ class TestPinnedOracles:
     def test_decode_stats_integers_match_hand_computation(self, spark):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import decode_stats, synth_media
+        from corpus_lab.operators.multimodal import decode_stats, synth_media
         ids = spark.createDataFrame([(i,) for i in (3, 7, 5)], "doc_id long")
         got = {r["media_id"]: r for r in decode_stats(synth_media(ids)).collect()}
         img = got["3"]  # i=3 -> image, w=4+3%5=7, h=3+3%4=6
@@ -288,7 +288,7 @@ class TestPngCodec:
     def test_roundtrip_all_filters_rgb_and_rgba(self):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import decode_png, encode_png
+        from corpus_lab.operators.multimodal import decode_png, encode_png
 
         rng = np.random.RandomState(3)
         for c in (3, 4):
@@ -306,7 +306,7 @@ class TestPngCodec:
         import numpy as np
         import pytest
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             PNG_SIG, decode_png, encode_png,
         )
 
@@ -336,7 +336,7 @@ class TestPngCodec:
         import numpy as np
         import pytest
 
-        from news_rss_spark.operators.multimodal import PNG_SIG
+        from corpus_lab.operators.multimodal import PNG_SIG
 
         w, h = 4, 3
         ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
@@ -349,14 +349,14 @@ class TestPngCodec:
 
         payload = (PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat)
                    + chunk(b"IEND", b""))
-        from news_rss_spark.operators.multimodal import decode_png
+        from corpus_lab.operators.multimodal import decode_png
         with pytest.raises(ValueError):
             decode_png(payload)
 
     def test_resize_really_resamples_png(self, spark):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_png, resize_images, synth_png_media,
         )
 
@@ -373,7 +373,7 @@ class TestPngCodec:
     def test_feature_decoded_status_column(self, spark):
         """Real and stand-in features carry an explicit decoded flag —
         never inferred from the marker value (VERDICT r2)."""
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             extract_features, synth_media, synth_png_media,
         )
 
@@ -402,7 +402,7 @@ class TestGifCodec:
     def test_roundtrip_shapes_and_dictionary_regimes(self):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_gif, encode_gif,
         )
 
@@ -428,7 +428,7 @@ class TestGifCodec:
         import numpy as np
         import pytest
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_gif, encode_gif,
         )
 
@@ -455,7 +455,7 @@ class TestGifCodec:
         import numpy as np
         import pytest
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             _lzw_encode_gif, decode_gif,
         )
 
@@ -478,7 +478,7 @@ class TestGifCodec:
     def test_gif89a_extension_blocks_are_skipped(self):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_gif, encode_gif,
         )
 
@@ -495,7 +495,7 @@ class TestGifCodec:
     def test_decode_stats_and_features_real_for_gif(self, spark):
         from pyspark.sql import functions as F
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_stats, extract_features, synth_gif_media,
         )
 
@@ -522,7 +522,7 @@ class TestAdpcmCodec:
     def test_constant_signals_roundtrip_bit_exact(self):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_adpcm_wav, encode_adpcm_wav,
         )
 
@@ -536,7 +536,7 @@ class TestAdpcmCodec:
     def test_sine_tracks_across_blocks(self):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_adpcm_wav, encode_adpcm_wav,
         )
 
@@ -549,7 +549,7 @@ class TestAdpcmCodec:
     def test_decode_real_dispatches_on_format_tag(self):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_real, encode_adpcm_wav, encode_wav,
         )
 
@@ -562,7 +562,7 @@ class TestAdpcmCodec:
         import numpy as np
         import pytest
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_adpcm_wav, encode_adpcm_wav, encode_wav,
         )
 
@@ -578,7 +578,7 @@ class TestAdpcmCodec:
             decode_adpcm_wav(b"GARBAGE")
 
     def test_decode_stats_sample_sum_end_to_end(self, spark):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_stats, synth_adpcm_media,
         )
 
@@ -600,7 +600,7 @@ class TestJpegCodec:
     def test_flat_blocks_roundtrip_bit_exact(self):
         import numpy as np
 
-        from news_rss_spark.kernel.jpegx import decode_jpeg, encode_jpeg
+        from corpus_lab.kernel.jpegx import decode_jpeg, encode_jpeg
 
         for i in range(10):
             wb, hb = 1 + i % 4, 1 + i % 3
@@ -621,7 +621,7 @@ class TestJpegCodec:
     def test_arbitrary_images_near_lossless_at_unit_quant(self):
         import numpy as np
 
-        from news_rss_spark.kernel.jpegx import decode_jpeg, encode_jpeg
+        from corpus_lab.kernel.jpegx import decode_jpeg, encode_jpeg
 
         rng = np.random.RandomState(5)
         gray = rng.randint(0, 256, (21, 29), dtype=np.uint8)  # pads 8x
@@ -635,7 +635,7 @@ class TestJpegCodec:
     def test_lossy_quant_table_decodes_with_bounded_error(self):
         import numpy as np
 
-        from news_rss_spark.kernel.jpegx import decode_jpeg, encode_jpeg
+        from corpus_lab.kernel.jpegx import decode_jpeg, encode_jpeg
 
         q = np.full((8, 8), 16, dtype=np.int64)
         q[0, 0] = 8
@@ -648,7 +648,7 @@ class TestJpegCodec:
         import numpy as np
         import pytest
 
-        from news_rss_spark.kernel.jpegx import decode_jpeg, encode_jpeg
+        from corpus_lab.kernel.jpegx import decode_jpeg, encode_jpeg
 
         img = np.full((8, 8), 100, dtype=np.uint8)
         good = encode_jpeg(img)
@@ -673,8 +673,8 @@ class TestJpegCodec:
     def test_resize_really_resamples_jpeg(self, spark):
         import numpy as np
 
-        from news_rss_spark.kernel.jpegx import decode_jpeg, encode_jpeg
-        from news_rss_spark.operators.multimodal import resize_images
+        from corpus_lab.kernel.jpegx import decode_jpeg, encode_jpeg
+        from corpus_lab.operators.multimodal import resize_images
 
         img = np.full((16, 16), 77, dtype=np.uint8)
         rows = [("j1", "image", encode_jpeg(img), "image/jpeg",
@@ -691,7 +691,7 @@ class TestJpegCodec:
         import numpy as np
         from pyspark.sql import functions as F
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_stats, extract_features, synth_jpeg_media,
         )
 
@@ -719,7 +719,7 @@ class TestMjpeg:
     def test_decode_stats_video_matches_hand_computation(self, spark):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             decode_stats, synth_mjpeg_media,
         )
 
@@ -740,7 +740,7 @@ class TestMjpeg:
     def test_sample_frames_stride_and_per_frame_sums(self, spark):
         import numpy as np
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             sample_frames, synth_mjpeg_media,
         )
 
@@ -761,7 +761,7 @@ class TestMjpeg:
         still take the labeled fallback with decoded=False."""
         from pyspark.sql import functions as F
 
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             extract_features, synth_media, synth_mjpeg_media,
         )
 
@@ -777,7 +777,7 @@ class TestPQ:
     """Product quantization: encode shape, ADC recall, plan shape."""
 
     def test_encode_codes_in_range_and_deterministic(self, spark):
-        from news_rss_spark.operators.similarity import (
+        from corpus_lab.operators.similarity import (
             pinned_pq_codebooks, pq_encode)
         e = _emb(spark)
         cb = pinned_pq_codebooks(dim=64, m=8, k=16, seed=13)
@@ -796,7 +796,7 @@ class TestPQ:
         exact L2 top-10 — the quality bar the pinned-codebook oracle
         query does not measure."""
         import numpy as np
-        from news_rss_spark.operators.similarity import (
+        from corpus_lab.operators.similarity import (
             pq_adc_topk, train_pq_codebooks)
         e, q = _emb(spark), _query(spark)
         cb = train_pq_codebooks(e, dim=64, m=8, k=16, sample=500)
@@ -809,7 +809,7 @@ class TestPQ:
         assert len(set(exact) & set(approx)) >= 3
 
     def test_trained_codebooks_deterministic(self, spark):
-        from news_rss_spark.operators.similarity import train_pq_codebooks
+        from corpus_lab.operators.similarity import train_pq_codebooks
         e = _emb(spark)
         c1 = train_pq_codebooks(e, sample=300, seed=9)
         c2 = train_pq_codebooks(e, sample=300, seed=9)
@@ -818,7 +818,7 @@ class TestPQ:
     def test_adc_plan_has_no_shuffle(self, spark):
         """ADC top-k must compile to one codegen'd projection +
         TakeOrderedAndProject — no Exchange, no join, no Python UDF."""
-        from news_rss_spark.operators.similarity import (
+        from corpus_lab.operators.similarity import (
             pinned_pq_codebooks, pq_adc_topk)
         e = _emb(spark)
         cb = pinned_pq_codebooks(dim=64, m=8, k=16, seed=13)
@@ -839,7 +839,7 @@ class TestRandomProjection:
 
     def test_values_match_numpy(self, spark):
         import numpy as np
-        from news_rss_spark.operators.similarity import (
+        from corpus_lab.operators.similarity import (
             hyperplanes, random_projection)
         df, rows = self._vecs(spark)
         planes = hyperplanes(64, 16, seed=7, dtype=np.float64) / 4.0
@@ -857,7 +857,7 @@ class TestRandomProjection:
         the band is a deterministic regression lock, not a flake)."""
         import itertools
         import numpy as np
-        from news_rss_spark.operators.similarity import (
+        from corpus_lab.operators.similarity import (
             hyperplanes, random_projection)
         df, rows = self._vecs(spark)
         planes = hyperplanes(64, 16, seed=7, dtype=np.float64) / np.sqrt(16.0)
@@ -879,7 +879,7 @@ class TestRandomProjection:
 
     def test_zero_shuffle_plan(self, spark):
         import numpy as np
-        from news_rss_spark.operators.similarity import (
+        from corpus_lab.operators.similarity import (
             hyperplanes, random_projection)
         df, _ = self._vecs(spark)
         planes = hyperplanes(64, 8, seed=7, dtype=np.float64)
@@ -889,7 +889,7 @@ class TestRandomProjection:
 
     def test_deterministic_under_repartition(self, spark):
         import numpy as np
-        from news_rss_spark.operators.similarity import (
+        from corpus_lab.operators.similarity import (
             hyperplanes, random_projection)
         df, _ = self._vecs(spark)
         planes = hyperplanes(64, 8, seed=7, dtype=np.float64)
@@ -912,7 +912,7 @@ class TestDhash:
         return np.stack([arr, arr, arr], axis=2)
 
     def _hash_of(self, spark, payloads):
-        from news_rss_spark.operators.multimodal import dhash_images
+        from corpus_lab.operators.multimodal import dhash_images
         rows = [(str(i), "image", p, "image/*", None, None, None)
                 for i, p in enumerate(payloads)]
         df = spark.createDataFrame(
@@ -922,14 +922,14 @@ class TestDhash:
         return [(r["decoded"], r["dhash"]) for r in out]
 
     def test_format_invariance_png_vs_ppm(self, spark):
-        from news_rss_spark.operators.multimodal import encode_png, encode_ppm
+        from corpus_lab.operators.multimodal import encode_png, encode_ppm
         arr = self._img(1)
         (d1, h1), (d2, h2) = self._hash_of(
             spark, [encode_png(arr), encode_ppm(arr)])
         assert d1 and d2 and h1 == h2
 
     def test_scale_invariance_and_distinct_images(self, spark):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             _resize_nn, encode_png,
         )
         arr = self._img(2, 64, 64)
@@ -946,7 +946,7 @@ class TestDhash:
         assert diff >= 12         # different picture: far apart
 
     def test_undecodable_and_non_image_rows(self, spark):
-        from news_rss_spark.operators.multimodal import encode_png
+        from corpus_lab.operators.multimodal import encode_png
         rows = [("0", "image", encode_png(self._img(3)), "image/png",
                  None, None, None),
                 ("1", "image", b"\x89PNG\r\n\x1a\ngarbage", "image/png",
@@ -955,14 +955,14 @@ class TestDhash:
         df = spark.createDataFrame(
             rows, "media_id string, kind string, payload binary, "
                   "mime string, width int, height int, duration_ms int")
-        from news_rss_spark.operators.multimodal import dhash_images
+        from corpus_lab.operators.multimodal import dhash_images
         out = {r["media_id"]: r for r in dhash_images(df).collect()}
         assert out["0"]["decoded"] and out["0"]["dhash"] is not None
         assert not out["1"]["decoded"] and out["1"]["dhash"] is None
         assert "2" not in out  # non-images never reach Python
 
     def test_int64_width_guard(self, spark):
-        from news_rss_spark.operators.multimodal import dhash_images
+        from corpus_lab.operators.multimodal import dhash_images
         import pytest as _pytest
         df = spark.createDataFrame(
             [], "media_id string, kind string, payload binary, "
@@ -989,7 +989,7 @@ class TestDhashWide:
         """Concatenating the 4 x 30-bit bands reproduces the full
         120-bit integer a sequential reference packs directly."""
         import numpy as np
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             _resize_nn, dhash_wide_images, encode_png)
         arr = self._img(5, 48, 40)
         out = dhash_wide_images(self._media_df(
@@ -1010,9 +1010,9 @@ class TestDhashWide:
         pictures produce no pair — mined by the generic array-banded
         simhash machinery verbatim."""
         import numpy as np
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             dhash_wide_images, encode_png, encode_ppm)
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             simhash_bands_near_dup_pairs)
         arr = self._img(7, 64, 48)
         pert = arr.copy()
@@ -1031,7 +1031,7 @@ class TestDhashWide:
         assert not any("3" in p for p in pairs)
 
     def test_band_divisibility_guard(self, spark):
-        from news_rss_spark.operators.multimodal import dhash_wide_images
+        from corpus_lab.operators.multimodal import dhash_wide_images
         import pytest as _pytest
         df = self._media_df(spark, [])
         with _pytest.raises(ValueError, match="equal bands"):
@@ -1043,7 +1043,7 @@ class TestAudioFingerprint:
     clip, far apart for different clips, skip-row on garbage."""
 
     def _fp_of(self, spark, rows):
-        from news_rss_spark.operators.multimodal import audio_envelope_hash
+        from corpus_lab.operators.multimodal import audio_envelope_hash
         df = spark.createDataFrame(
             rows, "media_id string, kind string, payload binary, "
                   "mime string, width int, height int, duration_ms int")
@@ -1051,7 +1051,7 @@ class TestAudioFingerprint:
                 for r in audio_envelope_hash(df).collect()}
 
     def test_adpcm_reencode_keeps_envelope(self, spark):
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.operators.multimodal import (
             encode_adpcm_wav, encode_wav,
         )
         rng = np.random.default_rng(5)
@@ -1069,7 +1069,7 @@ class TestAudioFingerprint:
         assert bin(f1 ^ f2).count("1") <= 4  # lossy codec, same envelope
 
     def test_distinct_clips_differ(self, spark):
-        from news_rss_spark.operators.multimodal import encode_wav
+        from corpus_lab.operators.multimodal import encode_wav
         rng = np.random.default_rng(6)
         a = np.repeat(rng.integers(100, 12000, 16), 128).astype(np.int16)
         b = np.repeat(rng.integers(100, 12000, 16)[::-1], 128).astype(np.int16)
@@ -1080,7 +1080,7 @@ class TestAudioFingerprint:
         assert bin(out["a"][1] ^ out["b"][1]).count("1") >= 10
 
     def test_skip_rows_and_kind_filter(self, spark):
-        from news_rss_spark.operators.multimodal import encode_png
+        from corpus_lab.operators.multimodal import encode_png
         rows = [("0", "audio", b"RIFFgarbage", "audio/wav", None, None, None),
                 ("1", "image", encode_png(np.zeros((4, 4, 3), np.uint8)),
                  "image/png", None, None, None)]
@@ -1089,7 +1089,7 @@ class TestAudioFingerprint:
         assert "1" not in out
 
     def test_width_guard(self, spark):
-        from news_rss_spark.operators.multimodal import audio_envelope_hash
+        from corpus_lab.operators.multimodal import audio_envelope_hash
         df = spark.createDataFrame(
             [], "media_id string, kind string, payload binary, "
                 "mime string, width int, height int, duration_ms int")
@@ -1101,8 +1101,8 @@ class TestFrameDhash:
     def test_shared_chain_with_still_images(self, spark):
         """A one-frame video and the same picture as a PNG hash
         identically — the video leg reuses the still-image chain."""
-        from news_rss_spark.kernel.jpegx import encode_mjpeg
-        from news_rss_spark.operators.multimodal import (
+        from corpus_lab.kernel.jpegx import encode_mjpeg
+        from corpus_lab.operators.multimodal import (
             dhash_images, encode_png, frame_dhash,
         )
         rng = np.random.default_rng(8)
@@ -1122,8 +1122,8 @@ class TestFrameDhash:
         assert hv[0]["dhash"] == hi[0]["dhash"]
 
     def test_stride_and_skip_rows(self, spark):
-        from news_rss_spark.kernel.jpegx import encode_mjpeg
-        from news_rss_spark.operators.multimodal import frame_dhash
+        from corpus_lab.kernel.jpegx import encode_mjpeg
+        from corpus_lab.operators.multimodal import frame_dhash
         rng = np.random.default_rng(9)
         frames = [rng.integers(0, 256, (16, 16)).astype(np.uint8)
                   for _ in range(5)]
@@ -1145,7 +1145,7 @@ class TestFrameSharePairs:
         return spark.createDataFrame(rows, ddl)
 
     def test_planted_duplicate_and_containment(self, spark):
-        from news_rss_spark.operators.multimodal import frame_share_pairs
+        from corpus_lab.operators.multimodal import frame_share_pairs
         rows = [
             ("a", 0, 10), ("a", 1, 11), ("a", 2, 12),      # 3 frames
             ("b", 0, 10), ("b", 1, 11), ("b", 2, 12),      # dup of a
@@ -1164,7 +1164,7 @@ class TestFrameSharePairs:
         assert not any("d" in k for k in out)
 
     def test_within_video_repeats_count_once(self, spark):
-        from news_rss_spark.operators.multimodal import frame_share_pairs
+        from corpus_lab.operators.multimodal import frame_share_pairs
         rows = [("a", 0, 5), ("a", 1, 5), ("a", 2, 5),
                 ("b", 0, 5)]
         out = frame_share_pairs(self._frames(spark, rows), min_share=1.0,
@@ -1172,7 +1172,7 @@ class TestFrameSharePairs:
         assert len(out) == 1 and out[0]["jaccard"] == 1.0
 
     def test_hot_frame_prune(self, spark):
-        from news_rss_spark.operators.multimodal import frame_share_pairs
+        from corpus_lab.operators.multimodal import frame_share_pairs
         # frame key 1 is in every video (the slate frame)
         rows = [("a", 0, 1), ("a", 1, 10),
                 ("b", 0, 1), ("b", 1, 10),
@@ -1185,7 +1185,7 @@ class TestFrameSharePairs:
             == [("a", "b", 1.0)]
 
     def test_min_share_validation_and_plan(self, spark):
-        from news_rss_spark.operators.multimodal import frame_share_pairs
+        from corpus_lab.operators.multimodal import frame_share_pairs
         with pytest.raises(ValueError):
             frame_share_pairs(self._frames(spark, [("a", 0, 1)]),
                               min_share=0.0, key_col="fkey")
@@ -1199,7 +1199,7 @@ class TestFrameSharePairs:
 
 class TestContentColSynth:
     def test_audio_content_duplicates(self, spark):
-        from news_rss_spark.operators.multimodal import synth_pcm_int_media
+        from corpus_lab.operators.multimodal import synth_pcm_int_media
         df = spark.range(4).withColumn(
             "cid", F.when(F.col("id") % 2 == 1, F.col("id") - 1)
                     .otherwise(F.col("id")))
@@ -1211,7 +1211,7 @@ class TestContentColSynth:
         assert out["0"] != out["2"]
 
     def test_mjpeg_content_duplicates_and_default(self, spark):
-        from news_rss_spark.operators.multimodal import synth_mjpeg_media
+        from corpus_lab.operators.multimodal import synth_mjpeg_media
         df = spark.range(2).withColumn("cid", F.lit(7))
         out = {r["media_id"]: bytes(r["payload"])
                for r in synth_mjpeg_media(

@@ -2,7 +2,7 @@
 urlset/sitemapindex, namespace tolerance, malformed-input contract, the
 Spark entry stage, and the filter/dedup/anti-join pipeline."""
 
-from news_rss_spark.sources.sitemap import (
+from corpus_lab.sources.sitemap import (
     crawl_frontier,
     parse_sitemap,
     sitemap_entries,

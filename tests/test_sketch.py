@@ -6,7 +6,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.sketch import (
+from corpus_lab.operators.sketch import (
     hll_alpha,
     hll_distinct,
     hll_estimate,
@@ -109,7 +109,7 @@ class TestCountMin:
         return spark.createDataFrame([(w,) for w in words], "tok string")
 
     def test_never_undercounts_and_exact_when_wide(self, spark):
-        from news_rss_spark.operators.sketch import cms_counters, cms_estimate
+        from corpus_lab.operators.sketch import cms_counters, cms_estimate
 
         words = ["a"] * 7 + ["b"] * 3 + ["c"] * 1
         toks = self._toks(spark, words)
@@ -129,7 +129,7 @@ class TestCountMin:
         union — the mergeable-relation contract shared with the HLL."""
         from pyspark.sql import functions as F
 
-        from news_rss_spark.operators.sketch import cms_counters
+        from corpus_lab.operators.sketch import cms_counters
 
         t1 = self._toks(spark, ["x", "y", "x"])
         t2 = self._toks(spark, ["y", "z"])
@@ -144,7 +144,7 @@ class TestCountMin:
     def test_nulls_ignored_and_bad_params_raise(self, spark):
         import pytest
 
-        from news_rss_spark.operators.sketch import cms_counters, cms_estimate
+        from corpus_lab.operators.sketch import cms_counters, cms_estimate
 
         toks = spark.createDataFrame([("a",), (None,), ("a",)], "tok string")
         counters = cms_counters(toks, "tok", d=2, w=1024)
@@ -162,7 +162,7 @@ class TestBottomKOverlap:
     def test_exact_regime_equals_true_jaccard(self, spark):
         """k >= |A u B|: the sketch IS the set, so the estimate is the
         exact distinct-value Jaccard."""
-        from news_rss_spark.operators.sketch import corpus_overlap_estimate
+        from corpus_lab.operators.sketch import corpus_overlap_estimate
         a = self._df(spark, [f"x{i}" for i in range(30)])
         b = self._df(spark, [f"x{i}" for i in range(20, 50)])
         r = corpus_overlap_estimate(a, b, "v", k=256).collect()[0]
@@ -170,7 +170,7 @@ class TestBottomKOverlap:
         assert r["est_jaccard"] == round(10 / 50, 6)
 
     def test_estimator_tracks_exact_in_sampling_regime(self, spark):
-        from news_rss_spark.operators.sketch import corpus_overlap_estimate
+        from corpus_lab.operators.sketch import corpus_overlap_estimate
         a = self._df(spark, [f"v{i}" for i in range(2000)])
         b = self._df(spark, [f"v{i}" for i in range(1000, 3000)])
         r = corpus_overlap_estimate(a, b, "v", k=256).collect()[0]
@@ -181,7 +181,7 @@ class TestBottomKOverlap:
     def test_duplicates_do_not_bias(self, spark):
         """The sketch is over DISTINCT values: replicating rows must not
         change the estimate."""
-        from news_rss_spark.operators.sketch import corpus_overlap_estimate
+        from corpus_lab.operators.sketch import corpus_overlap_estimate
         vals = [f"x{i}" for i in range(30)]
         a1 = self._df(spark, vals)
         a2 = self._df(spark, vals * 5)
@@ -194,7 +194,7 @@ class TestBottomKOverlap:
         """bottomk(A u B) == re-limit(bottomk(A) u bottomk(B)) — the
         open-state merge rule that lets snapshots combine without
         touching raw data."""
-        from news_rss_spark.operators.sketch import bottomk_sketch
+        from corpus_lab.operators.sketch import bottomk_sketch
         import pyspark.sql.functions as F
         a = self._df(spark, [f"p{i}" for i in range(300)])
         b = self._df(spark, [f"q{i}" for i in range(300)])
@@ -207,7 +207,7 @@ class TestBottomKOverlap:
         assert direct == merged
 
     def test_deterministic_under_repartition(self, spark):
-        from news_rss_spark.operators.sketch import corpus_overlap_estimate
+        from corpus_lab.operators.sketch import corpus_overlap_estimate
         a = self._df(spark, [f"v{i}" for i in range(500)])
         b = self._df(spark, [f"v{i}" for i in range(250, 750)])
         r1 = corpus_overlap_estimate(a, b, "v", k=128).collect()[0]
@@ -218,7 +218,7 @@ class TestBottomKOverlap:
     def test_empty_inputs_pinned_zero(self, spark):
         """Two empty (or all-NULL) value sets: k_used = 0 and the
         estimate is the PINNED 0.0, never NULL or a division error."""
-        from news_rss_spark.operators.sketch import corpus_overlap_estimate
+        from corpus_lab.operators.sketch import corpus_overlap_estimate
         empty = spark.createDataFrame([], "v string")
         nulls = spark.createDataFrame([(None,), (None,)], "v string")
         for a, b in [(empty, empty), (nulls, nulls), (empty, nulls)]:

@@ -5,7 +5,7 @@ shuffled (not nested-loop) physical plan."""
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.skew import salted_join
+from corpus_lab.operators.skew import salted_join
 
 
 def _skewed(spark):
@@ -59,7 +59,7 @@ class TestSaltedJoin:
 
 class TestSkewProfile:
     def test_profile_matches_hand_computation(self, spark):
-        from news_rss_spark.operators.skew import skew_profile
+        from corpus_lab.operators.skew import skew_profile
         rows = ([("hot", i) for i in range(6)]
                 + [("warm", i) for i in range(3)]
                 + [("cold", 0)])
@@ -72,7 +72,7 @@ class TestSkewProfile:
         assert [r["cum_share"] for r in got] == [0.6, 0.9, 1.0]
 
     def test_null_key_profiles_and_ties_break_on_key(self, spark):
-        from news_rss_spark.operators.skew import skew_profile
+        from corpus_lab.operators.skew import skew_profile
         rows = [("a", 1), ("a", 2), (None, 1), (None, 2), ("b", 1)]
         df = spark.createDataFrame(rows, ["k", "v"])
         got = sorted(skew_profile(df, "k").collect(),
@@ -82,7 +82,7 @@ class TestSkewProfile:
             [("a", 1), (None, 2), ("b", 3)]
 
     def test_top_k_truncation(self, spark):
-        from news_rss_spark.operators.skew import skew_profile
+        from corpus_lab.operators.skew import skew_profile
         df = spark.createDataFrame(
             [(f"k{i % 7}", i) for i in range(70)], ["k", "v"])
         got = skew_profile(df, "k", top_k=3).collect()

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.snapshot import apply_delta, snapshot_diff
+from corpus_lab.operators.snapshot import apply_delta, snapshot_diff
 
 
 def _snaps(spark):

@@ -7,7 +7,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.snm import (
+from corpus_lab.operators.snm import (
     snm_candidate_pairs,
     snm_global_rank,
     snm_near_dup,

@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.sparse_sim import (
+from corpus_lab.operators.sparse_sim import (
     all_pairs_cosine,
     term_counts,
     tfidf_postings,

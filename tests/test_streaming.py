@@ -260,7 +260,7 @@ def test_windowed_counts_watermark_drops_late_events(spark, tmp_path):
     re-emitted or resurrected."""
     from datetime import datetime as dt
 
-    from news_rss_spark.streaming.stream import streaming_windowed_counts
+    from corpus_lab.streaming.sinks import streaming_windowed_counts
 
     inp, sink, ckpt = (str(tmp_path / d) for d in ("in", "sink", "ckpt"))
     ddl = "event_id long, ts timestamp, event_type string, value double"
@@ -299,8 +299,8 @@ def test_incremental_hll_two_ticks_equals_batch_and_replays_idempotently(
     ESTIMATE is exactly unchanged (no lost history, no double count)."""
     import shutil
 
-    from news_rss_spark.operators.sketch import hll_distinct
-    from news_rss_spark.streaming.stream import (
+    from corpus_lab.operators.sketch import hll_distinct
+    from corpus_lab.streaming.sinks import (
         run_streaming_hll,
         streaming_hll_estimate,
     )
@@ -378,8 +378,8 @@ def test_incremental_cms_two_ticks_equals_batch_and_batch_replay_idempotent(
     own partition — table content unchanged (the documented recovery
     contract; unlike HLL's max, a checkpoint WIPE is out of contract
     for sum-merge)."""
-    from news_rss_spark.operators.sketch import cms_counters, cms_estimate
-    from news_rss_spark.streaming.stream import (
+    from corpus_lab.operators.sketch import cms_counters, cms_estimate
+    from corpus_lab.streaming.sinks import (
         incremental_cms_sink,
         streaming_cms_estimate,
     )
@@ -421,11 +421,11 @@ def test_incremental_quantile_two_ticks_equals_batch_and_replays(
     blind), and survives a full checkpoint wipe unchanged."""
     import shutil
 
-    from news_rss_spark.operators.sketch import (
+    from corpus_lab.operators.sketch import (
         quantile_sample_sketch,
         sketch_quantile_estimates,
     )
-    from news_rss_spark.streaming.stream import (
+    from corpus_lab.streaming.sinks import (
         run_streaming_quantile,
         streaming_quantile_estimate,
     )

@@ -6,7 +6,7 @@ from datetime import datetime as dt
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.streaming.stream import streaming_enrichment_join
+from corpus_lab.streaming.sinks import streaming_enrichment_join
 
 DOCS_DDL = "doc_id long, doc_ts timestamp, title string"
 MEDIA_DDL = "doc_id long, media_ts timestamp, photo string"

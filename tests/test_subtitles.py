@@ -2,7 +2,7 @@
 
 import pytest
 
-from news_rss_spark.kernel.subx import parse_subtitles
+from corpus_lab.kernel.subx import parse_subtitles
 
 SRT = """1
 00:00:01,000 --> 00:00:03,500
@@ -70,7 +70,7 @@ class TestKernel:
 
 class TestSparkOperator:
     def test_explode(self, spark):
-        from news_rss_spark.operators.subtitles import parse_subtitles_df
+        from corpus_lab.operators.subtitles import parse_subtitles_df
         rows = [("v1", SRT), ("v2", VTT), ("v3", None)]
         df = spark.createDataFrame(rows, "doc_id string, content string")
         got = {}

@@ -2,7 +2,7 @@
 
 import pytest
 
-from news_rss_spark.kernel.tablex import extract_tables
+from corpus_lab.kernel.tablex import extract_tables
 
 
 def grid(cells):
@@ -75,7 +75,7 @@ class TestKernel:
 
 class TestTableRecords:
     def test_melt_with_headers_and_fallback(self, spark):
-        from news_rss_spark.operators.tables import (
+        from corpus_lab.operators.tables import (
             extract_tables_df,
             table_records,
         )
@@ -98,7 +98,7 @@ class TestTableRecords:
 class TestSparkOperator:
     @pytest.fixture(scope="class")
     def rows(self, spark):
-        from news_rss_spark.operators.tables import extract_tables_df
+        from corpus_lab.operators.tables import extract_tables_df
         data = [
             ("a", "<table><tr><th>H</th></tr><tr><td>v1</td></tr></table>"),
             ("b", "<p>none</p>"),

@@ -6,7 +6,7 @@ from datetime import datetime
 
 import pyspark.sql.functions as F
 
-from news_rss_spark.operators.temporal import asof_join, interval_join
+from corpus_lab.operators.temporal import asof_join, interval_join
 
 
 def _ts(s):

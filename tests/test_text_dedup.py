@@ -5,7 +5,7 @@ import itertools
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.text_dedup import (
+from corpus_lab.operators.text_dedup import (
     minhash_candidate_pairs,
     simhash,
     simhash16,
@@ -212,7 +212,7 @@ class TestDatasetSplit:
         """The property randomSplit cannot give: assignments depend only on
         (salt, id) — identical across partitionings, and adding documents
         never moves existing ones between splits."""
-        from news_rss_spark.operators.text_analysis import assign_split
+        from corpus_lab.operators.text_analysis import assign_split
         d = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
         a = {r["doc_id"]: r["split"]
              for r in assign_split(d).collect()}
@@ -235,7 +235,7 @@ class TestSpanDedup:
     """C4 three-sentence-span dedup semantics (dedup_spans)."""
 
     def _run(self, spark, rows):
-        from news_rss_spark.operators.text_dedup import dedup_spans
+        from corpus_lab.operators.text_dedup import dedup_spans
         d = spark.createDataFrame(rows,
                                   "doc_id long, sentences array<string>")
         return {r["doc_id"]: r["clean_text"]
@@ -263,7 +263,7 @@ class TestSpanDedup:
         assert got[4] == "a\nb" and got[5] == "a\nb"
 
     def test_no_nested_loop_join(self, spark):
-        from news_rss_spark.operators.text_dedup import dedup_spans
+        from corpus_lab.operators.text_dedup import dedup_spans
         d = spark.createDataFrame(
             [(0, ["a", "b", "c", "d"])],
             "doc_id long, sentences array<string>")
@@ -276,7 +276,7 @@ class TestParagraphDedup:
     """Dolma-style exact paragraph dedup semantics (dedup_paragraphs)."""
 
     def _run(self, spark, rows):
-        from news_rss_spark.operators.text_dedup import dedup_paragraphs
+        from corpus_lab.operators.text_dedup import dedup_paragraphs
         d = spark.createDataFrame(rows,
                                   "doc_id long, paragraphs array<string>")
         return {r["doc_id"]: r["clean_text"]
@@ -305,7 +305,7 @@ class TestParagraphDedup:
         assert got[1] == "a\nb\nc"
 
     def test_no_nested_loop_join(self, spark):
-        from news_rss_spark.operators.text_dedup import dedup_paragraphs
+        from corpus_lab.operators.text_dedup import dedup_paragraphs
         d = spark.createDataFrame(
             [(0, ["a", "b"])], "doc_id long, paragraphs array<string>")
         plan = dedup_paragraphs(d)._jdf.queryExecution() \
@@ -320,7 +320,7 @@ class TestRemoveFrequentSentences:
 
     def _run(self, spark, rows, schema="doc_id long, sentences array<string>",
              **kw):
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             remove_frequent_sentences)
         d = spark.createDataFrame(rows, schema)
         return {r["doc_id"]: (r["clean_text"], r["n_kept"])
@@ -375,7 +375,7 @@ class TestRemoveFrequentSentences:
         assert got[3] == ("promo b0", 2)
 
     def test_order_preserved_and_no_bnlj(self, spark):
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             remove_frequent_sentences)
         got = self._run(spark, [
             (0, ["hot"]), (1, ["hot"]), (2, ["hot"]),
@@ -427,7 +427,7 @@ class TestDuplicatedGramSpans:
         return spans
 
     def _run(self, spark, docs: dict, k: int, keep_first: bool = True) -> set:
-        from news_rss_spark.operators.text_dedup import duplicated_gram_spans
+        from corpus_lab.operators.text_dedup import duplicated_gram_spans
         d = spark.createDataFrame(
             [(i, " ".join(t)) for i, t in docs.items()],
             "doc_id long, text string")
@@ -494,7 +494,7 @@ class TestDuplicatedGramSpans:
         assert self._run(spark, docs, k=8) == set()
 
     def test_no_nested_loop_join(self, spark):
-        from news_rss_spark.operators.text_dedup import duplicated_gram_spans
+        from corpus_lab.operators.text_dedup import duplicated_gram_spans
         d = spark.createDataFrame([(0, "a b c d e f g h i")],
                                   "doc_id long, text string")
         plan = duplicated_gram_spans(d)._jdf.queryExecution() \
@@ -507,7 +507,7 @@ class TestRemoveSpans:
     must drop exactly the covered tokens, in place, per document."""
 
     def _clean(self, spark, docs: dict, k: int) -> dict:
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             duplicated_gram_spans, remove_spans)
         d = spark.createDataFrame(
             [(i, " ".join(t)) for i, t in docs.items()],
@@ -542,7 +542,7 @@ class TestRemoveSpans:
         assert got[1] == " ".join(gap)
 
     def test_no_nested_loop_join(self, spark):
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             duplicated_gram_spans, remove_spans)
         d = spark.createDataFrame([(0, "a b c d e f g h i")],
                                   "doc_id long, text string")
@@ -571,7 +571,7 @@ class TestEditDistanceNearDup:
     set, and the thresholded banded DP must match the full DP."""
 
     def test_equals_brute_force_over_candidates(self, spark):
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             edit_distance_near_dup_pairs, minhash_candidate_pairs)
         d = _docs(spark)
         for max_dist in (0, 4, 12):
@@ -589,7 +589,7 @@ class TestEditDistanceNearDup:
             assert got == want
 
     def test_identical_docs_distance_zero(self, spark):
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             edit_distance_near_dup_pairs)
         got = {(r["a"], r["b"]): r["dist"]
                for r in edit_distance_near_dup_pairs(
@@ -601,7 +601,7 @@ class TestEditDistanceNearDup:
         """A doc pair with small edit distance but no shared band never
         appears — the operator's contract is candidates-then-verify, not
         corpus-wide Levenshtein."""
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             edit_distance_near_dup_pairs, minhash_candidate_pairs)
         d = _docs(spark)
         cand = {(r["a"], r["b"])
@@ -612,7 +612,7 @@ class TestEditDistanceNearDup:
         assert got <= cand
 
     def test_no_nested_loop_join(self, spark):
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             edit_distance_near_dup_pairs)
         plan = edit_distance_near_dup_pairs(_docs(spark), max_dist=4) \
             ._jdf.queryExecution().executedPlan().toString()
@@ -625,7 +625,7 @@ class TestContainmentPairs:
         containment of the small side is 1.0 while Jaccard is ~0.1 —
         the pair class ngram_jaccard_pairs(threshold=0.5) structurally
         drops."""
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             containment_pairs, ngram_jaccard_pairs)
         quote = " ".join(f"q{i}" for i in range(10))
         filler = " ".join(f"f{i}" for i in range(90))
@@ -644,7 +644,7 @@ class TestContainmentPairs:
     def test_hot_shingle_docs_are_the_documented_recall_edge(self, spark):
         """Docs made ENTIRELY of over-max_df shingles produce no
         candidates — the documented blocking trade-off."""
-        from news_rss_spark.operators.text_dedup import containment_pairs
+        from corpus_lab.operators.text_dedup import containment_pairs
         rows = [(i, "hot common boiler plate") for i in range(10)]
         d = spark.createDataFrame(rows, "doc_id long, text string")
         assert containment_pairs(d, threshold=0.5, min_df=2,
@@ -654,7 +654,7 @@ class TestContainmentPairs:
                                  max_df=20).count() == 45
 
     def test_direction_asymmetry_values(self, spark):
-        from news_rss_spark.operators.text_dedup import containment_pairs
+        from corpus_lab.operators.text_dedup import containment_pairs
         rows = [(0, "a b c d"), (1, "a b c d e f g h")]
         d = spark.createDataFrame(rows, "doc_id long, text string")
         r = containment_pairs(d, threshold=0.5).collect()
@@ -666,14 +666,14 @@ class TestContainmentPairs:
 
     def test_budget_guard_trips(self, spark):
         import pytest
-        from news_rss_spark.operators.text_dedup import containment_pairs
+        from corpus_lab.operators.text_dedup import containment_pairs
         rows = [(i, "x y z w") for i in range(10)]
         d = spark.createDataFrame(rows, "doc_id long, text string")
         with pytest.raises(ValueError, match="candidate pairs"):
             containment_pairs(d, max_df=20, max_candidate_pairs=1).collect()
 
     def test_no_nested_loop_join(self, spark):
-        from news_rss_spark.operators.text_dedup import containment_pairs
+        from corpus_lab.operators.text_dedup import containment_pairs
         d = spark.createDataFrame([(0, "a b c"), (1, "a b c")],
                                   "doc_id long, text string")
         plan = containment_pairs(d)._jdf.queryExecution() \
@@ -689,7 +689,7 @@ class TestFuzzyContamination:
         """A benchmark item with one word changed every 5 words has zero
         shared 8-grams (the PaLM exact recipe misses it) but high
         shingle-Jaccard — the gap this operator closes."""
-        from news_rss_spark.operators.text_dedup import (
+        from corpus_lab.operators.text_dedup import (
             contamination_check, fuzzy_contamination)
         base = [f"w{i}" for i in range(40)]
         leaked = list(base)
@@ -709,14 +709,14 @@ class TestFuzzyContamination:
     def test_cross_relation_only_no_within_side_pairs(self, spark):
         """Two identical TRAIN docs never pair with each other — the
         join is strictly train x bench."""
-        from news_rss_spark.operators.text_dedup import fuzzy_contamination
+        from corpus_lab.operators.text_dedup import fuzzy_contamination
         dup = "same words every time here"
         train = self._rel(spark, [(1, dup), (2, dup)])
         bench = self._rel(spark, [(100, "different benchmark item text")])
         assert fuzzy_contamination(train, bench, threshold=0.1).count() == 0
 
     def test_exact_copy_scores_one(self, spark):
-        from news_rss_spark.operators.text_dedup import fuzzy_contamination
+        from corpus_lab.operators.text_dedup import fuzzy_contamination
         t = "alpha beta gamma delta epsilon"
         train = self._rel(spark, [(1, t)])
         bench = self._rel(spark, [(100, t)])
@@ -726,7 +726,7 @@ class TestFuzzyContamination:
 
     def test_budget_guard_trips_on_cross_census(self, spark):
         import pytest
-        from news_rss_spark.operators.text_dedup import fuzzy_contamination
+        from corpus_lab.operators.text_dedup import fuzzy_contamination
         t = "hot boiler plate words"
         train = self._rel(spark, [(i, t) for i in range(10)])
         bench = self._rel(spark, [(100 + i, t) for i in range(10)])
@@ -734,7 +734,7 @@ class TestFuzzyContamination:
             fuzzy_contamination(train, bench, max_candidate_pairs=5)
 
     def test_no_nested_loop_join(self, spark):
-        from news_rss_spark.operators.text_dedup import fuzzy_contamination
+        from corpus_lab.operators.text_dedup import fuzzy_contamination
         train = self._rel(spark, [(1, "a b c d")])
         bench = self._rel(spark, [(100, "a b c e")])
         plan = fuzzy_contamination(train, bench)._jdf.queryExecution() \

@@ -3,7 +3,7 @@ window-2 adjacency hold, output order is total and deterministic."""
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.textrank import (
+from corpus_lab.operators.textrank import (
     cooccurrence_edges,
     textrank_keywords,
 )

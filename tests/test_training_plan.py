@@ -4,7 +4,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.plans.training_data import (
+from corpus_lab.plans.training_data import (
     build_training_corpus,
     run_training_corpus_job,
 )
@@ -84,7 +84,7 @@ def test_job_writes_partitioned_corpus_and_is_deterministic(spark, tmp_path):
 
 
 def test_temperature_mix_flattens_sources(spark):
-    from news_rss_spark.plans.training_data import build_training_corpus
+    from corpus_lab.plans.training_data import build_training_corpus
     # one dominant source, two small ones
     rows = ([(i, "big", "unique text %d alpha beta gamma delta" % i)
              for i in range(300)]
@@ -105,7 +105,7 @@ def test_temperature_mix_flattens_sources(spark):
 
 
 def test_context_windows_cover_each_split_exactly(spark):
-    from news_rss_spark.plans.training_data import (
+    from corpus_lab.plans.training_data import (
         build_context_windows,
         build_training_corpus,
     )
@@ -130,7 +130,7 @@ def test_context_windows_cover_each_split_exactly(spark):
 
 
 def test_job_writes_window_map(spark, tmp_path):
-    from news_rss_spark.plans.training_data import run_training_corpus_job
+    from corpus_lab.plans.training_data import run_training_corpus_job
     rows = [(i, "s", "text %d lorem ipsum dolor sit" % i) for i in range(60)]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
     out = str(tmp_path / "corpus")

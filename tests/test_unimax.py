@@ -7,7 +7,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.unimax import (
+from corpus_lab.operators.unimax import (
     unimax_allocations,
     unimax_select,
 )

@@ -3,11 +3,11 @@ and the text-normalization operators."""
 
 from pyspark.sql import functions as F
 
-from news_rss_spark.operators.text_analysis import (
+from corpus_lab.operators.text_analysis import (
     normalize_text,
     normalize_text_nfc,
 )
-from news_rss_spark.operators.url_ops import (
+from corpus_lab.operators.url_ops import (
     canonicalize_url,
     dedup_by_canonical_url,
     filter_urls,
@@ -120,7 +120,7 @@ class TestSchemeSpecificPorts:
 
 
 def test_fetch_schedule_politeness_waves(spark):
-    from news_rss_spark.operators.url_ops import fetch_schedule
+    from corpus_lab.operators.url_ops import fetch_schedule
     rows = [(f"https://{d}.com/{i}", f"{d}.com")
             for d in ("a", "b") for i in range(5)] + \
            [("https://c.com/0", "c.com")]
@@ -142,7 +142,7 @@ def test_fetch_schedule_politeness_waves(spark):
 # ------------------------------------------------- trap patterns
 
 def test_trap_patterns_classification_and_flag(spark):
-    from news_rss_spark.operators.url_ops import url_trap_patterns
+    from corpus_lab.operators.url_ops import url_trap_patterns
     urls = (
         # calendar trap: one template, 12 distinct urls
         [(i, f"https://ex.org/cal/2024/{i % 12 + 1}/event{i}")
@@ -164,7 +164,7 @@ def test_trap_patterns_classification_and_flag(spark):
 
 
 def test_trap_patterns_case_query_and_empty_segments(spark):
-    from news_rss_spark.operators.url_ops import url_trap_patterns
+    from corpus_lab.operators.url_ops import url_trap_patterns
     df = spark.createDataFrame(
         [(1, "HTTPS://EX.org//a//123/?page=9"),
          (2, "https://ex.org/a/456"),
@@ -178,7 +178,7 @@ def test_trap_patterns_case_query_and_empty_segments(spark):
 
 class TestRetryBackoffSchedule:
     def test_exponential_and_cap(self, spark):
-        from news_rss_spark.operators.url_ops import retry_backoff_schedule
+        from corpus_lab.operators.url_ops import retry_backoff_schedule
         rows = [("u1", 1, 1000), ("u2", 3, 1000), ("u3", 20, 1000),
                 ("u0", 0, 1000), ("u9", 9, 1000)]
         df = spark.createDataFrame(
@@ -197,7 +197,7 @@ class TestRetryBackoffSchedule:
         """Exponent is clamped at 40: n_failures of 58+, 63, 64+ and
         INT_MAX all land on the max_backoff cap with a sane positive
         next_attempt_ts (no int64 wrap, no shiftleft mod-64 wrap)."""
-        from news_rss_spark.operators.url_ops import retry_backoff_schedule
+        from corpus_lab.operators.url_ops import retry_backoff_schedule
         rows = [("a", 58, 1000), ("b", 63, 1000), ("c", 64, 1000),
                 ("d", 200, 1000), ("e", 2**31 - 1, 1000)]
         df = spark.createDataFrame(

@@ -3,7 +3,7 @@ truncation, duplicate-edge collapse, determinism / salt re-roll."""
 
 import hashlib
 
-from news_rss_spark.operators.walks import random_walks
+from corpus_lab.operators.walks import random_walks
 
 
 def _walk_reference(edges, walk_len, walks_per_node, salt):

@@ -6,8 +6,8 @@ from datetime import datetime, timezone
 
 import pyspark.sql.functions as F
 
-from news_rss_spark.kernel.warcx import build_warc, gunzip_members, parse_warc
-from news_rss_spark.sources.warc import documents_from_warc, warc_records
+from corpus_lab.kernel.warcx import build_warc, gunzip_members, parse_warc
+from corpus_lab.sources.warc import documents_from_warc, warc_records
 
 RECS = [
     {"url": "https://a.example.org/1", "status": 200,
@@ -126,7 +126,7 @@ class TestWarcExtractionJob:
     def test_one_call_warc_to_sink_with_resume(self, spark, tmp_path):
         """WARC archives -> published sink in one call, then a re-run
         skips every bucket (same ledger-driven resume as the feed path)."""
-        from news_rss_spark.plans.pipeline import run_warc_extraction_job
+        from corpus_lab.plans.pages import run_warc_extraction_job
 
         files = spark.createDataFrame(
             [("f0", bytearray(build_warc(RECS))),

@@ -6,7 +6,7 @@ import random
 
 import pytest
 
-from news_rss_spark.operators.winnow import (
+from corpus_lab.operators.winnow import (
     winnow_fingerprints,
     winnow_overlap_pairs,
 )

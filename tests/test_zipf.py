@@ -4,7 +4,7 @@ import math
 
 import pytest
 
-from news_rss_spark.operators.drift import zipf_fit
+from corpus_lab.operators.drift import zipf_fit
 
 
 def fit_reference(counts, top_k):
