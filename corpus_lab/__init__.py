@@ -8,6 +8,8 @@ page-bundle and WARC jobs, streaming analytics sinks — together with the
 registry entries (``corpus_lab.registry``) that exercise them against
 DuckDB oracles.
 
-The dependency runs one way: ``corpus_lab`` imports ``news_rss_spark``,
-never the reverse (``tests/test_product_boundary.py`` locks this).
+The dependency runs one way: ``corpus_lab`` imports a short list of
+public ``news_rss_spark`` names, never a private one, and the product
+never imports ``corpus_lab`` (``tests/test_product_boundary.py`` locks
+both).
 """

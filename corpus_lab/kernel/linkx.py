@@ -31,8 +31,8 @@ from __future__ import annotations
 
 import re
 
-from news_rss_spark.kernel.htmlx import _norm_text, decode_entities, tokenize
-from news_rss_spark.kernel.urls import _SCHEME_RE
+from news_rss_spark.kernel.htmlx import decode_entities, tokenize
+from corpus_lab.kernel.markup import _SCHEME_RE, _norm_text
 
 __all__ = ["extract_links", "resolve_url"]
 

@@ -37,12 +37,8 @@ import json
 import re
 from typing import Any
 
-from news_rss_spark.kernel.htmlx import (
-    _norm_text,
-    _parse_attrs,
-    decode_entities,
-    tokenize,
-)
+from news_rss_spark.kernel.htmlx import decode_entities, tokenize
+from corpus_lab.kernel.markup import _norm_text, _parse_attrs
 
 # the body tokenizer deliberately DROPS script/style raw text (boilerplate
 # never lives there), so JSON-LD blocks are mined in a dedicated pre-scan:

@@ -28,7 +28,8 @@ from __future__ import annotations
 
 import re
 
-from news_rss_spark.kernel.htmlx import _norm_text, decode_entities
+from news_rss_spark.kernel.htmlx import decode_entities
+from corpus_lab.kernel.markup import _norm_text
 
 __all__ = ["parse_subtitles"]
 

@@ -29,7 +29,8 @@ and unit-locked in ``tests/test_tables.py``):
 
 from __future__ import annotations
 
-from news_rss_spark.kernel.htmlx import Node, _norm_text, build_dom, decode_entities
+from news_rss_spark.kernel.htmlx import Node, build_dom, decode_entities
+from corpus_lab.kernel.markup import _norm_text
 
 __all__ = ["extract_tables"]
 

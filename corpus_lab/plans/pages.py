@@ -11,15 +11,56 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from news_rss_spark import EXTRACTOR_VERSION
-from news_rss_spark.operators.lineage import lineage_rows, with_bucket
-from news_rss_spark.plans.pipeline import (
+from news_rss_spark.operators.lineage import (
     DEFAULT_N_BUCKETS,
-    JobResult,
-    _bucketed_input,
-    _completed,
-    _gc_orphan_staging,
-    run_extraction_job,
+    lineage_rows,
+    with_bucket,
 )
+from news_rss_spark.plans.pipeline import JobResult, run_extraction_job
+
+
+def _gc_orphan_staging(spark: SparkSession, sink_path: str) -> int:
+    """Frozen copy of news_rss_spark.plans.pipeline._gc_orphan_staging."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(sink_path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return 0
+    removed = 0
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if name.startswith(".spark-staging-") or name == "_temporary":
+            fs.delete(st.getPath(), True)
+            removed += 1
+    return removed
+
+
+def _completed(spark: SparkSession, lineage_path: str,
+               extractor_version: str) -> set[int]:
+    """Frozen copy of news_rss_spark.plans.pipeline._completed."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        ledger = (spark.read.schema("bucket int, extractor_version string")
+                  .parquet(lineage_path))
+    except AnalysisException as exc:
+        if "PATH_NOT_FOUND" not in str(exc.getCondition() or exc):
+            raise
+        return set()
+    return {r["bucket"] for r in
+            ledger.filter(F.col("extractor_version") == extractor_version)
+                  .select("bucket").collect()}
+
+
+def _bucketed_input(spark: SparkSession, df: DataFrame, n_buckets: int,
+                    done: set[int]) -> DataFrame:
+    """Frozen copy of news_rss_spark.plans.pipeline._bucketed_input."""
+    df = with_bucket(df, n_buckets=n_buckets)
+    if done:
+        df = df.filter(~F.col("bucket").isin(sorted(done)))
+    width = max(spark.sparkContext.defaultParallelism * 2, n_buckets)
+    if df.rdd.getNumPartitions() < width:
+        return df.repartition(width, "bucket")
+    return df
 
 
 def _publish_bundle(spark: SparkSession, bundle: DataFrame, sink_path: str,
@@ -115,7 +156,7 @@ def run_page_bundle_job(
     from corpus_lab.operators.full_page import extract_page_bundle_df
 
     done = _completed(spark, lineage_path, extractor_version) if resume else set()
-    pages_b, _ = _bucketed_input(spark, pages, n_buckets, done, None, False)
+    pages_b = _bucketed_input(spark, pages, n_buckets, done)
 
     bundle = extract_page_bundle_df(
         pages_b.select("doc_id", "html", "base_url"))

@@ -4,8 +4,8 @@
 ``(user_id, feed_url, title, site_url, category)`` via
 :func:`corpus_lab.kernel.opmlx.parse_opml` — the bulk-load
 counterpart of ``sources/registry.py`` (reference seeds its sources by
-migration; deployments import reader exports).  Feed the output through
-``registry.dedup_by_target_url``-style dedup before merging.
+migration; deployments import reader exports).  Dedup the output by
+``feed_url`` before merging.
 Scan-shaped, no shuffle; malformed documents emit nothing.
 """
 

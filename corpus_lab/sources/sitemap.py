@@ -24,7 +24,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from news_rss_spark.kernel.feedxml import _split_tag, _text
+from corpus_lab.kernel.markup import _split_tag, _text
 
 ENTRY_ARROW_SCHEMA = pa.schema([
     ("sitemap_id", pa.string()),

@@ -14,16 +14,17 @@ that dataflow Spark-first:
   the sink table with a TTL retention predicate
   (news_rss_spark.operators.dedup);
 - the interval poller becomes a batch (or availableNow streaming) trigger;
-- the publisher becomes a partitioned parquet/Iceberg append with
-  per-partition lineage rows enabling idempotent checkpoint-resume
-  (news_rss_spark.plans.pipeline, news_rss_spark.operators.lineage).
+- the publisher becomes a partitioned parquet sink (dynamic partition
+  overwrite; an Iceberg sink would be a change to the one write helper,
+  ``operators.lineage.overwrite_partitions``) with per-partition lineage
+  rows enabling idempotent checkpoint-resume (news_rss_spark.plans.pipeline).
 
 Beside the ingestion path sit the feed-source registry
-(news_rss_spark.sources.registry), the Iceberg adapter
-(news_rss_spark.plans.iceberg) and the semantic-block column functions
+(news_rss_spark.sources.registry) and the semantic-block column functions
 (news_rss_spark.functions.semantic_blocks).  The corpus operators built
-on top of this package (dedup, ANN, quality, graphs, sketches, media
-kernels) are the separate ``corpus_lab`` package; nothing here imports it.
+on top of this package are the separate ``corpus_lab`` package; nothing
+here imports it, and it imports only the public names listed in
+``tests/test_product_boundary.py``.
 """
 
 __version__ = "0.1.0"

@@ -60,11 +60,6 @@ EXTRACTED_DDL = (
     "byte_count bigint"
 )
 
-# the reference sink schema (migrations/20241025113450_init.up.sql:3-10),
-# field mapping per publish/models.rs:29-41 (guid->id, link->message_url,
-# pub_date->datetime, content->text)
-NEWS_COLUMNS = ["id", "message_url", "datetime", "source", "photo_path", "text"]
-
 
 def _extract_arrow_batches(
     batches: Iterator[pa.RecordBatch], now_utc: datetime,

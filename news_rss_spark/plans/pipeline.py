@@ -13,9 +13,9 @@ Cross-run dedup (D1) needs no join here: completed buckets never reach the
 kernel, and every other bucket is rewritten wholesale, so no extracted id
 can already be live in the sink.  All relational steps are stock
 Catalyst-optimized DataFrame ops; the only Python is the Arrow-batched
-kernel. Sink format is parquet here; on a real cluster the same plan
-targets an Iceberg table (``writeTo(...).append()``) — parquet + dynamic
-partition overwrite gives the same idempotent-replace semantics locally.
+kernel.  The sink is partitioned parquet written by dynamic partition
+overwrite (``operators.lineage.overwrite_partitions``); an Iceberg sink
+would be a change to that write helper.
 """
 
 from __future__ import annotations
@@ -33,6 +33,8 @@ from news_rss_spark.operators.lineage import (
     DEFAULT_N_BUCKETS,
     LINEAGE_DDL,
     lineage_rows,
+    overwrite_partitions,
+    read_written,
     with_bucket,
 )
 
@@ -78,30 +80,25 @@ def _gc_orphan_staging(spark: SparkSession, sink_path: str) -> int:
 
 
 def _completed(spark: SparkSession, lineage_path: str,
-               extractor_version: str) -> set[int]:
-    """Buckets the ledger records as done by ``extractor_version``.
-
-    Only a missing ledger path means "nothing completed" (first run); a
-    corrupt file or an IO error propagates.  Swallowing it would silently
-    recompute every bucket and append to a ledger that still cannot be
-    read.  With an explicit schema an empty directory reads as no rows.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        ledger = spark.read.schema(LINEAGE_DDL).parquet(lineage_path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc.getCondition() or exc):
-            raise
-        return set()
+               extractor_version: str) -> dict[int, set[int]]:
+    """Buckets the ledger records as done by ``extractor_version``, each
+    with the ``doc_count``s its rows recorded.  An unwritten ledger means
+    nothing is done (first run); any other read failure propagates, since
+    swallowing it would recompute every bucket and append to a ledger that
+    still cannot be read."""
+    ledger = read_written(spark.read.schema(LINEAGE_DDL), lineage_path)
+    if ledger is None:
+        return {}
+    done: dict[int, set[int]] = {}
     # one small collect (≤ n_buckets rows per extractor version), no shuffle
-    return {r["bucket"] for r in
-            ledger.filter(F.col("extractor_version") == extractor_version)
-                  .select("bucket").collect()}
+    for r in (ledger.filter(F.col("extractor_version") == extractor_version)
+                    .select("bucket", "doc_count").collect()):
+        done.setdefault(r["bucket"], set()).add(r["doc_count"])
+    return done
 
 
 def _bucketed_input(spark: SparkSession, df: DataFrame, n_buckets: int,
-                    done: set[int], only_buckets: list[int] | None,
+                    done: dict[int, set[int]], only_buckets: list[int] | None,
                     clustered: bool) -> tuple[DataFrame, bool]:
     """Assign buckets, drop completed (and out-of-wave) buckets, and spread
     an under-split scan over ``bucket``.  Returns the pending rows and
@@ -134,7 +131,7 @@ def _bucketed_input(spark: SparkSession, df: DataFrame, n_buckets: int,
 
 def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
              lineage_path: str, extractor_version: str, run_id: str,
-             done: set[int]) -> JobResult:
+             done: dict[int, set[int]]) -> JobResult:
     """The bucketed write plus the ledger append.
 
     Orphaned staging dirs of a dead run are reclaimed first.  ``rows``
@@ -148,20 +145,11 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
     The same aggregate counts non-null ids and distinct ids per bucket,
     and the job raises before the ledger append when a newly written
     bucket holds a duplicate id (null ids are legitimate repeats:
-    missing-guid skip rows).
+    missing-guid skip rows), or when a completed bucket's landed
+    ``doc_count`` is none of the counts its ledger rows recorded.
     """
     gc_staging = _gc_orphan_staging(spark, sink_path)
-    # per-write options, NOT session confs, so the caller's session is left
-    # as it was.  Dynamic overwrite is correctness-critical: a static one
-    # would truncate every completed bucket out of the sink on resume.  lz4:
-    # snappy-java's JNI path collapses under many writer threads (measured
-    # 3.6x slower at local[32]); storage-optimized tables can compact to
-    # zstd out-of-band.
-    (rows.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .option("compression", "lz4")
-         .partitionBy("bucket")
-         .parquet(sink_path))
+    overwrite_partitions(rows, "bucket", sink_path)
 
     # the schema just written: the read-back runs no schema-inference job
     landed = (spark.read.schema(rows.schema).parquet(sink_path)
@@ -177,6 +165,17 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
     new_rows = [r for r in lin_rows if r["bucket"] not in done]
     dup_buckets = sorted(r["bucket"] for r in new_rows
                          if r["id_count"] != r["id_distinct"])
+    doc_counts = {r["bucket"]: r["doc_count"] for r in lin_rows}
+    torn = sorted(b for b, recorded in done.items()
+                  if doc_counts.get(b, 0) not in recorded)
+    if torn:
+        # Spark skips a zero-length file without a word, so an emptied or
+        # removed file of a completed bucket reads as missing rows, and
+        # the resume skip would never rewrite the bucket
+        raise RuntimeError(
+            f"completed sink buckets {torn} hold a row count their ledger"
+            " rows never recorded: a sink file was emptied, cut or removed;"
+            " rerun with resume=False to rewrite every bucket")
     if dup_buckets:
         # the clustered-layout promise (equal ids share one scan split, so
         # partition-local dedup is globally correct) is trusted, not
@@ -238,7 +237,7 @@ def run_extraction_job(
       (bucket/status/byte_count/id only) — no persist of the heavy
       extraction output, the kernel runs exactly once.
     """
-    done = _completed(spark, lineage_path, extractor_version) if resume else set()
+    done = _completed(spark, lineage_path, extractor_version) if resume else {}
     docs_b, clustered = _bucketed_input(spark, docs, n_buckets, done,
                                         only_buckets, input_clustered_by_bucket)
 

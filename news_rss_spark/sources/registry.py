@@ -3,12 +3,12 @@
 DataFrame (dimension table).
 
 Operators mirrored:
-- S7  registry scan + run_at_launch filter (src/storage/pgsql/mod.rs:50-78)
+- S7  registry scan                        (src/storage/pgsql/mod.rs:50-78)
 - P10 LIKE search over name/link           (src/storage/pgsql/mod.rs:80-92)
 - C4  sources CRUD (add/delete/update)     (src/server/routers.rs:414-624)
 
 At scale this is a broadcast-sized table; CRUD is expressed as pure
-DataFrame transforms (or an Iceberg MERGE on a real catalog).
+DataFrame transforms.
 """
 
 from __future__ import annotations
@@ -32,11 +32,6 @@ SEED_SOURCES = [
 
 def seed_registry(spark: SparkSession, extra_rows: list | None = None) -> DataFrame:
     return spark.createDataFrame(SEED_SOURCES + (extra_rows or []), REGISTRY_DDL)
-
-
-def load_at_launch(registry: DataFrame) -> DataFrame:
-    """S7: SELECT * FROM rss_sources WHERE run_at_launch = true."""
-    return registry.filter(F.col("run_at_launch"))
 
 
 def search(registry: DataFrame, query: str) -> DataFrame:
@@ -73,11 +68,6 @@ def update_source(registry: DataFrame, source_id: int, updates: dict) -> DataFra
             col, F.when(F.col("id") == source_id, F.lit(val)).otherwise(F.col(col))
         )
     return out
-
-
-def dedup_by_target_url(registry: DataFrame) -> DataFrame:
-    """main.rs:144-149: configs deduped by target link before spawning."""
-    return registry.dropDuplicates(["link"])
 
 
 def worker_info(registry: DataFrame, job_stats: DataFrame | None = None,

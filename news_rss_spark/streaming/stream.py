@@ -54,11 +54,28 @@ from news_rss_spark.operators.dedup import (
     dedup_within_run,
 )
 from news_rss_spark.operators.extraction import extract_articles, to_publish_news
+from news_rss_spark.operators.lineage import overwrite_partitions, read_written
 from news_rss_spark.sources.rss_xml import documents_from_feeds
 
 FEEDS_DDL = "feed_id string, xml string, fetched_at timestamp"
 
 _BATCH_PARTITION = re.compile(r"/batch_id=(\d+)/")
+
+
+def _raise_on_empty_files(spark: SparkSession, sink_path: str) -> None:
+    """Raise if a data file of the sink is zero-length.  Spark's scan skips
+    such a file without a word, so its ids would drop out of the anti-join
+    and the pass would publish them again.  One Hadoop FileSystem glob
+    (any scheme), not a Spark job; hidden files (checksums, staging dirs)
+    are not data."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{sink_path}/batch_id=*/[!._]*")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    for st in fs.globStatus(pattern) or []:
+        if st.getLen() == 0:
+            raise RuntimeError(
+                f"sink file {st.getPath().toString()} is empty: the sink was"
+                " damaged; restore it, or wipe it with its checkpoint")
 
 
 def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH):
@@ -76,32 +93,20 @@ def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH):
     — on replay the batch's previous rows must not suppress themselves)
     with the TTL retention predicate on their ``first_seen``.  Raises
     before writing if the sink holds a partition above ``batch_id`` (the
-    checkpoint is behind its sink; see the module docstring).
+    checkpoint is behind its sink; see the module docstring) or a
+    zero-length data file.
     """
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch_df.sparkSession
         out = (dedup_within_run(batch_df, key="id")
                .withColumn("first_seen", F.lit(now_utc)))
-        # only the genuinely-missing/empty-sink case may skip the dedup
-        # (first batch ever); a corrupt sink, IO failure, or schema drift
-        # must FAIL the batch loudly — a swallowed error here would
-        # silently append re-fetched items as duplicates.  The probe goes
-        # through spark.read (not os.path — the sink may be s3a://hdfs://
-        # URI-addressed) and treats ONLY path-not-found / empty-dir as
-        # first-batch; everything else propagates.
-        prev = None
-        try:
-            prev = spark.read.parquet(sink_path)
-        except AnalysisException as exc:
-            get_cond = getattr(exc, "getCondition",
-                               getattr(exc, "getErrorClass", lambda: ""))
-            marker = str(get_cond() or exc)
-            if not ("PATH_NOT_FOUND" in marker
-                    or "UNABLE_TO_INFER_SCHEMA" in marker):
-                raise
+        _raise_on_empty_files(spark, sink_path)
+        # only nothing-written-yet may skip the dedup (first batch ever); a
+        # corrupt sink, IO failure, or schema drift must FAIL the batch
+        # loudly — a swallowed error here would silently append re-fetched
+        # items as duplicates
+        prev = read_written(spark.read, sink_path)
         if prev is not None:
             if "batch_id" not in prev.columns:
                 raise ValueError(
@@ -124,15 +129,8 @@ def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH):
         # Reading and overwriting the same path in one plan is safe here:
         # the read is pruned to the other partitions, and the dynamic
         # overwrite replaces only batch_id=<n>.
-        # Per-write options, NOT session confs: a session-wide
-        # partitionOverwriteMode / codec mutation here would leak into
-        # concurrent jobs sharing the session
-        (out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", "lz4")
-            .partitionBy("batch_id")
-            .parquet(sink_path))
+        overwrite_partitions(out.withColumn("batch_id", F.lit(int(batch_id))),
+                             "batch_id", sink_path)
 
     return fn
 

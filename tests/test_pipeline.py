@@ -11,7 +11,6 @@ import pytest
 from news_rss_spark.operators.dedup import anti_join_seen, dedup_within_run
 from news_rss_spark.operators.extraction import extract_articles, to_publish_news, with_text_from_spans
 from news_rss_spark.operators.lineage import with_bucket
-from corpus_lab.operators.skew import salted_agg
 from news_rss_spark.plans.pipeline import run_extraction_job
 from news_rss_spark.sources.synth import SPANS_DDL, documents_df
 from tests.fixture_docs import fixture_corpus
@@ -262,6 +261,31 @@ class TestLineageAndResume:
         assert res.skipped_buckets == 4 and res.lineage_buckets == 4
         assert len(sc.statusTracker().getJobIdsForGroup("resume-budget")) <= 9
 
+    @pytest.mark.parametrize("cut,error", [
+        ("half", "FAILED_READ_FILE"),
+        ("zero", "a sink file was emptied, cut or removed"),
+    ], ids=["half", "zero"])
+    def test_damaged_sink_file_raises_on_resume(self, spark, paths, cut,
+                                                error):
+        """A completed bucket whose sink file was cut to half its length or
+        emptied makes the resume raise, and the ledger gains no row.  Spark
+        skips a zero-length file without a word, so the resume skip would
+        otherwise keep that bucket short for good."""
+        import glob
+        import os
+        sink, lineage = paths
+        docs = documents_df(spark, 200, seed=3)
+        run_extraction_job(spark, docs, sink, lineage, NOW, "crash",
+                           n_buckets=8, only_buckets=[0, 1, 2, 3])
+        for victim in glob.glob(f"{sink}/bucket=0/*.parquet"):
+            with open(victim, "r+b") as f:
+                f.truncate(os.path.getsize(victim) // 2 if cut == "half" else 0)
+        ledger_rows = spark.read.parquet(lineage).count()
+        with pytest.raises(Exception, match=error):
+            run_extraction_job(spark, docs, sink, lineage, NOW, "r",
+                               n_buckets=8)
+        assert spark.read.parquet(lineage).count() == ledger_rows
+
     def test_lineage_counts(self, spark, paths):
         sink, lineage = paths
         docs = documents_df(spark, 120, seed=3, num_partitions=4)
@@ -277,6 +301,8 @@ class TestLineageAndResume:
 
 class TestSaltedAgg:
     def test_matches_plain_groupby(self, spark):
+        from corpus_lab.operators.skew import salted_agg
+
         df = documents_df(spark, 200, seed=5)
         ext = extract_articles(df, now_utc=NOW).filter(F.col("status") == "ok")
         plain = {r["source"]: (r["cnt"], r["bytes"]) for r in

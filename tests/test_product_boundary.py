@@ -1,8 +1,10 @@
 """The product boundary: every module under ``news_rss_spark/`` is reached
 by an import walk from the ingestion entry points, the query contract
-(``__spark_entry__.py``) imports nothing outside that closure, and the
+(``__spark_entry__.py``) imports nothing outside that closure, the
 product never imports the corpus operators (``corpus_lab/``) that are
-built on top of it.
+built on top of it, and those import only the public product names in
+``CORPUS_LAB_MAY_IMPORT``, so the product's internals can change without
+them.
 
 The walk reads source with ``ast``, so imports inside function bodies
 (lazy imports) count, and no module is executed.  A module that no
@@ -23,9 +25,26 @@ ROOTS = [
     "news_rss_spark.streaming.stream",        # the availableNow poller
     "news_rss_spark.sources.rss_xml",         # S1 feed parse
     "news_rss_spark.sources.registry",        # S7/P10/C2/C4
-    "news_rss_spark.plans.iceberg",           # C4 MERGE
     "news_rss_spark.functions.semantic_blocks",  # L4-L6
 ]
+
+
+# the only product names corpus_lab may import
+CORPUS_LAB_MAY_IMPORT = {
+    "news_rss_spark.EXTRACTOR_VERSION",
+    "news_rss_spark.operators.lineage.lineage_rows",
+    "news_rss_spark.operators.lineage.with_bucket",
+    "news_rss_spark.operators.lineage.DEFAULT_N_BUCKETS",
+    "news_rss_spark.plans.pipeline.JobResult",
+    "news_rss_spark.plans.pipeline.run_extraction_job",
+    "news_rss_spark.kernel.htmlx.Node",
+    "news_rss_spark.kernel.htmlx.build_dom",
+    "news_rss_spark.kernel.htmlx.decode_entities",
+    "news_rss_spark.kernel.htmlx.tokenize",
+    "news_rss_spark.kernel.htmlx.extract_page_spans",
+    "news_rss_spark.sources.synth.SPANS_DDL",
+    "news_rss_spark.sources.synth.generate_documents",
+}
 
 
 def _path(mod: str) -> str | None:
@@ -35,22 +54,33 @@ def _path(mod: str) -> str | None:
     return base + ".py" if os.path.exists(base + ".py") else None
 
 
-def _named(path: str, mod: str) -> set[str]:
-    """Every dotted name ``path`` imports anywhere in its body."""
+def _import_pairs(path: str, mod: str) -> set[tuple[str, str | None]]:
+    """``(module, name)`` for every import anywhere in ``path``'s body:
+    ``name`` is what ``from module import name`` imports, None for a
+    plain ``import module``."""
     pkg = mod if path.endswith("__init__.py") else mod.rpartition(".")[0]
-    named = set()
+    pairs = set()
     for node in ast.walk(ast.parse(open(path).read())):
         if isinstance(node, ast.Import):
-            named.update(a.name for a in node.names)
+            pairs.update((a.name, None) for a in node.names)
         elif isinstance(node, ast.ImportFrom):
             base = node.module or ""
             if node.level:
                 parts = pkg.split(".")
                 base = ".".join(parts[:len(parts) - node.level + 1]
                                 + ([node.module] if node.module else []))
-            named.add(base)
+            pairs.update((base, a.name) for a in node.names)
+    return pairs
+
+
+def _named(path: str, mod: str) -> set[str]:
+    """Every dotted name ``path`` imports anywhere in its body."""
+    named = set()
+    for base, name in _import_pairs(path, mod):
+        named.add(base)
+        if name:
             # ``from pkg import mod`` names a module, not only an attribute
-            named.update(f"{base}.{a.name}" for a in node.names)
+            named.add(f"{base}.{name}")
     return named
 
 
@@ -107,3 +137,16 @@ def test_product_never_imports_corpus_lab():
                   if any(n.split(".")[0] == "corpus_lab"
                          for n in _named(_path(mod), mod)))
     assert back == [], f"product modules importing corpus_lab: {back}"
+
+
+def test_corpus_lab_imports_only_public_product_names():
+    bad = set()
+    for f in glob.glob(os.path.join(REPO, "corpus_lab", "**", "*.py"),
+                       recursive=True):
+        mod = os.path.relpath(f, REPO)[:-3].replace(os.sep, ".")
+        for base, name in _import_pairs(f, mod.removesuffix(".__init__")):
+            full = f"{base}.{name}" if name else base
+            if full.split(".")[0] == PKG and full not in CORPUS_LAB_MAY_IMPORT:
+                bad.add(f"{mod}: {full}")
+    assert sorted(bad) == [], (
+        f"corpus_lab imports non-public product names: {sorted(bad)}")

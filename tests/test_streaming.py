@@ -186,6 +186,29 @@ def test_checkpoint_behind_sink_raises(poller, spark):
     assert len(before) == 6
 
 
+@pytest.mark.parametrize("cut,error", [
+    ("half", "FAILED_READ_FILE"),
+    ("zero", "is empty"),
+], ids=["half", "zero"])
+def test_damaged_sink_file_raises(poller, spark, cut, error):
+    """A sink file cut to half its length or emptied makes the next pass
+    raise before it writes.  Spark skips a zero-length file without a
+    word, so the pass would otherwise publish that batch's ids again."""
+    import glob
+    import os
+    land, tick, sink, _ = poller
+    for t in range(3):
+        land(_rss(range(20 * t, 20 * t + 20)))
+        tick()
+    for victim in glob.glob(f"{sink}/batch_id=1/*.parquet"):
+        with open(victim, "r+b") as f:
+            f.truncate(os.path.getsize(victim) // 2 if cut == "half" else 0)
+    land(_rss(range(20, 80)))  # batch 1's ids again, and 20 new ones
+    with pytest.raises(Exception, match=error):
+        tick()
+    assert not os.path.exists(f"{sink}/batch_id=3")
+
+
 def test_poll_pass_timeout_raises(poller, spark):
     """A pass that overruns its timeout is stopped and raises; the next
     pass resumes from the checkpoint and leaves the right sink."""
