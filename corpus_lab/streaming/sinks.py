@@ -40,12 +40,12 @@ def incremental_hll_sink(register_path: str, group_col: str,
     — streaming distinct counts WITHOUT keeping distinct values in state.
 
     Each micro-batch writes ITS OWN registers into a ``batch_id=<n>``
-    partition via dynamic partition overwrite — the same idempotent-
-    replace protocol as exactly_once_news_sink: a replayed batch
-    overwrites only its own partition with identical content; every
-    other partition (the ingested history) is never touched, so there is
-    no read-merge-overwrite window in which a crash can lose state, and
-    no first-batch existence probe at all.  Because register merge is a
+    partition via dynamic partition overwrite — an idempotent-replace
+    protocol: a replayed batch overwrites only its own partition with
+    identical content; every other partition (the ingested history) is
+    never touched, so there is no read-merge-overwrite window in which a
+    crash can lose state, and no first-batch existence probe at all.
+    Because register merge is a
     ``max``, the read side folds all partitions with one tiny
     aggregation (streaming_hll_estimate); a partition per batch costs
     <= |groups| * 2^p rows each — still sketch-sized, compact with the

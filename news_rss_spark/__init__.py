@@ -14,10 +14,11 @@ that dataflow Spark-first:
   the sink table with a TTL retention predicate
   (news_rss_spark.operators.dedup);
 - the interval poller becomes a batch (or availableNow streaming) trigger;
-- the publisher becomes a partitioned parquet sink (dynamic partition
-  overwrite; an Iceberg sink would be a change to the one write helper,
-  ``operators.lineage.overwrite_partitions``) with per-partition lineage
-  rows enabling idempotent checkpoint-resume (news_rss_spark.plans.pipeline).
+- the publisher becomes an append-only partitioned parquet sink (an
+  Iceberg sink would be a change to the one write helper,
+  ``operators.dedup.append_partitions``) with per-partition lineage rows
+  (news_rss_spark.plans.pipeline); a crash-resume is a re-run, since the
+  sink's live ids decide what is appended.
 
 Beside the ingestion path sit the feed-source registry
 (news_rss_spark.sources.registry) and the semantic-block column functions

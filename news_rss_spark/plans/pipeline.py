@@ -3,19 +3,21 @@
 
     read documents (doc_id, spans)                 # S1: feed fetch -> pre-landed table scan
       -> with_bucket                               # stable logical partitioning
-      -> bucket NOT IN completed (ledger, ≤ n_buckets rows)  # lineage checkpoint (engine-new)
+      -> LEFT ANTI (bucket, doc_id) live sink ids  # D1/D2 cross-run, TTL on first_seen
       -> [hash-repartition by bucket]              # only if the scan under-splits
       -> mapInArrow extract + in-kernel dedup      # P1-P9 + L1-L3 + D1 within-run
-      -> write extracted spans partitionBy(bucket), dynamic overwrite  # S4/S5 publish
-      -> one groupBy(bucket) over the landed sink  # D3 ledger + duplicate-id guard
+      -> append partitionBy(bucket) + first_seen, run_id  # S4/S5 publish
+      -> one groupBy(bucket) over the landed sink  # D3 ledger + damage and duplicate-id guards
 
-Cross-run dedup (D1) needs no join here: completed buckets never reach the
-kernel, and every other bucket is rewritten wholesale, so no extracted id
-can already be live in the sink.  All relational steps are stock
+Cross-run dedup (D1) is the poller's rule (``operators.dedup``): documents
+whose id is live in the sink never reach the kernel, and the sink is only
+appended to, so a crash-resume, a re-run and a new input snapshot are one
+operation.  The ledger gates no work; it records lineage and lets a run
+notice a lost sink file.  All relational steps are stock
 Catalyst-optimized DataFrame ops; the only Python is the Arrow-batched
-kernel.  The sink is partitioned parquet written by dynamic partition
-overwrite (``operators.lineage.overwrite_partitions``); an Iceberg sink
-would be a change to that write helper.
+kernel.  The sink is partitioned parquet written by
+``operators.dedup.append_partitions``; an Iceberg sink would be a change
+to that write helper.
 """
 
 from __future__ import annotations
@@ -27,30 +29,35 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from news_rss_spark import EXTRACTOR_VERSION
-from news_rss_spark.operators.dedup import dedup_within_run
+from news_rss_spark.operators.dedup import (
+    DAMAGED,
+    anti_join_seen,
+    append_partitions,
+    dedup_within_run,
+    sink_ids,
+)
 from news_rss_spark.operators.extraction import extract_articles
 from news_rss_spark.operators.lineage import (
     DEFAULT_N_BUCKETS,
     LINEAGE_DDL,
     lineage_rows,
-    overwrite_partitions,
-    read_written,
     with_bucket,
 )
 
 
 @dataclass
 class JobResult:
-    published_count: int
-    skipped_buckets: int
-    lineage_buckets: int
+    published_count: int      # ok rows in the whole sink
+    skipped_buckets: int      # buckets the ledger recorded before this run
+    lineage_buckets: int      # ledger rows this run appended
     gc_staging_dirs: int = 0
 
 
 def _gc_orphan_staging(spark: SparkSession, sink_path: str) -> int:
     """Remove orphaned write-staging dirs a killed predecessor left under
-    the sink (``.spark-staging-<uuid>`` from dynamic partition overwrite,
-    ``_temporary`` from the classic FileOutputCommitter).
+    the sink (``_temporary`` from the classic FileOutputCommitter the
+    append uses, ``.spark-staging-<uuid>`` from a dynamic partition
+    overwrite).
 
     A SIGKILL between staging and commit strands the full staged output —
     at 100 TB that is an entire extra copy of the sink per crash, and it
@@ -80,38 +87,40 @@ def _gc_orphan_staging(spark: SparkSession, sink_path: str) -> int:
 
 
 def _completed(spark: SparkSession, lineage_path: str,
-               extractor_version: str) -> dict[int, set[int]]:
-    """Buckets the ledger records as done by ``extractor_version``, each
-    with the ``doc_count``s its rows recorded.  An unwritten ledger means
-    nothing is done (first run); any other read failure propagates, since
-    swallowing it would recompute every bucket and append to a ledger that
-    still cannot be read."""
-    ledger = read_written(spark.read.schema(LINEAGE_DDL), lineage_path)
-    if ledger is None:
+               extractor_version: str, run_id: str) -> dict[int, int]:
+    """Buckets the ledger records for ``extractor_version``, each with the
+    largest ``doc_count`` another run recorded (0 if only ``run_id`` did:
+    a re-run of a finished run id).  An unwritten ledger means nothing is
+    recorded (first run); any other failure to resolve or read it
+    propagates, since swallowing it would append to a ledger that still
+    cannot be read.  The probe goes through the Hadoop FileSystem API, so
+    a URI-addressed ledger (file://, hdfs://, s3a://) is found too."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(lineage_path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return {}
-    done: dict[int, set[int]] = {}
-    # one small collect (≤ n_buckets rows per extractor version), no shuffle
-    for r in (ledger.filter(F.col("extractor_version") == extractor_version)
-                    .select("bucket", "doc_count").collect()):
-        done.setdefault(r["bucket"], set()).add(r["doc_count"])
+    done: dict[int, int] = {}
+    # one small collect (≤ n_buckets rows per run), no shuffle
+    for r in (spark.read.schema(LINEAGE_DDL).parquet(lineage_path)
+                    .filter(F.col("extractor_version") == extractor_version)
+                    .select("bucket", "doc_count", "run_id").collect()):
+        n = r["doc_count"] if r["run_id"] != run_id else 0
+        done[r["bucket"]] = max(done.get(r["bucket"], 0), n)
     return done
 
 
-def _bucketed_input(spark: SparkSession, df: DataFrame, n_buckets: int,
-                    done: dict[int, set[int]], only_buckets: list[int] | None,
-                    clustered: bool) -> tuple[DataFrame, bool]:
-    """Assign buckets, drop completed (and out-of-wave) buckets, and spread
-    an under-split scan over ``bucket``.  Returns the pending rows and
-    whether equal buckets now share a partition."""
+def _new_input(spark: SparkSession, df: DataFrame, sink_path: str,
+               now_utc: datetime, n_buckets: int, only_buckets: list[int] | None,
+               clustered: bool, resume: bool) -> tuple[DataFrame, bool]:
+    """Assign buckets, keep the wave's buckets, drop the documents whose id
+    is live in the sink, and spread an under-split scan over ``bucket``.
+    Returns the new rows and whether equal buckets now share a partition.
+    ``resume=False`` raises if the sink already holds rows."""
     df = with_bucket(df, n_buckets=n_buckets)
     if only_buckets is not None:
         # wave-scoped invocation: a driver loop that chunks the bucket space
         # across separate spark-submit runs bounds how much progress one
         # crash can lose to a single wave (the ledger lands per run)
         df = df.filter(F.col("bucket").isin([int(b) for b in only_buckets]))
-    if done:
-        # ≤ n_buckets literals: a plain filter, no join, no extra job
-        df = df.filter(~F.col("bucket").isin(sorted(done)))
 
     # kernel-stage parallelism guard + write clustering in one exchange:
     # news text compresses ~10x, so a default 128 MB scan split holds >1 GB
@@ -123,72 +132,84 @@ def _bucketed_input(spark: SparkSession, df: DataFrame, n_buckets: int,
     # the same but costs an extra full sampling pass over the input).  At
     # 100 TB the scan yields ~800k splits and the table layout should
     # provide the clustering instead (pass input_clustered_by_bucket=True).
+    # Counted on the scan: under AQE, ``df.rdd`` on the joined plan would
+    # run the sink-id broadcast as a job of its own.
     width = max(spark.sparkContext.defaultParallelism * 2, n_buckets)
-    if not clustered and df.rdd.getNumPartitions() < width:
+    spread = not clustered and df.rdd.getNumPartitions() < width
+
+    sink = sink_ids(df, "doc_id", sink_path, "bucket")
+    if sink is not None and not resume:
+        raise ValueError(f"sink at {sink_path} already holds rows;"
+                         " resume=False asserts a first run")
+    df = anti_join_seen(df, sink, now_utc, key=["bucket", "doc_id"],
+                        ts_col="first_seen")
+    if spread:
         return df.repartition(width, "bucket"), True
     return df, clustered
 
 
 def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
              lineage_path: str, extractor_version: str, run_id: str,
-             done: dict[int, set[int]]) -> JobResult:
-    """The bucketed write plus the ledger append.
+             done: dict[int, int]) -> JobResult:
+    """The bucketed append plus the ledger append.
 
     Orphaned staging dirs of a dead run are reclaimed first.  ``rows``
-    (carrying ``bucket``) replace their buckets in the sink via
-    dynamic partition overwrite; then ONE aggregate over a read-back of
-    the landed ``(bucket, status, byte_count, id)`` yields the ledger
-    rows — the ledger can never claim more than the sink holds (a crash
-    between write and append leaves an un-recorded bucket that the next
-    run idempotently rewrites).
+    (carrying ``bucket``, ``first_seen`` and ``run_id``) are appended to
+    the sink; then ONE aggregate over a read-back of the landed
+    ``(bucket, status, byte_count, id, first_seen, run_id)`` yields the
+    ledger rows — the ledger can never claim more than the sink holds.  A
+    ledger row is appended for each bucket this run added rows to, or that
+    no ledger row records yet.
 
-    The same aggregate counts non-null ids and distinct ids per bucket,
-    and the job raises before the ledger append when a newly written
-    bucket holds a duplicate id (null ids are legitimate repeats:
-    missing-guid skip rows), or when a completed bucket's landed
-    ``doc_count`` is none of the counts its ledger rows recorded.
+    The same aggregate guards the append.  The sink only grows, so a
+    recorded bucket whose rows from other runs number fewer than ``done``
+    says has lost a file, and the job raises before the ledger append.  It
+    also raises when a bucket to be recorded holds one id twice within one
+    ``first_seen`` (null ids are legitimate repeats: missing-guid skip
+    rows; a TTL republish carries a new ``first_seen``).
     """
     gc_staging = _gc_orphan_staging(spark, sink_path)
-    overwrite_partitions(rows, "bucket", sink_path)
+    append_partitions(rows, "bucket", sink_path)
 
-    # the schema just written: the read-back runs no schema-inference job
-    landed = (spark.read.schema(rows.schema).parquet(sink_path)
-              .select("bucket", "status", "byte_count", "id"))
-    lin = lineage_rows(landed, extractor_version, run_id,
-                       F.count("id").alias("id_count"),
-                       F.countDistinct("id").alias("id_distinct"))
+    # the schema just written: the read-back runs no schema-inference job,
+    # and the aggregate prunes it to the six columns it reads
+    lin = lineage_rows(
+        spark.read.schema(rows.schema).parquet(sink_path),
+        extractor_version, run_id,
+        F.count("id").alias("id_count"),
+        F.countDistinct(F.when(F.col("id").isNotNull(),
+                               F.struct("id", "first_seen"))).alias("id_distinct"),
+        F.count(F.when(F.col("run_id") == run_id, 1)).alias("run_count"))
     # the collected aggregate (≤ n_buckets rows) carries ok_count per
-    # bucket, so the published total needs no second sink scan.  Only
-    # buckets NOT already recorded get appended — the read-back sees the
-    # whole sink, including completed buckets.
+    # bucket, so the published total needs no second sink scan
     lin_rows = lin.collect()
-    new_rows = [r for r in lin_rows if r["bucket"] not in done]
+    earlier = {r["bucket"]: r["doc_count"] - r["run_count"] for r in lin_rows}
+    torn = sorted(b for b, n in done.items() if earlier.get(b, 0) < n)
+    if torn:
+        # a removed file reads as missing rows, whose ids are no longer
+        # live: this run has appended again those its input still holds
+        raise RuntimeError(
+            f"recorded sink buckets {torn} hold fewer rows from earlier runs"
+            f" than their ledger recorded: {DAMAGED}.  This run appended"
+            " again the lost ids its input holds and recorded nothing; run"
+            " again to check the repaired buckets")
+    new_rows = [r for r in lin_rows if r["bucket"] not in done or r["run_count"]]
     dup_buckets = sorted(r["bucket"] for r in new_rows
                          if r["id_count"] != r["id_distinct"])
-    doc_counts = {r["bucket"]: r["doc_count"] for r in lin_rows}
-    torn = sorted(b for b, recorded in done.items()
-                  if doc_counts.get(b, 0) not in recorded)
-    if torn:
-        # Spark skips a zero-length file without a word, so an emptied or
-        # removed file of a completed bucket reads as missing rows, and
-        # the resume skip would never rewrite the bucket
-        raise RuntimeError(
-            f"completed sink buckets {torn} hold a row count their ledger"
-            " rows never recorded: a sink file was emptied, cut or removed;"
-            " rerun with resume=False to rewrite every bucket")
     if dup_buckets:
         # the clustered-layout promise (equal ids share one scan split, so
         # partition-local dedup is globally correct) is trusted, not
         # planned; a violated layout surfaces here.  Raising before the
-        # append leaves these buckets un-recorded, so the next run rewrites
-        # them.
+        # append leaves these buckets un-recorded, and they raise again
+        # until the duplicate rows are removed.
         raise RuntimeError(
             f"duplicate ids landed in sink buckets {dup_buckets}: the"
-            " input layout violated the clustering promise; rerun with"
+            " input layout violated the clustering promise; delete those"
+            f" buckets' rows of run_id={run_id!r} and rerun with"
             " input_clustered_by_bucket=False")
     if new_rows:
         (spark.createDataFrame(new_rows, schema=lin.schema)
-              .drop("id_count", "id_distinct")
+              .drop("id_count", "id_distinct", "run_count")
               .coalesce(1).write.mode("append").parquet(lineage_path))
     return JobResult(
         published_count=int(sum(r["ok_count"] for r in lin_rows)),
@@ -211,35 +232,43 @@ def run_extraction_job(
     input_clustered_by_bucket: bool = False,
     only_buckets: list[int] | None = None,
 ) -> JobResult:
-    """Run (or resume) the extraction pipeline over ``docs``.
+    """Run the extraction pipeline over ``docs``, appending to the sink
+    every document whose id is not live in it yet.
 
-    Idempotent: re-running with the same inputs produces a byte-identical
-    sink; a partially-completed previous run is finished by processing only
-    buckets absent from the lineage table.
+    Idempotent: re-running with the same inputs appends nothing; a run
+    that crashed part-way is finished by running again (its landed ids are
+    live), and a new input snapshot lands only its new ids.  A document
+    without a guid has no id the anti-join can match, so each run appends
+    one more skip row for it.  ``resume=False`` asserts a first run: it
+    raises ``ValueError`` if the sink already holds rows.  ``run_id`` names
+    one run; it tells the run's rows apart from earlier ones.
 
     The sink holds the FULL extracted rows — ordered spans, article fields,
-    status, byte counts — partitioned by the resume bucket (north rule:
-    "writes extracted spans plus per-partition lineage rows").  The
-    reference's 6-column ``news`` table is the ``to_publish_news``
-    projection over it, not a second copy.
+    status, byte counts, ``first_seen`` (= ``now_utc``) and ``run_id`` —
+    partitioned by the lineage bucket (north rule: "writes extracted spans
+    plus per-partition lineage rows").  The reference's 6-column ``news``
+    table is the ``to_publish_news`` projection over it, not a second copy.
 
     Single-pass plan (shuffle accounting at 100 TB):
     - when the input table is laid out clustered by ``bucket =
       pmod(xxhash64(doc_id), n_buckets)`` (Iceberg ``bucket(doc_id)``
-      partition transform), the whole job is shuffle-free: narrow kernel
-      map -> partitioned write, with dedup folded into the kernel pass
+      partition transform), the kernel path is shuffle-free: narrow kernel
+      map -> partitioned append, with dedup folded into the kernel pass
       (equal ids share a partition by layout; a violated layout raises
       before the ledger append);
     - otherwise ONE hash-repartition on ``bucket`` both fixes kernel-stage
       parallelism (compressed text under-splits the scan) and clusters the
       write (1 file per bucket instead of tasks x buckets);
+    - the sink-id read takes only ``(id, first_seen, bucket)`` and joins
+      before the kernel, so live documents are never extracted;
     - lineage derives from a column-pruned read-back of the written sink
-      (bucket/status/byte_count/id only) — no persist of the heavy
-      extraction output, the kernel runs exactly once.
+      — no persist of the heavy extraction output, the kernel runs
+      exactly once.
     """
-    done = _completed(spark, lineage_path, extractor_version) if resume else {}
-    docs_b, clustered = _bucketed_input(spark, docs, n_buckets, done,
-                                        only_buckets, input_clustered_by_bucket)
+    done = _completed(spark, lineage_path, extractor_version, run_id)
+    docs_b, clustered = _new_input(spark, docs, sink_path, now_utc, n_buckets,
+                                   only_buckets, input_clustered_by_bucket,
+                                   resume)
 
     extracted = extract_articles(docs_b.select("doc_id", "spans"),
                                  now_utc=now_utc,
@@ -250,7 +279,9 @@ def run_extraction_job(
     # mapInArrow replaces the schema, so re-derive the bucket from the
     # stable key (same hash expression — no join needed); skip rows carry
     # their doc_id as ``id`` so failures attribute to the right bucket.
-    extracted = with_bucket(extracted, n_buckets=n_buckets, key="id")
+    extracted = (with_bucket(extracted, n_buckets=n_buckets, key="id")
+                 .withColumn("first_seen", F.lit(now_utc))
+                 .withColumn("run_id", F.lit(run_id)))
 
     # the text column is byte-for-byte derivable from the text spans
     # (kernel joins them with "\n") — storing both would double the write
@@ -272,7 +303,7 @@ def run_feed_ingestion_job(
 ) -> JobResult:
     """The complete reference user story in one batch call: raw feed XML
     snapshots (feed_id, xml) -> item rows -> kernel documents -> the full
-    idempotent extraction pipeline (resume, dedup, bucketed sink, lineage).
+    idempotent extraction pipeline (dedup, bucketed sink, lineage).
 
     A news-rss user switches to this engine by landing their fetched feed
     bodies as a table and invoking this; everything downstream (S1-S7,

@@ -244,9 +244,10 @@ class TestLineageAndResume:
     def test_resume_spark_job_budget(self, spark, paths):
         """A half-completed resume runs a fixed number of Spark jobs; a
         change that adds a pass over the data shows up here.  Measured on
-        Spark 4.1.2: 9 jobs -- the ledger collect; 4 for the bucket
-        exchange, the in-run dedup exchange and the write; 3 for the
-        lineage aggregate with its distinct-id count; the ledger append."""
+        Spark 4.1.2: 10 jobs -- the ledger collect; the broadcast of the
+        sink's live ids; 4 for the bucket exchange, the in-run dedup
+        exchange and the write; 3 for the lineage aggregate with its
+        distinct-id count; the ledger append."""
         sink, lineage = paths
         docs = documents_df(spark, 120, seed=3, num_partitions=4)
         run_extraction_job(spark, docs, sink, lineage, NOW, "crash",
@@ -259,32 +260,48 @@ class TestLineageAndResume:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert res.skipped_buckets == 4 and res.lineage_buckets == 4
-        assert len(sc.statusTracker().getJobIdsForGroup("resume-budget")) <= 9
+        assert len(sc.statusTracker().getJobIdsForGroup("resume-budget")) <= 10
 
     @pytest.mark.parametrize("cut,error", [
         ("half", "FAILED_READ_FILE"),
         ("zero", "a sink file was emptied, cut or removed"),
-    ], ids=["half", "zero"])
+        ("removed", "a sink file was emptied, cut or removed"),
+    ], ids=["half", "zero", "removed"])
     def test_damaged_sink_file_raises_on_resume(self, spark, paths, cut,
                                                 error):
-        """A completed bucket whose sink file was cut to half its length or
-        emptied makes the resume raise, and the ledger gains no row.  Spark
-        skips a zero-length file without a word, so the resume skip would
-        otherwise keep that bucket short for good."""
+        """A recorded bucket whose sink file was cut to half its length,
+        emptied or removed makes the resume raise, and the ledger gains no
+        row.  Spark skips a zero-length file without a word, so the bucket
+        would otherwise stay short for good.  A cut or emptied file raises
+        on the sink-id read, before the sink is touched; a removed one is
+        caught by the ledger's row count after the append."""
         import glob
         import os
+        from pathlib import Path
         sink, lineage = paths
         docs = documents_df(spark, 200, seed=3)
         run_extraction_job(spark, docs, sink, lineage, NOW, "crash",
                            n_buckets=8, only_buckets=[0, 1, 2, 3])
         for victim in glob.glob(f"{sink}/bucket=0/*.parquet"):
+            if cut == "removed":
+                os.remove(victim)
+                continue
             with open(victim, "r+b") as f:
                 f.truncate(os.path.getsize(victim) // 2 if cut == "half" else 0)
+
+        def sink_bytes():
+            return {os.path.relpath(f, sink): Path(f).read_bytes()
+                    for f in glob.glob(f"{sink}/**", recursive=True)
+                    if os.path.isfile(f)}
+
+        before = sink_bytes()
         ledger_rows = spark.read.parquet(lineage).count()
         with pytest.raises(Exception, match=error):
             run_extraction_job(spark, docs, sink, lineage, NOW, "r",
                                n_buckets=8)
         assert spark.read.parquet(lineage).count() == ledger_rows
+        if cut != "removed":
+            assert sink_bytes() == before
 
     def test_lineage_counts(self, spark, paths):
         sink, lineage = paths
@@ -380,6 +397,58 @@ class TestFeedIngestionJob:
                                       n_buckets=4)
         assert res2.skipped_buckets == 4
         assert res2.published_count == 20
+
+    def test_overlapping_snapshots_land_every_guid_once(self, spark, tmp_path):
+        """A second, overlapping feed snapshot into the same sink lands each
+        new guid and leaves the first run's rows as they were.  A guid-less
+        item has no id the anti-join can match, so each run appends one
+        more skip row for it, without raising.  The second run costs 8
+        Spark jobs on Spark 4.1.2, one of them the broadcast of the sink's
+        live ids.  ``resume=False`` then refuses the sink, which already
+        holds rows."""
+        from collections import Counter
+
+        from news_rss_spark.plans.pipeline import run_feed_ingestion_job
+        sink, lineage = str(tmp_path / "s"), str(tmp_path / "l")
+
+        def run(items, run_id, **kw):
+            body = "".join(
+                f"<item><guid>https://news.example/{i}</guid>"
+                f"<title>Story {i}</title>"
+                f"<description>What happened in story {i}.</description>"
+                "</item>" for i in items)
+            xml = ('<?xml version="1.0" encoding="UTF-8"?><rss version="2.0">'
+                   f"<channel><title>World</title>{body}<item><title>No"
+                   " guid</title><description>Lost.</description></item>"
+                   "</channel></rss>")
+            feeds = spark.createDataFrame([("world", xml)],
+                                          "feed_id string, xml string")
+            return run_feed_ingestion_job(spark, feeds, sink, lineage, NOW,
+                                          run_id, n_buckets=4, **kw)
+
+        def rows():
+            return Counter(tuple(r) for r in
+                           spark.read.parquet(sink).drop("spans").collect())
+
+        run(range(0, 12), "s0")
+        first = rows()
+        sc = spark.sparkContext
+        sc.setJobGroup("second-snapshot", "overlapping snapshot")
+        try:
+            res = run(range(6, 20), "s1")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        after = rows()
+        assert not first - after
+        ok = sorted(r["id"] for r in spark.read.parquet(sink)
+                    .filter(F.col("status") == "ok").select("id").collect())
+        assert ok == sorted(f"https://news.example/{i}" for i in range(20))
+        assert spark.read.parquet(sink).filter(F.col("id").isNull()).count() == 2
+        assert res.published_count == 20
+        assert len(sc.statusTracker().getJobIdsForGroup("second-snapshot")) <= 8
+        with pytest.raises(ValueError, match="first run"):
+            run(range(20, 22), "s2", resume=False)
+        assert rows() == after
 
 
 class TestClusteredLayoutGuard:
