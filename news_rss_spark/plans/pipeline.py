@@ -3,11 +3,13 @@
 
     read documents (doc_id, spans)                 # S1: feed fetch -> pre-landed table scan
       -> with_bucket                               # stable logical partitioning
+      -> [coalesce to the scan's bytes]            # clustered input: see _sized
       -> LEFT ANTI (bucket, doc_id) live sink ids  # D1/D2 cross-run, TTL on first_seen
-      -> [hash-repartition by bucket]              # only if the scan under-splits
+      -> [hash-repartition by bucket]              # unclustered, under-split scan only
       -> mapInArrow extract + in-kernel dedup      # P1-P9 + L1-L3 + D1 within-run
       -> append partitionBy(bucket) + first_seen, run_id  # S4/S5 publish
       -> one groupBy(bucket) over the landed sink  # D3 ledger + damage and duplicate-id guards
+         (its read-back coalesced to its bytes)
 
 Cross-run dedup (D1) is the poller's rule (``operators.dedup``): documents
 whose id is live in the sink never reach the kernel, and the sink is only
@@ -18,6 +20,16 @@ Catalyst-optimized DataFrame ops; the only Python is the Arrow-batched
 kernel.  The sink is partitioned parquet written by
 ``operators.dedup.append_partitions``; an Iceberg sink would be a change
 to that write helper.
+
+Stage sizing: every Python task pays a fixed worker set-up (about 0.25 s
+measured on a 4-vCPU host), and a scan of small files gives one task per
+file, so a stage fed by a file scan runs on ``max(defaultParallelism,
+ceil(sizeInBytes / spark.sql.files.maxPartitionBytes))`` partitions: the
+clustered kernel input and the read-back under the lineage aggregate are
+coalesced to that width when they have more splits (``_sized``).  A
+stage fed by a shuffle is sized by AQE: the unclustered path repartitions
+by ``bucket`` with no number.  The ledger rows go to Spark as an Arrow
+table, read on the JVM side, so the ledger append runs no Python worker.
 """
 
 from __future__ import annotations
@@ -25,6 +37,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -108,13 +121,37 @@ def _completed(spark: SparkSession, lineage_path: str,
     return done
 
 
+def _sized(df: DataFrame) -> DataFrame:
+    """``df`` on ``max(defaultParallelism, ceil(sizeInBytes /
+    spark.sql.files.maxPartitionBytes))`` partitions, merged without a
+    shuffle, when its scan has more splits than that.
+
+    A scan of many small files runs one task per file, and each Python
+    task pays the worker set-up again.  ``sizeInBytes`` is the optimizer's
+    estimate (no IO).  ``coalesce`` merges whole partitions, so rows that
+    shared a split still share one.  Left as they are: a plan without
+    file statistics (its estimate is ``spark.sql.defaultSizeInBytes``), a
+    very large input (its splits are as many as its bytes ask for) and a
+    plan holding a shuffle, which AQE sizes (counting its partitions here
+    would run the shuffle as a job of its own)."""
+    spark = df.sparkSession
+    qe = df._jdf.queryExecution()
+    size = int(qe.optimizedPlan().stats().sizeInBytes())
+    per_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    width = max(spark.sparkContext.defaultParallelism, -(-size // per_split))
+    if (qe.executedPlan().nodeName() == "AdaptiveSparkPlan"
+            or df.rdd.getNumPartitions() <= width):
+        return df
+    return df.coalesce(width)
+
+
 def _new_input(spark: SparkSession, df: DataFrame, sink_path: str,
                now_utc: datetime, n_buckets: int, only_buckets: list[int] | None,
                clustered: bool, resume: bool) -> tuple[DataFrame, bool]:
-    """Assign buckets, keep the wave's buckets, drop the documents whose id
-    is live in the sink, and spread an under-split scan over ``bucket``.
-    Returns the new rows and whether equal buckets now share a partition.
-    ``resume=False`` raises if the sink already holds rows."""
+    """Assign buckets, keep the wave's buckets, size the stage, and drop
+    the documents whose id is live in the sink.  Returns the new rows and
+    whether equal buckets now share a partition.  ``resume=False`` raises
+    if the sink already holds rows."""
     df = with_bucket(df, n_buckets=n_buckets)
     if only_buckets is not None:
         # wave-scoped invocation: a driver loop that chunks the bucket space
@@ -122,20 +159,20 @@ def _new_input(spark: SparkSession, df: DataFrame, sink_path: str,
         # crash can lose to a single wave (the ledger lands per run)
         df = df.filter(F.col("bucket").isin([int(b) for b in only_buckets]))
 
-    # kernel-stage parallelism guard + write clustering in one exchange:
-    # news text compresses ~10x, so a default 128 MB scan split holds >1 GB
-    # of raw HTML and the planner may emit far fewer splits than the cluster
-    # has cores — fine for a scan, fatal for a CPU-heavy Arrow kernel stage.
-    # Hash-partitioning on bucket keeps equal buckets (hence equal doc_ids)
-    # together, which makes the in-kernel dedup global and bounds the
-    # partitioned write to ~1 file per bucket (a range partitioner would do
-    # the same but costs an extra full sampling pass over the input).  At
-    # 100 TB the scan yields ~800k splits and the table layout should
-    # provide the clustering instead (pass input_clustered_by_bucket=True).
-    # Counted on the scan: under AQE, ``df.rdd`` on the joined plan would
-    # run the sink-id broadcast as a job of its own.
-    width = max(spark.sparkContext.defaultParallelism * 2, n_buckets)
-    spread = not clustered and df.rdd.getNumPartitions() < width
+    # kernel-stage width, decided on the scan (under AQE, ``df.rdd`` on
+    # the joined plan would run the sink-id broadcast as a job of its
+    # own).  Clustered input is coalesced to its bytes (``_sized``); whole
+    # splits merge, so each bucket stays in one task.  Unclustered input
+    # with fewer splits than twice the cores (news text compresses ~10x, so
+    # a 128 MB split holds >1 GB of raw HTML) is hash-partitioned on
+    # bucket: the one exchange clusters the write and makes the in-kernel
+    # dedup global, and with no partition number AQE sizes it to the
+    # shuffle's bytes.  At 100 TB the table layout should provide the
+    # clustering instead (pass input_clustered_by_bucket=True).
+    if clustered:
+        df = _sized(df)
+    spread = (not clustered and df.rdd.getNumPartitions()
+              < 2 * spark.sparkContext.defaultParallelism)
 
     sink = sink_ids(df, "doc_id", sink_path, "bucket")
     if sink is not None and not resume:
@@ -144,7 +181,7 @@ def _new_input(spark: SparkSession, df: DataFrame, sink_path: str,
     df = anti_join_seen(df, sink, now_utc, key=["bucket", "doc_id"],
                         ts_col="first_seen")
     if spread:
-        return df.repartition(width, "bucket"), True
+        return df.repartition("bucket"), True
     return df, clustered
 
 
@@ -159,7 +196,8 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
     ``(bucket, status, byte_count, id, first_seen, run_id)`` yields the
     ledger rows — the ledger can never claim more than the sink holds.  A
     ledger row is appended for each bucket this run added rows to, or that
-    no ledger row records yet.
+    no ledger row records yet.  The read-back, one split per sink file, is
+    coalesced to its bytes (``_sized``).
 
     The same aggregate guards the append.  The sink only grows, so a
     recorded bucket whose rows from other runs number fewer than ``done``
@@ -174,7 +212,7 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
     # the schema just written: the read-back runs no schema-inference job,
     # and the aggregate prunes it to the six columns it reads
     lin = lineage_rows(
-        spark.read.schema(rows.schema).parquet(sink_path),
+        _sized(spark.read.schema(rows.schema).parquet(sink_path)),
         extractor_version, run_id,
         F.count("id").alias("id_count"),
         F.countDistinct(F.when(F.col("id").isNotNull(),
@@ -208,8 +246,12 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
             f" buckets' rows of run_id={run_id!r} and rerun with"
             " input_clustered_by_bucket=False")
     if new_rows:
-        (spark.createDataFrame(new_rows, schema=lin.schema)
-              .drop("id_count", "id_distinct", "run_count")
+        # an Arrow table is read on the JVM side (a local relation); a
+        # list of rows would go through a Python RDD and its worker
+        ledger = pa.Table.from_pylist([r.asDict() for r in new_rows])
+        (spark.createDataFrame(
+            ledger.drop_columns(["id_count", "id_distinct", "run_count"]),
+            schema=LINEAGE_DDL)
               .coalesce(1).write.mode("append").parquet(lineage_path))
     return JobResult(
         published_count=int(sum(r["ok_count"] for r in lin_rows)),
@@ -258,7 +300,10 @@ def run_extraction_job(
       before the ledger append);
     - otherwise ONE hash-repartition on ``bucket`` both fixes kernel-stage
       parallelism (compressed text under-splits the scan) and clusters the
-      write (1 file per bucket instead of tasks x buckets);
+      write (1 file per bucket instead of tasks x buckets), and AQE sizes
+      it to the shuffle's bytes;
+    - a clustered scan of many small files is coalesced to its bytes, so
+      the kernel stage does not pay the Python worker set-up per file;
     - the sink-id read takes only ``(id, first_seen, bucket)`` and joins
       before the kernel, so live documents are never extracted;
     - lineage derives from a column-pruned read-back of the written sink

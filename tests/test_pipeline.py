@@ -10,7 +10,7 @@ import pytest
 
 from news_rss_spark.operators.dedup import anti_join_seen, dedup_within_run
 from news_rss_spark.operators.extraction import extract_articles, to_publish_news, with_text_from_spans
-from news_rss_spark.operators.lineage import with_bucket
+from news_rss_spark.operators.lineage import LINEAGE_DDL, with_bucket
 from news_rss_spark.plans.pipeline import run_extraction_job
 from news_rss_spark.sources.synth import SPANS_DDL, documents_df
 from tests.fixture_docs import fixture_corpus
@@ -314,6 +314,7 @@ class TestLineageAndResume:
         assert agg["d"] == 120
         assert agg["o"] + agg["f"] == 120
         assert agg["f"] >= 0
+        assert lin.dtypes == spark.createDataFrame([], LINEAGE_DDL).dtypes
 
 
 class TestSaltedAgg:
@@ -449,6 +450,78 @@ class TestFeedIngestionJob:
         with pytest.raises(ValueError, match="first run"):
             run(range(20, 22), "s2", resume=False)
         assert rows() == after
+
+
+class TestStageSizing:
+    def test_clustered_small_file_scan_runs_default_parallelism_tasks(
+            self, spark, tmp_path):
+        """A clustered input of 16 small parquet files, read one file per
+        split (``maxPartitionBytes = openCostInBytes = 16m``, as the
+        benchmark reads it), is coalesced to its bytes: its kernel write
+        stage runs ``defaultParallelism`` tasks, each paying the Python
+        worker set-up once, and lands the rows the uncoalesced 16-task
+        plan lands."""
+        from collections import Counter
+
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        docs = with_bucket(documents_df(spark, 160, seed=5),
+                           n_buckets=16).toArrow()
+        inp = tmp_path / "in"
+        inp.mkdir()
+        for k in range(16):
+            pq.write_table(docs.filter(pc.equal(docs["bucket"], k))
+                           .drop_columns(["bucket"]),
+                           str(inp / f"part-{k:05d}.parquet"))
+        sc = spark.sparkContext
+        store = sc._jsc.sc().statusStore()
+
+        def write_stage_tasks(df, name):
+            """Tasks of the one stage in the job group that reads input and
+            writes output: the kernel stage and the sink write."""
+            sc.setJobGroup(name, "stage sizing")
+            try:
+                run_extraction_job(spark, df, str(tmp_path / name / "s"),
+                                   str(tmp_path / name / "l"), NOW, name,
+                                   n_buckets=16,
+                                   input_clustered_by_bucket=True)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            tasks = []
+            for job in sc.statusTracker().getJobIdsForGroup(name):
+                for sid in sc.statusTracker().getJobInfo(job).stageIds:
+                    if sc.statusTracker().getStageInfo(sid) is None:
+                        continue
+                    st = store.lastStageAttempt(sid)
+                    if st.inputBytes() and st.outputBytes():
+                        tasks.append(st.numTasks())
+            return tasks
+
+        keys = {"spark.sql.files.maxPartitionBytes": "16m",
+                "spark.sql.files.openCostInBytes": "16m"}
+        prev = {k: spark.conf.get(k) for k in keys}
+        try:
+            for k, v in keys.items():
+                spark.conf.set(k, v)
+            scan = spark.read.parquet(str(inp))
+            assert scan.rdd.getNumPartitions() == 16
+            sized = write_stage_tasks(scan, "sized")
+            # the same 16 splits without file statistics: left uncoalesced
+            whole = write_stage_tasks(
+                spark.createDataFrame(scan.rdd, scan.schema), "whole")
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+        assert sized == [sc.defaultParallelism]
+        assert whole == [16]
+
+        def rows(name):
+            return Counter(repr(r) for r in spark.read
+                           .parquet(str(tmp_path / name / "s"))
+                           .drop("run_id").collect())
+
+        assert rows("sized") == rows("whole")
 
 
 class TestClusteredLayoutGuard:
