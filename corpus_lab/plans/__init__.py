@@ -1,1 +1,1 @@
-"""Batch jobs outside the ingestion path: page bundles, WARC, training data, compaction."""
+"""Batch jobs outside the ingestion path: page bundles, WARC, training data."""

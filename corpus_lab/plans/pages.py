@@ -110,8 +110,8 @@ def run_warc_extraction_job(
 ) -> JobResult:
     """The web-crawl user story in one batch call: WARC archives
     (file_id, content bytes) -> HTTP 200 HTML records -> kernel documents
-    -> the full idempotent extraction pipeline (resume, dedup, bucketed
-    sink, lineage).
+    -> the full idempotent extraction pipeline (resume, dedup, flat sink,
+    lineage).
 
     Same single-pass plan as ``run_extraction_job``; the WARC record
     parse (kernel/warcx.py — gzip members, Content-Length slicing) is one

@@ -14,9 +14,9 @@ that dataflow Spark-first:
   the sink table with a TTL retention predicate
   (news_rss_spark.operators.dedup);
 - the interval poller becomes a batch (or availableNow streaming) trigger;
-- the publisher becomes an append-only partitioned parquet sink (an
-  Iceberg sink would be a change to the one write helper,
-  ``operators.dedup.append_partitions``) with per-partition lineage rows
+- the publisher becomes an append-only flat parquet sink (an Iceberg
+  sink would be a change to the one write helper,
+  ``operators.dedup.append_rows``) with per-bucket lineage rows
   (news_rss_spark.plans.pipeline); a crash-resume is a re-run, since the
   sink's live ids decide what is appended.
 

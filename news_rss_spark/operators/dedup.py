@@ -16,12 +16,13 @@ duplicates -> ``dedup_within_run`` (first occurrence wins).  Cross-run
 duplicates -> :func:`anti_join_seen` against :func:`sink_ids`: a LEFT ANTI
 join against the sink's ids whose ``first_seen`` insertion time lies
 within the TTL — exactly the moka/Redis expiry semantics.  What survives
-is appended with :func:`append_partitions`; no sink row is ever
-rewritten, so a replay, a crash-resume or a new input appends only ids
-that are not live.
+is appended with :func:`append_rows`; no sink row is ever rewritten,
+so a replay, a crash-resume or a new input appends only ids that are
+not live.  Both sinks are flat parquet dirs (``bucket`` and ``batch_id``
+are ordinary columns), so a read lists one dir and starts no listing job.
 
 Scale notes:
-- the sink-id read takes three columns with the schema the sink writes,
+- the sink-id read takes two columns with the schema the sink writes,
   so Spark runs no schema-inference job; the anti-join is not reduced to
   distinct keys, because a left-anti join drops the same rows whatever
   the duplicates on its right side.  AQE converts the join to broadcast
@@ -83,25 +84,31 @@ def anti_join_seen(
     return df.join(keys, on=key, how="left_anti")
 
 
-def sink_ids(df: DataFrame, key: str, sink_path: str,
-             partition_col: str) -> DataFrame | None:
+def sink_ids(df: DataFrame, key: str, sink_path: str) -> DataFrame | None:
     """The dedup state of the sink at ``sink_path`` for ``df``: its rows'
-    ``(id, first_seen, partition_col)``, with ``id`` named ``key`` and
-    typed as ``df[key]``; None when the sink holds no data file yet.
+    ``(id, first_seen)``, with ``id`` named ``key`` and typed as
+    ``df[key]``; None when the sink holds no data file yet.
     :func:`anti_join_seen` with ``ts_col="first_seen"`` keeps the rows of
     ``df`` whose key is not live in it.
 
-    Raises on a zero-length data file: Spark's scan skips one without a
-    word, so its ids would drop out of the anti-join and be appended again.
-    One Hadoop FileSystem glob (any scheme), not a Spark job; hidden files
-    (checksums, staging dirs) are not data.  The read then takes only the
-    three columns, typed as the sink writes them, so it infers nothing."""
+    One Hadoop FileSystem glob (any scheme), not a Spark job; hidden
+    entries (checksums, staging dirs) are not data.  Raises on a
+    zero-length data file, which Spark's scan skips without a word, and on
+    a directory, since Spark reads only the partition directories of a dir
+    that also holds files: either way ids would drop out of the anti-join
+    and be appended again.  The read takes only the two columns, typed as
+    the sink writes them, so it infers nothing."""
     spark = df.sparkSession
-    pattern = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{sink_path}/{partition_col}=*/[!._]*")
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(f"{sink_path}/[!._]*")
     fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
     files = fs.globStatus(pattern) or []
     for st in files:
+        if st.isDirectory():
+            raise RuntimeError(
+                f"sink {sink_path} holds the directory"
+                f" {st.getPath().getName()}: the sink is flat parquet, and"
+                " Spark would read only its directories; move their files"
+                " out or use another sink path")
         if st.getLen() == 0:
             raise RuntimeError(
                 f"sink file {st.getPath().toString()} is empty: {DAMAGED};"
@@ -109,22 +116,19 @@ def sink_ids(df: DataFrame, key: str, sink_path: str,
     if not files:
         return None
     id_type = df.schema[key].dataType.simpleString()
-    return (spark.read.schema(f"id {id_type}, first_seen timestamp,"
-                              f" {partition_col} int")
+    return (spark.read.schema(f"id {id_type}, first_seen timestamp")
             .parquet(sink_path).withColumnRenamed("id", key))
 
 
-def append_partitions(df: DataFrame, partition_col: str, path: str) -> None:
+def append_rows(df: DataFrame, path: str) -> None:
     """The sink write shared by the batch job and the poller: append
-    ``df``'s rows under their ``partition_col`` partitions.  Appending
-    never truncates, so it is safe under any session's overwrite mode.
+    ``df``'s rows to the flat parquet dir at ``path``, one file per write
+    task.  Appending never truncates, so it is safe under any session's
+    overwrite mode.
 
     lz4 is a per-write option, NOT a session conf, so the caller's session
     (and any concurrent job sharing it) is left as it was: snappy-java's
     JNI path collapses under many writer threads (measured 3.6x slower at
-    local[32]); storage-optimized tables can compact to zstd out-of-band.
+    local[32]).
     """
-    (df.write.mode("append")
-       .option("compression", "lz4")
-       .partitionBy(partition_col)
-       .parquet(path))
+    df.write.mode("append").option("compression", "lz4").parquet(path)

@@ -6,10 +6,10 @@ Protocol:
 - every document is assigned a stable logical partition ``bucket =
   pmod(xxhash64(doc_id), n_buckets)`` — independent of Spark's physical
   task ids, so it survives re-planning and cluster-size changes;
-- the sink is append-only, written ``partitionBy(bucket)``; what a run
-  appends is decided by the ids already live in the sink
-  (``operators.dedup.sink_ids``), not by this ledger, so a crash-resume, a
-  re-run and a new input snapshot are one operation;
+- the sink is append-only flat parquet with ``bucket`` an ordinary
+  column; what a run appends is decided by the ids already live in the
+  sink (``operators.dedup.sink_ids``), not by this ledger, so a
+  crash-resume, a re-run and a new input snapshot are one operation;
 - after data lands, one ledger row per bucket the run changed (or that
   no row records yet) is appended: (bucket, doc_count, ok_count,
   failure_count, byte_count, extractor_version, run_id), with

@@ -4,10 +4,10 @@
     read documents (doc_id, spans)                 # S1: feed fetch -> pre-landed table scan
       -> with_bucket                               # stable logical partitioning
       -> [coalesce to the scan's bytes]            # clustered input: see _sized
-      -> LEFT ANTI (bucket, doc_id) live sink ids  # D1/D2 cross-run, TTL on first_seen
+      -> LEFT ANTI doc_id live sink ids            # D1/D2 cross-run, TTL on first_seen
       -> [hash-repartition by bucket]              # unclustered, under-split scan only
       -> mapInArrow extract + in-kernel dedup      # P1-P9 + L1-L3 + D1 within-run
-      -> append partitionBy(bucket) + first_seen, run_id  # S4/S5 publish
+      -> append + bucket, first_seen, run_id       # S4/S5 publish, flat parquet
       -> one groupBy(bucket) over the landed sink  # D3 ledger + damage and duplicate-id guards
          (its read-back coalesced to its bytes)
 
@@ -17,9 +17,9 @@ appended to, so a crash-resume, a re-run and a new input snapshot are one
 operation.  The ledger gates no work; it records lineage and lets a run
 notice a lost sink file.  All relational steps are stock
 Catalyst-optimized DataFrame ops; the only Python is the Arrow-batched
-kernel.  The sink is partitioned parquet written by
-``operators.dedup.append_partitions``; an Iceberg sink would be a change
-to that write helper.
+kernel.  The sink is flat parquet with ``bucket`` an ordinary column,
+written by ``operators.dedup.append_rows`` one file per write task; an
+Iceberg sink would be a change to that write helper.
 
 Stage sizing: every Python task pays a fixed worker set-up (about 0.25 s
 measured on a 4-vCPU host), and a scan of small files gives one task per
@@ -45,7 +45,7 @@ from news_rss_spark import EXTRACTOR_VERSION
 from news_rss_spark.operators.dedup import (
     DAMAGED,
     anti_join_seen,
-    append_partitions,
+    append_rows,
     dedup_within_run,
     sink_ids,
 )
@@ -100,8 +100,8 @@ def _gc_orphan_staging(spark: SparkSession, sink_path: str) -> int:
 
 
 def _completed(spark: SparkSession, lineage_path: str,
-               extractor_version: str, run_id: str) -> dict[int, int]:
-    """Buckets the ledger records for ``extractor_version``, each with the
+               run_id: str) -> dict[int, int]:
+    """Buckets the ledger records for ``EXTRACTOR_VERSION``, each with the
     largest ``doc_count`` another run recorded (0 if only ``run_id`` did:
     a re-run of a finished run id).  An unwritten ledger means nothing is
     recorded (first run); any other failure to resolve or read it
@@ -114,7 +114,7 @@ def _completed(spark: SparkSession, lineage_path: str,
     done: dict[int, int] = {}
     # one small collect (≤ n_buckets rows per run), no shuffle
     for r in (spark.read.schema(LINEAGE_DDL).parquet(lineage_path)
-                    .filter(F.col("extractor_version") == extractor_version)
+                    .filter(F.col("extractor_version") == EXTRACTOR_VERSION)
                     .select("bucket", "doc_count", "run_id").collect()):
         n = r["doc_count"] if r["run_id"] != run_id else 0
         done[r["bucket"]] = max(done.get(r["bucket"], 0), n)
@@ -174,21 +174,21 @@ def _new_input(spark: SparkSession, df: DataFrame, sink_path: str,
     spread = (not clustered and df.rdd.getNumPartitions()
               < 2 * spark.sparkContext.defaultParallelism)
 
-    sink = sink_ids(df, "doc_id", sink_path, "bucket")
+    # ``bucket`` is a function of ``doc_id``, so the id alone is the key
+    sink = sink_ids(df, "doc_id", sink_path)
     if sink is not None and not resume:
         raise ValueError(f"sink at {sink_path} already holds rows;"
                          " resume=False asserts a first run")
-    df = anti_join_seen(df, sink, now_utc, key=["bucket", "doc_id"],
-                        ts_col="first_seen")
+    df = anti_join_seen(df, sink, now_utc, key="doc_id", ts_col="first_seen")
     if spread:
         return df.repartition("bucket"), True
     return df, clustered
 
 
 def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
-             lineage_path: str, extractor_version: str, run_id: str,
+             lineage_path: str, run_id: str,
              done: dict[int, int]) -> JobResult:
-    """The bucketed append plus the ledger append.
+    """The sink append plus the ledger append.
 
     Orphaned staging dirs of a dead run are reclaimed first.  ``rows``
     (carrying ``bucket``, ``first_seen`` and ``run_id``) are appended to
@@ -207,13 +207,13 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
     rows; a TTL republish carries a new ``first_seen``).
     """
     gc_staging = _gc_orphan_staging(spark, sink_path)
-    append_partitions(rows, "bucket", sink_path)
+    append_rows(rows, sink_path)
 
     # the schema just written: the read-back runs no schema-inference job,
     # and the aggregate prunes it to the six columns it reads
     lin = lineage_rows(
         _sized(spark.read.schema(rows.schema).parquet(sink_path)),
-        extractor_version, run_id,
+        EXTRACTOR_VERSION, run_id,
         F.count("id").alias("id_count"),
         F.countDistinct(F.when(F.col("id").isNotNull(),
                                F.struct("id", "first_seen"))).alias("id_distinct"),
@@ -242,9 +242,9 @@ def _publish(spark: SparkSession, rows: DataFrame, sink_path: str,
         # until the duplicate rows are removed.
         raise RuntimeError(
             f"duplicate ids landed in sink buckets {dup_buckets}: the"
-            " input layout violated the clustering promise; delete those"
-            f" buckets' rows of run_id={run_id!r} and rerun with"
-            " input_clustered_by_bucket=False")
+            " input layout violated the clustering promise; delete the"
+            f" sink files run_id={run_id!r} wrote (each file holds one"
+            " run's rows) and rerun with input_clustered_by_bucket=False")
     if new_rows:
         # an Arrow table is read on the JVM side (a local relation); a
         # list of rows would go through a Python RDD and its worker
@@ -270,7 +270,6 @@ def run_extraction_job(
     run_id: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
     resume: bool = True,
-    extractor_version: str = EXTRACTOR_VERSION,
     input_clustered_by_bucket: bool = False,
     only_buckets: list[int] | None = None,
 ) -> JobResult:
@@ -286,31 +285,31 @@ def run_extraction_job(
     one run; it tells the run's rows apart from earlier ones.
 
     The sink holds the FULL extracted rows — ordered spans, article fields,
-    status, byte counts, ``first_seen`` (= ``now_utc``) and ``run_id`` —
-    partitioned by the lineage bucket (north rule: "writes extracted spans
-    plus per-partition lineage rows").  The reference's 6-column ``news``
-    table is the ``to_publish_news`` projection over it, not a second copy.
+    status, byte counts, the lineage ``bucket``, ``first_seen`` (=
+    ``now_utc``) and ``run_id`` — as flat parquet (north rule: "writes
+    extracted spans plus per-partition lineage rows").  The reference's
+    6-column ``news`` table is the ``to_publish_news`` projection over it,
+    not a second copy.
 
     Single-pass plan (shuffle accounting at 100 TB):
     - when the input table is laid out clustered by ``bucket =
       pmod(xxhash64(doc_id), n_buckets)`` (Iceberg ``bucket(doc_id)``
       partition transform), the kernel path is shuffle-free: narrow kernel
-      map -> partitioned append, with dedup folded into the kernel pass
+      map -> append, with dedup folded into the kernel pass
       (equal ids share a partition by layout; a violated layout raises
       before the ledger append);
     - otherwise ONE hash-repartition on ``bucket`` both fixes kernel-stage
       parallelism (compressed text under-splits the scan) and clusters the
-      write (1 file per bucket instead of tasks x buckets), and AQE sizes
-      it to the shuffle's bytes;
+      write, and AQE sizes it to the shuffle's bytes;
     - a clustered scan of many small files is coalesced to its bytes, so
       the kernel stage does not pay the Python worker set-up per file;
-    - the sink-id read takes only ``(id, first_seen, bucket)`` and joins
+    - the sink-id read takes only ``(id, first_seen)`` and joins
       before the kernel, so live documents are never extracted;
     - lineage derives from a column-pruned read-back of the written sink
       — no persist of the heavy extraction output, the kernel runs
       exactly once.
     """
-    done = _completed(spark, lineage_path, extractor_version, run_id)
+    done = _completed(spark, lineage_path, run_id)
     docs_b, clustered = _new_input(spark, docs, sink_path, now_utc, n_buckets,
                                    only_buckets, input_clustered_by_bucket,
                                    resume)
@@ -332,7 +331,7 @@ def run_extraction_job(
     # (kernel joins them with "\n") — storing both would double the write
     # volume; readers re-attach it via extraction.with_text_from_spans
     return _publish(spark, extracted.drop("text"), sink_path, lineage_path,
-                    extractor_version, run_id, done)
+                    run_id, done)
 
 
 def run_feed_ingestion_job(
@@ -342,13 +341,11 @@ def run_feed_ingestion_job(
     lineage_path: str,
     now_utc: datetime,
     run_id: str,
-    xml_col: str = "xml",
-    feed_id_col: str = "feed_id",
     **job_kwargs,
 ) -> JobResult:
     """The complete reference user story in one batch call: raw feed XML
     snapshots (feed_id, xml) -> item rows -> kernel documents -> the full
-    idempotent extraction pipeline (dedup, bucketed sink, lineage).
+    idempotent extraction pipeline (dedup, sink, lineage).
 
     A news-rss user switches to this engine by landing their fetched feed
     bodies as a table and invoking this; everything downstream (S1-S7,
@@ -358,6 +355,6 @@ def run_feed_ingestion_job(
     """
     from news_rss_spark.sources.rss_xml import documents_from_feeds
 
-    docs = documents_from_feeds(feeds, xml_col=xml_col, id_col=feed_id_col)
+    docs = documents_from_feeds(feeds)
     return run_extraction_job(spark, docs, sink_path, lineage_path,
                               now_utc, run_id, **job_kwargs)

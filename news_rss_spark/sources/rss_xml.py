@@ -89,13 +89,12 @@ def _items_arrow_batches(
         yield pa.RecordBatch.from_arrays(arrays, schema=ITEM_ARROW_SCHEMA)
 
 
-def feed_items(feeds: DataFrame, xml_col: str = "xml",
-               id_col: str = "feed_id") -> DataFrame:
+def feed_items(feeds: DataFrame) -> DataFrame:
     """(feed_id, xml) -> one row per feed item (or one error row per
     unparseable feed).  Single Arrow pass; the item fan-out happens inside
     the batch, so no explode exchange appears in the plan."""
-    pruned = feeds.select(F.col(id_col).cast("string").alias("feed_id"),
-                          F.col(xml_col).alias("xml"))
+    pruned = feeds.select(F.col("feed_id").cast("string").alias("feed_id"),
+                          "xml")
     return pruned.mapInArrow(_items_arrow_batches, ITEM_DDL)
 
 
@@ -152,7 +151,6 @@ def documents_from_feed_items(items: DataFrame) -> DataFrame:
     )
 
 
-def documents_from_feeds(feeds: DataFrame, xml_col: str = "xml",
-                         id_col: str = "feed_id") -> DataFrame:
+def documents_from_feeds(feeds: DataFrame) -> DataFrame:
     """Raw feed XML straight to kernel documents (S1 end-to-end)."""
-    return documents_from_feed_items(feed_items(feeds, xml_col, id_col))
+    return documents_from_feed_items(feed_items(feeds))

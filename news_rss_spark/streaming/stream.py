@@ -14,8 +14,7 @@ Reference semantics being mirrored:
   src/cache/local/mod.rs:31-54) -> the batch job's rule
   (``operators.dedup``), applied inside :func:`exactly_once_news_sink`:
   ``dedup_within_run`` over the micro-batch, then a left-anti join against
-  the sink's live ids — every ``batch_id`` partition, the batch's own
-  included — whose ``first_seen`` lies within ``DEFAULT_TTL_SECS``.
+  the sink's live ids — every batch's, its own included — whose ``first_seen`` lies within ``DEFAULT_TTL_SECS``.
   ``first_seen`` is the pass's ``now_utc``, written on every row, so the
   TTL runs from insertion like moka's ``time_to_live``
   (src/cache/local/mod.rs:32-34) and an undated or old article is
@@ -33,9 +32,11 @@ Replaying batch ``n`` (a crash before the checkpoint commit) or a lost
 checkpoint (every landed snapshot re-read as new batches) finds the ids
 already live and appends only the ones that are not.
 
-Scale note: each pass globs the sink's files and anti-joins its live
-ids, and every pass that lands rows adds a ``batch_id`` partition, so a
-pass's cost grows with the sink's history.
+Scale note: the sink is flat parquet with ``batch_id`` an ordinary
+column, so a pass lists one dir and starts no listing job.  Each pass
+globs the sink's files and anti-joins its live ids, and every pass that
+lands rows adds one file per write task, so the sink-id scan still grows
+by a task per file with the sink's history.
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ from pyspark.sql import functions as F
 from news_rss_spark.kernel.dates import EPOCH
 from news_rss_spark.operators.dedup import (
     anti_join_seen,
-    append_partitions,
+    append_rows,
     dedup_within_run,
     sink_ids,
 )
@@ -60,24 +61,24 @@ FEEDS_DDL = "feed_id string, xml string, fetched_at timestamp"
 
 def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH):
     """foreachBatch sink with REAL exactly-once semantics (not just
-    at-least-once append): each micro-batch appends, under its own
-    ``batch_id=<n>`` partition, only the rows whose id is not live in the
+    at-least-once append): each micro-batch appends, with its
+    ``batch_id`` as a column, only the rows whose id is not live in the
     sink, so a batch REPLAYED after a crash (checkpoint not yet committed)
     appends nothing it already landed — the batch pipeline's rule.
 
     Dedup is first within the micro-batch (two snapshots of one feed
     landed before a pass share most guids), then a left-anti join against
     the live ids of every batch, its own included.  Raises before writing
-    on a zero-length data file.
+    on a zero-length data file or a directory in the sink.
     """
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         out = (dedup_within_run(batch_df, key="id")
                .withColumn("first_seen", F.lit(now_utc)))
-        out = anti_join_seen(out, sink_ids(out, "id", sink_path, "batch_id"),
-                             now_utc, ts_col="first_seen")
-        append_partitions(out.withColumn("batch_id", F.lit(int(batch_id))),
-                          "batch_id", sink_path)
+        out = anti_join_seen(out, sink_ids(out, "id", sink_path), now_utc,
+                             ts_col="first_seen")
+        append_rows(out.withColumn("batch_id", F.lit(int(batch_id))),
+                    sink_path)
 
     return fn
 

@@ -14,6 +14,7 @@ from news_rss_spark.operators.lineage import LINEAGE_DDL, with_bucket
 from news_rss_spark.plans.pipeline import run_extraction_job
 from news_rss_spark.sources.synth import SPANS_DDL, documents_df
 from tests.fixture_docs import fixture_corpus
+from tests.sink_files import files_holding, tree_bytes
 
 NOW = datetime(2025, 1, 15, 12, 0, 0)
 
@@ -176,24 +177,18 @@ class TestLineageAndResume:
         raises before writing, and the sink stays byte-identical."""
         import glob
         import os
-        from pathlib import Path
         sink, lineage = paths
         docs = documents_df(spark, 120, seed=3, num_partitions=4)
         run_extraction_job(spark, docs, sink, lineage, NOW, "r1", n_buckets=8)
 
-        def sink_bytes():
-            return {os.path.relpath(f, sink): Path(f).read_bytes()
-                    for f in glob.glob(f"{sink}/**", recursive=True)
-                    if os.path.isfile(f)}
-
-        before = sink_bytes()
+        before = tree_bytes(sink)
         ledger_file = glob.glob(f"{lineage}/*.parquet")[0]
         with open(ledger_file, "r+b") as f:
             f.truncate(os.path.getsize(ledger_file) // 2)
         with pytest.raises(Exception, match="FAILED_READ_FILE"):
             run_extraction_job(spark, docs, sink, lineage, NOW, "r2",
                                n_buckets=8, resume=True)
-        assert sink_bytes() == before
+        assert tree_bytes(sink) == before
 
     def test_unreachable_ledger_raises_before_write(self, spark, paths):
         """A ledger on a filesystem that cannot be opened raises before the
@@ -241,26 +236,37 @@ class TestLineageAndResume:
             for k, v in prev.items():
                 spark.conf.set(k, v)
 
-    def test_resume_spark_job_budget(self, spark, paths):
+    def test_resume_spark_job_budget(self, spark, tmp_path):
         """A half-completed resume runs a fixed number of Spark jobs; a
         change that adds a pass over the data shows up here.  Measured on
         Spark 4.1.2: 10 jobs -- the ledger collect; the broadcast of the
         sink's live ids; 4 for the bucket exchange, the in-run dedup
         exchange and the write; 3 for the lineage aggregate with its
-        distinct-id count; the ledger append."""
-        sink, lineage = paths
+        distinct-id count; the ledger append.  The same 10 at 64 buckets:
+        the sink is one flat dir, so no read of it starts a listing job
+        (64 partition dirs would start one, above Spark's parallel
+        partition discovery threshold of 32)."""
         docs = documents_df(spark, 120, seed=3, num_partitions=4)
-        run_extraction_job(spark, docs, sink, lineage, NOW, "crash",
-                           n_buckets=8, resume=False, only_buckets=[0, 2, 4, 6])
         sc = spark.sparkContext
-        sc.setJobGroup("resume-budget", "half-completed resume")
-        try:
-            res = run_extraction_job(spark, docs, sink, lineage, NOW, "r",
-                                     n_buckets=8)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert res.skipped_buckets == 4 and res.lineage_buckets == 4
-        assert len(sc.statusTracker().getJobIdsForGroup("resume-budget")) <= 10
+        for n in (8, 64):
+            sink, lineage = str(tmp_path / f"s{n}"), str(tmp_path / f"l{n}")
+            crash = run_extraction_job(spark, docs, sink, lineage, NOW,
+                                       "crash", n_buckets=n, resume=False,
+                                       only_buckets=list(range(0, n, 2)))
+            group = f"resume-budget-{n}"
+            sc.setJobGroup(group, "half-completed resume")
+            try:
+                res = run_extraction_job(spark, docs, sink, lineage, NOW, "r",
+                                         n_buckets=n)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            if n == 8:
+                assert res.skipped_buckets == 4 and res.lineage_buckets == 4
+            buckets = (spark.read.parquet(sink).select("bucket")
+                       .distinct().count())
+            assert res.skipped_buckets == crash.lineage_buckets
+            assert res.lineage_buckets == buckets - crash.lineage_buckets
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
 
     @pytest.mark.parametrize("cut,error", [
         ("half", "FAILED_READ_FILE"),
@@ -274,34 +280,47 @@ class TestLineageAndResume:
         row.  Spark skips a zero-length file without a word, so the bucket
         would otherwise stay short for good.  A cut or emptied file raises
         on the sink-id read, before the sink is touched; a removed one is
-        caught by the ledger's row count after the append."""
-        import glob
+        caught by the ledger's row count after the append.  The victims are
+        the files holding bucket 0's rows."""
         import os
-        from pathlib import Path
         sink, lineage = paths
         docs = documents_df(spark, 200, seed=3)
         run_extraction_job(spark, docs, sink, lineage, NOW, "crash",
                            n_buckets=8, only_buckets=[0, 1, 2, 3])
-        for victim in glob.glob(f"{sink}/bucket=0/*.parquet"):
+        victims = files_holding(spark, sink, F.col("bucket") == 0)
+        assert victims
+        for victim in victims:
             if cut == "removed":
                 os.remove(victim)
                 continue
             with open(victim, "r+b") as f:
                 f.truncate(os.path.getsize(victim) // 2 if cut == "half" else 0)
 
-        def sink_bytes():
-            return {os.path.relpath(f, sink): Path(f).read_bytes()
-                    for f in glob.glob(f"{sink}/**", recursive=True)
-                    if os.path.isfile(f)}
-
-        before = sink_bytes()
+        before = tree_bytes(sink)
         ledger_rows = spark.read.parquet(lineage).count()
         with pytest.raises(Exception, match=error):
             run_extraction_job(spark, docs, sink, lineage, NOW, "r",
                                n_buckets=8)
         assert spark.read.parquet(lineage).count() == ledger_rows
         if cut != "removed":
-            assert sink_bytes() == before
+            assert tree_bytes(sink) == before
+
+    def test_partition_dir_in_sink_raises(self, spark, paths):
+        """The sink is flat parquet.  Spark reads only the partition
+        directories of a dir that also holds files, so a sink holding a
+        ``bucket=0/`` dir (an old-layout sink, or a foreign
+        ``partitionBy`` append) would drop its own rows from every read:
+        the run raises before the kernel and leaves the sink's bytes."""
+        sink, lineage = paths
+        run_extraction_job(spark, documents_df(spark, 60, seed=3), sink,
+                           lineage, NOW, "r1", n_buckets=4)
+        (spark.read.parquet(sink).filter(F.col("bucket") == 0).drop("bucket")
+         .write.parquet(f"{sink}/bucket=0"))
+        before = tree_bytes(sink)
+        with pytest.raises(RuntimeError, match="bucket=0"):
+            run_extraction_job(spark, documents_df(spark, 80, seed=4), sink,
+                               lineage, NOW, "r2", n_buckets=4)
+        assert tree_bytes(sink) == before
 
     def test_lineage_counts(self, spark, paths):
         sink, lineage = paths

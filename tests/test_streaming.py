@@ -17,8 +17,10 @@ from news_rss_spark.operators.extraction import extract_articles, to_publish_new
 from news_rss_spark.sources.rss_xml import documents_from_feeds
 from news_rss_spark.streaming.stream import (
     FEEDS_DDL,
+    exactly_once_news_sink,
     run_streaming_feed_ingestion_exactly_once,
 )
+from tests.sink_files import files_holding, tree_bytes
 
 NOW = datetime(2025, 1, 15, 12, 0, 0)
 NEWS_COLS = ["id", "message_url", "datetime", "source", "photo_path", "text"]
@@ -139,9 +141,8 @@ def test_ttl_runs_from_first_seen(poller, spark):
 
 def test_exactly_once_sink_survives_batch_replay(spark, tmp_path):
     """foreachBatch exactly-once: a replayed batch (checkpoint wiped -> same
-    input re-delivered as the same batch ids) overwrites its own batch_id
-    partition instead of appending duplicates; even a corrupted partition
-    heals on replay."""
+    input re-delivered as the same batch ids) finds its ids live and
+    appends nothing, so no row is duplicated or lost."""
     xml = _rss(range(20))
     feeds, sink, ckpt = (str(tmp_path / p) for p in ("feeds", "sink", "ckpt"))
     _land(spark, feeds, xml)
@@ -171,7 +172,7 @@ def test_exactly_once_sink_survives_batch_replay(spark, tmp_path):
 
 def test_checkpoint_behind_sink_loses_nothing(poller, spark):
     """A checkpoint wiped after several ticks restarts batch ids below the
-    sink's partitions and re-reads every landed snapshot: the pass appends
+    sink's and re-reads every landed snapshot: the pass appends
     only the guids not yet live, so every guid is in the sink once and the
     earlier rows are unchanged."""
     land, tick, sink, ckpt = poller
@@ -195,20 +196,41 @@ def test_checkpoint_behind_sink_loses_nothing(poller, spark):
 def test_damaged_sink_file_raises(poller, spark, cut, error):
     """A sink file cut to half its length or emptied makes the next pass
     raise before it writes.  Spark skips a zero-length file without a
-    word, so the pass would otherwise publish that batch's ids again."""
-    import glob
+    word, so the pass would otherwise publish that batch's ids again.  The
+    victims are the files holding batch 1's rows."""
     import os
     land, tick, sink, _ = poller
     for t in range(3):
         land(_rss(range(20 * t, 20 * t + 20)))
         tick()
-    for victim in glob.glob(f"{sink}/batch_id=1/*.parquet"):
+    victims = files_holding(spark, sink, F.col("batch_id") == 1)
+    assert victims
+    for victim in victims:
         with open(victim, "r+b") as f:
             f.truncate(os.path.getsize(victim) // 2 if cut == "half" else 0)
+    files = sorted(tree_bytes(sink))
     land(_rss(range(20, 80)))  # batch 1's ids again, and 20 new ones
     with pytest.raises(Exception, match=error):
         tick()
-    assert not os.path.exists(f"{sink}/batch_id=3")
+    assert sorted(tree_bytes(sink)) == files
+
+
+def test_partition_dir_in_sink_raises(poller, spark):
+    """The sink is flat parquet.  Spark reads only the partition
+    directories of a dir that also holds files, so a sink holding a
+    ``batch_id=0/`` dir (an old-layout sink, or a foreign ``partitionBy``
+    append) would drop its own rows from every read: the pass raises
+    before it writes and leaves the sink's bytes."""
+    land, tick, sink, _ = poller
+    land(_rss(range(0, 6)))
+    tick()
+    (spark.read.parquet(sink).filter(F.col("batch_id") == 0)
+     .drop("batch_id").write.parquet(f"{sink}/batch_id=0"))
+    before = tree_bytes(sink)
+    land(_rss(range(4, 10)))
+    with pytest.raises(Exception, match="batch_id=0"):
+        tick()
+    assert tree_bytes(sink) == before
 
 
 def test_poll_pass_timeout_raises(poller, spark):
@@ -222,14 +244,9 @@ def test_poll_pass_timeout_raises(poller, spark):
     assert _ids(spark, sink) == sorted(_guid(i) for i in range(5))
 
 
-def test_poll_tick_spark_job_budget(poller, spark):
-    """A steady-state poll tick runs a fixed number of Spark jobs; a change
-    that adds a pass over the sink or the batch shows up here.  Measured on
-    Spark 4.1.2: 4 jobs over 5 stages -- the feed parse and extraction of
-    the micro-batch, the broadcast of the sink's live ids, the in-batch
-    dedup exchange, and the write (which lists the exchange's map stage as
-    skipped)."""
-    land, tick, _, _ = poller
+def _tick_jobs(spark, tick):
+    """Run ``tick()``; return {job id: stage count} of the Spark jobs it
+    ran, from the status store."""
     sc = spark.sparkContext
     store, bus = sc._jsc.sc().statusStore(), sc._jsc.sc().listenerBus()
 
@@ -242,12 +259,36 @@ def test_poll_tick_spark_job_budget(poller, spark):
             out[j.jobId()] = j.stageIds().size()
         return out
 
+    before = jobs()
+    tick()
+    return {k: v for k, v in jobs().items() if k not in before}
+
+
+def test_poll_tick_spark_job_budget(poller, spark):
+    """A steady-state poll tick runs a fixed number of Spark jobs; a change
+    that adds a pass over the sink or the batch shows up here.  Measured on
+    Spark 4.1.2: 3 jobs over 4 stages -- the broadcast of the sink's live
+    ids (one task per sink file), the feed parse and extraction of the
+    micro-batch into the in-batch dedup exchange, and the write (which
+    lists the exchange's map stage as skipped).  The same after 33 more
+    batches have landed: as partition dirs, more than Spark's parallel
+    partition discovery threshold of 32 would start a listing job on
+    every read of the sink."""
+    land, tick, sink, _ = poller
     for t in range(3):
         land(_rss(range(2 * t, 2 * t + 10)))
-        before = jobs()
-        tick()
-    new = {k: v for k, v in jobs().items() if k not in before}
-    assert len(new) <= 4 and sum(new.values()) <= 5
+        new = _tick_jobs(spark, tick)
+    assert len(new) <= 3 and sum(new.values()) <= 4
+    fn = exactly_once_news_sink(sink, now_utc=NOW)
+    for b in range(33):
+        fn(spark.createDataFrame(
+            [(_guid(1000 + b), "u", NOW, "s", None, f"t{b}")],
+            "id string, message_url string, datetime timestamp_ntz, "
+            "source string, photo_path string, text string"), 100 + b)
+    land(_rss(range(6, 16)))
+    new = _tick_jobs(spark, tick)
+    assert len(new) <= 3 and sum(new.values()) <= 4
+    assert spark.read.parquet(sink).count() == 14 + 33 + 2
 
 
 def test_exactly_once_sink_handles_empty_dir_and_uri_path(spark, tmp_path):
@@ -389,7 +430,7 @@ def test_exactly_once_sink_does_not_mutate_session_confs(spark, tmp_path):
         spark.conf.get("spark.sql.parquet.compression.codec", None),
     )
     assert after == before
-    # dynamic overwrite still honored per-write: batch 0's partition intact
+    # batch 1 held only live ids, so it appended nothing
     got = spark.read.parquet(sink)
     assert sorted(r["batch_id"] for r in got.select("batch_id").collect()) == [0]
 
