@@ -34,10 +34,14 @@ content->content, published|updated->pub_date, link[rel=alternate]@href
 Never raises: malformed XML yields ``{"error": ..., "items": []}``,
 mirroring the reference's log-and-skip on a failed feed fetch
 (mod.rs:86-89).
+
+``item_spans`` maps a parsed item to the kernel's input spans
+(kernel/extract.py); batch and stream both build their documents with it.
 """
 
 from __future__ import annotations
 
+import json
 import xml.etree.ElementTree as ET
 
 NS_CONTENT = "http://purl.org/rss/1.0/modules/content/"
@@ -196,3 +200,41 @@ def parse_feed(xml: str | None) -> dict:
 def parse_feed_batch(xmls: list[str | None]) -> list[dict]:
     """Batch entry point for the Arrow adapter."""
     return [parse_feed(x) for x in xmls]
+
+
+def item_spans(item: dict) -> list[dict]:
+    """One parsed item -> the kernel's input spans, in this order:
+
+    - meta (offset 0): the JSON object {title, link, description,
+      pub_date_rfc822}, fields in that order, null ones left out, compact
+      separators, non-ASCII unescaped.  These are the bytes Spark's
+      ``to_json`` writes for the same struct, and the kernel's
+      ``byte_count`` counts them;
+    - html (offset 1) from a non-empty <content:encoded>, else desc
+      (offset 1) from a present <description> (the kernel re-applies the
+      reference's own 3-way fallback either way);
+    - img (offset 2) from <itunes:image href> (mod.rs:194-197);
+    - img/video (offset 3, 4, ...) from the Media-RSS refs, in feed
+      order; audio counts as img.
+    """
+    meta = {k: v for k, v in (("title", item["title"]),
+                              ("link", item["link"]),
+                              ("description", item["description"]),
+                              ("pub_date_rfc822", item["pub_date"]))
+            if v is not None}
+    spans = [{"kind": "meta", "media_ref": None, "offset": 0,
+              "text": json.dumps(meta, separators=(",", ":"),
+                                 ensure_ascii=False)}]
+    if item["content"]:
+        spans.append({"kind": "html", "text": item["content"],
+                      "media_ref": None, "offset": 1})
+    elif item["description"] is not None:
+        spans.append({"kind": "desc", "text": item["description"],
+                      "media_ref": None, "offset": 1})
+    if item["itunes_image"] is not None:
+        spans.append({"kind": "img", "text": None,
+                      "media_ref": item["itunes_image"], "offset": 2})
+    for i, m in enumerate(item["media"] or []):
+        spans.append({"kind": "video" if m["kind"] == "video" else "img",
+                      "text": None, "media_ref": m["url"], "offset": 3 + i})
+    return spans

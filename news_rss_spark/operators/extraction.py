@@ -61,6 +61,18 @@ EXTRACTED_DDL = (
 )
 
 
+def extracted_batch(doc_ids: list[str | None], spans: list[list[dict] | None],
+                    now_utc: datetime) -> pa.RecordBatch:
+    """The kernel's rows for one batch of documents, as one Arrow batch of
+    ``EXTRACTED_ARROW_SCHEMA``."""
+    results = extract_batch(doc_ids, spans, now_utc)
+    arrays = [
+        pa.array([r.get(f.name) for r in results], type=f.type)
+        for f in EXTRACTED_ARROW_SCHEMA
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=EXTRACTED_ARROW_SCHEMA)
+
+
 def _extract_arrow_batches(
     batches: Iterator[pa.RecordBatch], now_utc: datetime,
     dedup_within_partition: bool = False,
@@ -80,12 +92,7 @@ def _extract_arrow_batches(
                 spans = [spans[i] for i in keep]
             if not doc_ids:
                 continue
-        results = extract_batch(doc_ids, spans, now_utc)
-        arrays = [
-            pa.array([r.get(f.name) for r in results], type=f.type)
-            for f in EXTRACTED_ARROW_SCHEMA
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, schema=EXTRACTED_ARROW_SCHEMA)
+        yield extracted_batch(doc_ids, spans, now_utc)
 
 
 def extract_articles(docs: DataFrame, now_utc: datetime = EPOCH,

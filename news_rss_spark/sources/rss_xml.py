@@ -1,4 +1,4 @@
-"""Feed-XML -> item rows -> kernel documents, as ONE vectorized stage.
+"""Feed-XML -> item rows -> kernel documents, each as ONE vectorized stage.
 
 This is the missing front door of the reference parity surface (S1): every
 real user's first input is raw feed XML (``rss::Channel::read_from``,
@@ -7,23 +7,38 @@ of the engine consumes are produced HERE, from actual XML, not by a
 fixture generator.
 
 Plan shape at 100 TB: feeds arrive as a table (feed_id, xml) — one row per
-fetched feed snapshot (a few KB-MB each).  ``feed_items`` runs the pure-
-Python parser in a single mapInArrow pass (Arrow batches in/out, no
-per-row Python), fanning each feed out to its items inside the batch —
-a narrow map, no shuffle, no explode exchange.  ``documents_from_feed_
-items`` is all JVM column expressions.  The composition plugs straight
-into plans/pipeline.run_extraction_job.
+fetched feed snapshot (a few KB-MB each).  Each function here is a single
+mapInArrow pass (Arrow batches in/out, no per-row Python) that fans each
+feed out to its items inside the batch — a narrow map, no shuffle, no
+explode exchange:
+
+- ``feed_items``: the parsed item rows (``ITEM_DDL``), one error row per
+  failed or empty feed;
+- ``documents_from_feeds`` / ``documents_from_feed_items``: the kernel
+  documents (doc_id, spans), from feed XML or from item rows, built by the
+  one span rule ``kernel.feedxml.item_spans``; the batch job feeds them to
+  ``plans/pipeline.run_extraction_job``, which anti-joins them on
+  ``doc_id`` before its kernel;
+- ``extract_feeds``: parse, ``item_spans`` and the extraction kernel in
+  the same pass (the reference's per-item loop, mod.rs:115-211), giving
+  ``extract_articles``' rows; the poller runs it.
 """
 
 from __future__ import annotations
 
+from datetime import datetime
 from typing import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from news_rss_spark.kernel.feedxml import parse_feed_batch
+from news_rss_spark.kernel.feedxml import item_spans, parse_feed_batch
+from news_rss_spark.operators.extraction import (
+    EXTRACTED_DDL,
+    SPAN_TYPE,
+    extracted_batch,
+)
 
 ITEM_ARROW_SCHEMA = pa.schema([
     ("feed_id", pa.string()),
@@ -49,6 +64,10 @@ ITEM_DDL = (
     "itunes_image string, media array<struct<kind:string,url:string>>, "
     "parse_error string"
 )
+
+DOCS_DDL = ("doc_id string, "
+            "spans array<struct<kind:string, text:string, media_ref:string,"
+            " offset:int>>")
 
 
 def _items_arrow_batches(
@@ -89,6 +108,26 @@ def _items_arrow_batches(
         yield pa.RecordBatch.from_arrays(arrays, schema=ITEM_ARROW_SCHEMA)
 
 
+def _feed_documents(
+    batch: pa.RecordBatch,
+) -> tuple[list[str | None], list[list[dict]]]:
+    """The doc ids and spans of the items of one Arrow batch of feeds (a
+    failed feed has no items)."""
+    doc_ids, spans = [], []
+    for parsed in parse_feed_batch(batch.column("xml").to_pylist()):
+        for item in parsed["items"]:
+            doc_ids.append(item["guid"])
+            spans.append(item_spans(item))
+    return doc_ids, spans
+
+
+def _documents_batch(doc_ids: list[str | None],
+                     spans: list[list[dict]]) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array(doc_ids, pa.string()), pa.array(spans, SPAN_TYPE)],
+        names=["doc_id", "spans"])
+
+
 def feed_items(feeds: DataFrame) -> DataFrame:
     """(feed_id, xml) -> one row per feed item (or one error row per
     unparseable feed).  Single Arrow pass; the item fan-out happens inside
@@ -98,59 +137,37 @@ def feed_items(feeds: DataFrame) -> DataFrame:
     return pruned.mapInArrow(_items_arrow_batches, ITEM_DDL)
 
 
-def _span(kind, text, ref, off):
-    return F.struct(
-        kind.alias("kind"), text.alias("text"),
-        ref.alias("media_ref"), off.cast("int").alias("offset"),
-    )
-
-
 def documents_from_feed_items(items: DataFrame) -> DataFrame:
-    """Item rows -> the kernel input shape (doc_id, spans) — all JVM
-    column expressions (BASELINE input_hint; span kinds per
-    kernel/extract.py:13-19):
+    """Item rows (``ITEM_DDL``) -> the kernel input shape (doc_id, spans)
+    by ``item_spans``; error rows never become documents."""
 
-    - meta span: JSON {title, link, description, pub_date_rfc822}
-    - html span from <content:encoded> when present, else desc span from
-      <description> (the kernel re-applies the reference's own 3-way
-      fallback either way)
-    - img span from <itunes:image href> (mod.rs:194-197)
-    - img/video spans from Media-RSS refs, trailing, in feed order
-    """
-    ok = items.filter(F.col("parse_error").isNull()
-                      & F.col("item_index").isNotNull())
-    meta_json = F.to_json(F.struct(
-        F.col("title"), F.col("link"), F.col("description"),
-        F.col("pub_date").alias("pub_date_rfc822"),
-    ))
-    null_s = F.lit(None).cast("string")
-    meta_span = _span(F.lit("meta"), meta_json, null_s, F.lit(0))
-    content_span = F.when(
-        F.length(F.coalesce(F.col("content"), F.lit(""))) > 0,
-        _span(F.lit("html"), F.col("content"), null_s, F.lit(1)),
-    ).otherwise(F.when(
-        F.col("description").isNotNull(),
-        _span(F.lit("desc"), F.col("description"), null_s, F.lit(1)),
-    ))
-    itunes_span = F.when(
-        F.col("itunes_image").isNotNull(),
-        _span(F.lit("img"), null_s, F.col("itunes_image"), F.lit(2)),
-    )
-    head = F.filter(F.array(meta_span, content_span, itunes_span),
-                    lambda s: s["kind"].isNotNull())
-    media_spans = F.transform(
-        F.coalesce(F.col("media"), F.array()),
-        lambda m, i: _span(
-            F.when(m["kind"] == "video", F.lit("video")).otherwise(F.lit("img")),
-            null_s, m["url"], F.lit(3) + i,
-        ),
-    )
-    return ok.select(
-        F.col("guid").alias("doc_id"),
-        F.concat(head, media_spans).alias("spans"),
-    )
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ok = [r for r in batch.to_pylist()
+                  if r["parse_error"] is None and r["item_index"] is not None]
+            yield _documents_batch([r["guid"] for r in ok],
+                                   [item_spans(r) for r in ok])
+
+    return items.mapInArrow(fn, DOCS_DDL)
 
 
 def documents_from_feeds(feeds: DataFrame) -> DataFrame:
     """Raw feed XML straight to kernel documents (S1 end-to-end)."""
-    return documents_from_feed_items(feed_items(feeds))
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _documents_batch(*_feed_documents(batch))
+
+    return feeds.select("xml").mapInArrow(fn, DOCS_DDL)
+
+
+def extract_feeds(feeds: DataFrame, now_utc: datetime) -> DataFrame:
+    """Raw feed XML straight to extracted article rows: the rows of
+    ``extract_articles(documents_from_feeds(feeds), now_utc)``, from one
+    Python pass."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield extracted_batch(*_feed_documents(batch), now_utc)
+
+    return feeds.select("xml").mapInArrow(fn, EXTRACTED_DDL)

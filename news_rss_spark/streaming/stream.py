@@ -14,8 +14,9 @@ Reference semantics being mirrored:
   src/cache/local/mod.rs:31-54) -> the batch job's rule
   (``operators.dedup``), applied inside :func:`exactly_once_news_sink`:
   ``dedup_within_run`` over the micro-batch, then a left-anti join against
-  the sink's live ids — every batch's, its own included — whose ``first_seen`` lies within ``DEFAULT_TTL_SECS``.
-  ``first_seen`` is the pass's ``now_utc``, written on every row, so the
+  the sink's live ids — every batch's, its own included — whose
+  ``first_seen`` lies within ``DEFAULT_TTL_SECS``.  ``first_seen`` is the
+  pass's ``now_utc``, a required parameter written on every row, so the
   TTL runs from insertion like moka's ``time_to_live``
   (src/cache/local/mod.rs:32-34) and an undated or old article is
   suppressed like any other.  There is no watermark and no state store:
@@ -23,9 +24,12 @@ Reference semantics being mirrored:
   front of the same sink was measured and rejected: it runs a no-data
   micro-batch after every data batch, and a poll tick took about 1.5x as
   long.
-- The per-item extraction (mod.rs:157-211) runs unchanged: ``mapInArrow``
-  stages compose with streaming sources, so batch and streaming share ONE
-  kernel code path.
+- The per-item loop (parse, ``extract_item``, mod.rs:115-211) is ONE
+  ``mapInArrow`` pass, ``sources.rss_xml.extract_feeds``: feed XML in,
+  extracted rows out, with the span rule (``kernel.feedxml.item_spans``)
+  and the kernel the batch job runs.  A one-file micro-batch is one split,
+  so the in-batch dedup runs in place without an exchange: a steady tick
+  runs two Spark jobs, the sink-id broadcast and the write.
 
 The sink is append-only, so a replay never loses or repeats a row.
 Replaying batch ``n`` (a crash before the checkpoint commit) or a lost
@@ -46,20 +50,19 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from news_rss_spark.kernel.dates import EPOCH
 from news_rss_spark.operators.dedup import (
     anti_join_seen,
     append_rows,
     dedup_within_run,
     sink_ids,
 )
-from news_rss_spark.operators.extraction import extract_articles, to_publish_news
-from news_rss_spark.sources.rss_xml import documents_from_feeds
+from news_rss_spark.operators.extraction import to_publish_news
+from news_rss_spark.sources.rss_xml import extract_feeds
 
 FEEDS_DDL = "feed_id string, xml string, fetched_at timestamp"
 
 
-def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH):
+def exactly_once_news_sink(sink_path: str, now_utc: datetime):
     """foreachBatch sink with REAL exactly-once semantics (not just
     at-least-once append): each micro-batch appends, with its
     ``batch_id`` as a column, only the rows whose id is not live in the
@@ -68,11 +71,17 @@ def exactly_once_news_sink(sink_path: str, now_utc: datetime = EPOCH):
 
     Dedup is first within the micro-batch (two snapshots of one feed
     landed before a pass share most guids), then a left-anti join against
-    the live ids of every batch, its own included.  Raises before writing
-    on a zero-length data file or a directory in the sink.
+    the live ids of every batch, its own included.  A micro-batch of one
+    split is coalesced to one partition, which Spark then knows holds
+    every row, so the in-batch dedup needs no exchange; with more splits
+    the dedup exchanges rows by id.  ``now_utc`` is the pass's clock, the
+    ``first_seen`` of every row it appends.  Raises before writing on a
+    zero-length data file or a directory in the sink.
     """
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.rdd.getNumPartitions() == 1:
+            batch_df = batch_df.coalesce(1)
         out = (dedup_within_run(batch_df, key="id")
                .withColumn("first_seen", F.lit(now_utc)))
         out = anti_join_seen(out, sink_ids(out, "id", sink_path), now_utc,
@@ -88,17 +97,18 @@ def run_streaming_feed_ingestion_exactly_once(
     feeds_path: str,
     sink_path: str,
     checkpoint_path: str,
-    now_utc: datetime = EPOCH,
+    now_utc: datetime,
     timeout_secs: int = 300,
 ) -> None:
     """One poller tick: an availableNow pass over the raw feed snapshots
-    (``FEEDS_DDL`` rows) landed since the last pass -> parse -> extract ->
-    :func:`exactly_once_news_sink`.  A pass still running after
+    (``FEEDS_DDL`` rows) landed since the last pass -> parse and extract
+    in one pass (``extract_feeds``) -> :func:`exactly_once_news_sink`.
+    ``now_utc`` is the pass's clock: the kernel's date fallback and the
+    ``first_seen`` the TTL runs from.  A pass still running after
     ``timeout_secs`` is stopped and raises ``TimeoutError``; the next pass
     resumes from the checkpoint."""
     feeds = spark.readStream.schema(FEEDS_DDL).parquet(feeds_path)
-    news = to_publish_news(extract_articles(documents_from_feeds(feeds),
-                                            now_utc=now_utc))
+    news = to_publish_news(extract_feeds(feeds, now_utc))
     q = (
         news.writeStream
         .foreachBatch(exactly_once_news_sink(sink_path, now_utc))

@@ -5,9 +5,10 @@ Runs ``--ticks`` availableNow poll ticks (default 80) of
 ``ingestbench.inputs.poll_ticks_input(TickSpec(20, 2, ticks), seed)``
 through ``run_streaming_feed_ingestion_exactly_once``, in the session
 ``ingestbench.run.start_session`` builds, one landed snapshot file per
-tick.  Prints, per tick, its seconds and Spark jobs, then the median
-seconds of the first and the last 20 ticks, their ratio (the growth),
-the Spark jobs of each of the last 20 ticks and the sink's row count.
+tick.  Prints, per tick, its seconds, Spark jobs and Spark stages, then
+the median seconds of the first and the last 20 ticks, their ratio (the
+growth), the Spark jobs and stages of each of the last 20 ticks and the
+sink's row count.
 
     python3 scripts/tick_growth.py --ticks 80 --seed 1
 
@@ -58,14 +59,16 @@ def land(feeds: str, rows, t: int) -> None:
     os.rename(tmp, f"{feeds}/tick-{t:05d}.parquet")
 
 
-def job_ids(spark) -> set[int]:
-    """Every Spark job id in the status store so far."""
+def jobs(spark) -> dict[int, int]:
+    """{job id: stage count} of every Spark job in the status store so
+    far."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     it = jsc.statusStore().jobsList(None).iterator()
-    out = set()
+    out = {}
     while it.hasNext():
-        out.add(it.next().jobId())
+        j = it.next()
+        out[j.jobId()] = j.stageIds().size()
     return out
 
 
@@ -86,17 +89,19 @@ def main(argv=None) -> int:
             feeds, sink, ckpt = (os.path.join(work, d)
                                  for d in ("feeds", "sink", "ckpt"))
             os.makedirs(feeds)
-            secs, jobs = [], []
+            secs, n_jobs, n_stages = [], [], []
             for t in range(args.ticks):
                 land(feeds, inp.ticks[t], t)
-                before = job_ids(spark)
+                before = jobs(spark)
                 t0 = time.perf_counter()
                 run_streaming_feed_ingestion_exactly_once(spark, feeds, sink,
                                                           ckpt, now_utc=NOW)
                 secs.append(time.perf_counter() - t0)
-                jobs.append(len(job_ids(spark) - before))
-                print(f"tick {t}: {secs[-1]:.3f} s, {jobs[-1]} jobs",
-                      flush=True)
+                new = [n for j, n in jobs(spark).items() if j not in before]
+                n_jobs.append(len(new))
+                n_stages.append(sum(new))
+                print(f"tick {t}: {secs[-1]:.3f} s, {n_jobs[-1]} jobs,"
+                      f" {n_stages[-1]} stages", flush=True)
             first = statistics.median(secs[:WINDOW])
             last = statistics.median(secs[-WINDOW:])
             rows = spark.read.parquet(sink).count()
@@ -107,7 +112,8 @@ def main(argv=None) -> int:
     print(f"median first {WINDOW} ticks: {first:.3f} s")
     print(f"median last {WINDOW} ticks: {last:.3f} s")
     print(f"growth (last / first): {last / first:.2f}")
-    print(f"jobs per tick, last {WINDOW}: {jobs[-WINDOW:]}")
+    print(f"jobs per tick, last {WINDOW}: {n_jobs[-WINDOW:]}")
+    print(f"stages per tick, last {WINDOW}: {n_stages[-WINDOW:]}")
     print(f"sink rows: {rows}")
     return 0
 

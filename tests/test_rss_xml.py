@@ -19,6 +19,63 @@ ATOM = """<feed xmlns="http://www.w3.org/2005/Atom"><title>T-Feed</title>
 </feed>"""
 
 
+ITUNES = """<rss version="2.0"
+ xmlns:itunes="http://www.itunes.com/dtds/podcast-1.0.dtd">
+<channel><title>Pod</title>
+<item><guid>https://pod.example/e1</guid><title>Ep 1</title>
+<description>A show about things.</description>
+<itunes:image href="https://pod.example/art.jpg"/></item>
+</channel></rss>"""
+
+# the NDTV layout (CDATA content:encoded, trailing media:content), with a
+# title holding non-ASCII text, quotes, a backslash and a tab, and items
+# lacking a link, a body, a description or a title
+NDTV_LIKE = """<?xml version="1.0" encoding="UTF-8"?>
+<rss version="2.0" xmlns:content="http://purl.org/rss/1.0/modules/content/"
+ xmlns:media="http://search.yahoo.com/mrss/"><channel>
+<title>NDTV News-World-news</title>
+<item>
+<title><![CDATA[Cuba's "Grid" Fails — Ünïcode \\ back\ttab]]></title>
+<link>https://www.ndtv.com/world-news/cuba-grid-6833795</link>
+<guid>https://www.ndtv.com/world-news/cuba-grid-6833795</guid>
+<description><![CDATA[Millions of Cubans awoke to a "third" outage.]]></description>
+<content:encoded><![CDATA[<p>Millions of Cubans awoke &amp; waited.</p><p>Power returned — slowly.</p>]]></content:encoded>
+<pubDate>Sun, 20 Oct 2024 21:34:25 +0530</pubDate>
+<media:content url="https://c.ndtvimg.com/2024-10/cuba.jpg" type="image/jpeg"/>
+</item>
+<item>
+<title>Desc only</title>
+<guid>https://www.ndtv.com/world-news/desc-only-1</guid>
+<description>Only a description here.</description>
+<media:content url="https://c.ndtvimg.com/v/clip.mp4" type="video/mp4"/>
+<media:content url="https://c.ndtvimg.com/a/pod.mp3" type="audio/mpeg"/>
+</item>
+<item>
+<title>Content only</title>
+<link>https://www.ndtv.com/world-news/content-only-2</link>
+<guid>https://www.ndtv.com/world-news/content-only-2</guid>
+<content:encoded><![CDATA[<p>Body without a description.</p>]]></content:encoded>
+<pubDate>Mon, 21 Oct 2024 08:00:00 +0000</pubDate>
+</item>
+<item>
+<title></title>
+<guid>https://www.ndtv.com/world-news/empty-title-3</guid>
+<description>Untitled.</description>
+</item>
+</channel></rss>"""
+
+GUIDLESS = """<rss version="2.0"><channel><title>C</title>
+<item><title>No guid</title><description>d</description></item>
+</channel></rss>"""
+
+# (feed_id, xml) inputs of the span-rule checks; the reference's NDTV
+# snapshot joins them when the checkout is present
+SHAPES = [("ndtv-like", NDTV_LIKE), ("atom", ATOM), ("itunes", ITUNES),
+          ("malformed", "<rss><channel><title>x"), ("guidless", GUIDLESS)]
+if os.path.exists(NDTV):
+    SHAPES.append(("ndtv", open(NDTV, encoding="utf-8").read()))
+
+
 def _feeds_df(spark, rows):
     return spark.createDataFrame(rows, "feed_id string, xml string")
 
@@ -121,14 +178,7 @@ class TestFeedShapes:
     def test_itunes_image_to_photo_path(self, spark):
         from news_rss_spark.operators.extraction import extract_articles
         from news_rss_spark.sources.rss_xml import documents_from_feeds
-        xml = """<rss version="2.0"
-         xmlns:itunes="http://www.itunes.com/dtds/podcast-1.0.dtd">
-        <channel><title>Pod</title>
-        <item><guid>https://pod.example/e1</guid><title>Ep 1</title>
-        <description>A show about things.</description>
-        <itunes:image href="https://pod.example/art.jpg"/></item>
-        </channel></rss>"""
-        docs = documents_from_feeds(_feeds_df(spark, [("p", xml)]))
+        docs = documents_from_feeds(_feeds_df(spark, [("p", ITUNES)]))
         out = extract_articles(docs, now_utc=NOW).collect()[0]
         assert out["status"] == "ok"
         assert out["photo_path"] == "https://pod.example/art.jpg"
@@ -141,3 +191,85 @@ class TestFeedShapes:
         plan = feed_items(_feeds_df(spark, [("a", ATOM)])) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "Generate" not in plan and "Exchange" not in plan
+
+
+class TestSpanRule:
+    """``item_spans`` is the one item -> kernel-span rule of batch and
+    stream.  Its meta span must keep the bytes Spark's ``to_json`` wrote
+    for it, since the kernel's ``byte_count`` counts input span text."""
+
+    def test_item_spans_literal(self):
+        from news_rss_spark.kernel.feedxml import item_spans, parse_feed
+        items = parse_feed(NDTV_LIKE)["items"]
+        meta = ('{"title":"Cuba\'s \\"Grid\\" Fails — Ünïcode \\\\ back\\ttab",'
+                '"link":"https://www.ndtv.com/world-news/cuba-grid-6833795",'
+                '"description":"Millions of Cubans awoke to a \\"third\\" outage.",'
+                '"pub_date_rfc822":"Sun, 20 Oct 2024 21:34:25 +0530"}')
+        assert item_spans(items[0]) == [
+            {"kind": "meta", "text": meta, "media_ref": None, "offset": 0},
+            {"kind": "html", "text": "<p>Millions of Cubans awoke &amp; "
+             "waited.</p><p>Power returned — slowly.</p>",
+             "media_ref": None, "offset": 1},
+            {"kind": "img", "text": None,
+             "media_ref": "https://c.ndtvimg.com/2024-10/cuba.jpg",
+             "offset": 3},
+        ]
+        assert item_spans(items[1]) == [
+            {"kind": "meta", "text": '{"title":"Desc only","description":'
+             '"Only a description here."}', "media_ref": None, "offset": 0},
+            {"kind": "desc", "text": "Only a description here.",
+             "media_ref": None, "offset": 1},
+            {"kind": "video", "text": None,
+             "media_ref": "https://c.ndtvimg.com/v/clip.mp4", "offset": 3},
+            {"kind": "img", "text": None,
+             "media_ref": "https://c.ndtvimg.com/a/pod.mp3", "offset": 4},
+        ]
+        assert [s["text"] for s in item_spans(items[3])] == [
+            '{"title":"","description":"Untitled."}', "Untitled."]
+        itunes = parse_feed(ITUNES)["items"][0]
+        assert item_spans(itunes)[2] == {
+            "kind": "img", "text": None,
+            "media_ref": "https://pod.example/art.jpg", "offset": 2}
+
+    def test_meta_span_is_to_json_bytes(self, spark):
+        """On every input shape, the meta span equals Spark's ``to_json``
+        of the item's (title, link, description, pub_date_rfc822)."""
+        from news_rss_spark.sources.rss_xml import (
+            documents_from_feeds, feed_items)
+        items = feed_items(_feeds_df(spark, SHAPES)).filter(
+            F.col("parse_error").isNull() & F.col("item_index").isNotNull())
+        want = items.select(F.to_json(F.struct(
+            "title", "link", "description",
+            F.col("pub_date").alias("pub_date_rfc822"))).alias("meta"))
+        got = documents_from_feeds(_feeds_df(spark, SHAPES)).select(
+            F.col("spans")[0]["text"].alias("meta"))
+        assert len(want.collect()) >= 7
+        assert sorted(r["meta"] for r in got.collect()) == \
+            sorted(r["meta"] for r in want.collect())
+
+    def test_extract_feeds_equals_two_pass_rows(self, spark):
+        """The one-pass ``extract_feeds`` gives the rows of
+        ``extract_articles(documents_from_feeds(...))``, column for column,
+        skip rows included."""
+        from news_rss_spark.operators.extraction import extract_articles
+        from news_rss_spark.sources.rss_xml import (
+            documents_from_feeds, extract_feeds)
+        feeds = _feeds_df(spark, SHAPES)
+        one = extract_feeds(feeds, NOW)
+        two = extract_articles(documents_from_feeds(feeds), now_utc=NOW)
+        assert one.schema == two.schema
+        rows = sorted(map(repr, one.collect()))
+        assert rows == sorted(map(repr, two.collect()))
+        assert len(rows) >= 7 and "status='skip'" in "".join(rows)
+
+    def test_byte_count_pinned(self, spark):
+        """``byte_count`` of the NDTV-layout items, as the JVM span rule
+        made them before the rule moved to Python."""
+        from news_rss_spark.sources.rss_xml import extract_feeds
+        rows = extract_feeds(_feeds_df(spark, [("n", NDTV_LIKE)]), NOW)
+        got = {r["id"].rsplit("/", 1)[1]: (r["status"], r["byte_count"])
+               for r in rows.collect()}
+        assert got == {"cuba-grid-6833795": ("ok", 345),
+                       "desc-only-1": ("ok", 149),
+                       "content-only-2": ("skip", None),
+                       "empty-title-3": ("skip", None)}

@@ -6,6 +6,7 @@ src/cache/local/mod.rs:31-54), with the TTL running from first-seen
 time.  The analytics sinks (windowed counts, HLL/CMS/quantile sketches)
 follow."""
 
+import re
 import shutil
 from datetime import datetime, timedelta
 
@@ -24,6 +25,8 @@ from tests.sink_files import files_holding, tree_bytes
 
 NOW = datetime(2025, 1, 15, 12, 0, 0)
 NEWS_COLS = ["id", "message_url", "datetime", "source", "photo_path", "text"]
+NEWS_DDL = ("id string, message_url string, datetime timestamp_ntz, "
+            "source string, photo_path string, text string")
 
 
 def _guid(i):
@@ -246,9 +249,11 @@ def test_poll_pass_timeout_raises(poller, spark):
 
 def _tick_jobs(spark, tick):
     """Run ``tick()``; return {job id: stage count} of the Spark jobs it
-    ran, from the status store."""
+    ran, and the physical plans of the SQL executions it ran, from the
+    status stores."""
     sc = spark.sparkContext
     store, bus = sc._jsc.sc().statusStore(), sc._jsc.sc().listenerBus()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
 
     def jobs():
         bus.waitUntilEmpty()
@@ -259,36 +264,88 @@ def _tick_jobs(spark, tick):
             out[j.jobId()] = j.stageIds().size()
         return out
 
-    before = jobs()
+    def plans():
+        bus.waitUntilEmpty()
+        it = sql_store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before, plans_before = jobs(), plans()
     tick()
-    return {k: v for k, v in jobs().items() if k not in before}
+    return ({k: v for k, v in jobs().items() if k not in before},
+            [v for k, v in plans().items() if k not in plans_before])
+
+
+def _nodes(plans, name):
+    """How many physical plan nodes called ``name`` ``plans`` hold."""
+    return sum(len(re.findall(rf"^\(\d+\) {name}( |$)", p, re.M)) for p in plans)
 
 
 def test_poll_tick_spark_job_budget(poller, spark):
     """A steady-state poll tick runs a fixed number of Spark jobs; a change
     that adds a pass over the sink or the batch shows up here.  Measured on
-    Spark 4.1.2: 3 jobs over 4 stages -- the broadcast of the sink's live
-    ids (one task per sink file), the feed parse and extraction of the
-    micro-batch into the in-batch dedup exchange, and the write (which
-    lists the exchange's map stage as skipped).  The same after 33 more
-    batches have landed: as partition dirs, more than Spark's parallel
-    partition discovery threshold of 32 would start a listing job on
-    every read of the sink."""
+    Spark 4.1.2: 2 jobs of one stage each -- the broadcast of the sink's
+    live ids (one task per sink file), and the feed parse, extraction,
+    in-place dedup and write of the one-file micro-batch.  Its plans hold
+    one Python map node (parse and extract are one pass) and no shuffle
+    exchange.  The same after 33 more batches have landed: as partition
+    dirs, more than Spark's parallel partition discovery threshold of 32
+    would start a listing job on every read of the sink."""
     land, tick, sink, _ = poller
     for t in range(3):
         land(_rss(range(2 * t, 2 * t + 10)))
-        new = _tick_jobs(spark, tick)
-    assert len(new) <= 3 and sum(new.values()) <= 4
+        new, plans = _tick_jobs(spark, tick)
+    assert len(new) <= 2 and sum(new.values()) <= 2
+    assert _nodes(plans, "MapInArrow") == 1
+    assert _nodes(plans, "Exchange") == 0
     fn = exactly_once_news_sink(sink, now_utc=NOW)
     for b in range(33):
         fn(spark.createDataFrame(
-            [(_guid(1000 + b), "u", NOW, "s", None, f"t{b}")],
-            "id string, message_url string, datetime timestamp_ntz, "
-            "source string, photo_path string, text string"), 100 + b)
+            [(_guid(1000 + b), "u", NOW, "s", None, f"t{b}")], NEWS_DDL), 100 + b)
     land(_rss(range(6, 16)))
-    new = _tick_jobs(spark, tick)
-    assert len(new) <= 3 and sum(new.values()) <= 4
+    new, plans = _tick_jobs(spark, tick)
+    assert len(new) <= 2 and sum(new.values()) <= 2
+    assert _nodes(plans, "MapInArrow") == 1
+    assert _nodes(plans, "Exchange") == 0
     assert spark.read.parquet(sink).count() == 14 + 33 + 2
+
+
+@pytest.mark.parametrize("splits", [1, 2], ids=["one_split", "two_splits"])
+def test_sink_dedups_a_batch_of_either_shape(spark, tmp_path, splits):
+    """One id twice in a micro-batch lands once, whether the batch is one
+    split holding both rows (deduped in place: each job the write runs is
+    one stage, no exchange) or two splits holding one each (deduped
+    through an exchange)."""
+    batch_dir, sink = str(tmp_path / "batch"), str(tmp_path / "sink")
+    for k in range(splits):
+        spark.createDataFrame(
+            [(_guid(1), "u", NOW, "s", None, f"t{k}{j}")
+             for j in range(2 // splits)], NEWS_DDL) \
+             .coalesce(1).write.mode("append").parquet(batch_dir)
+    batch = spark.read.schema(NEWS_DDL).parquet(batch_dir)
+    assert batch.rdd.getNumPartitions() == splits
+    new, _ = _tick_jobs(
+        spark, lambda: exactly_once_news_sink(sink, now_utc=NOW)(batch, 0))
+    assert _ids(spark, sink) == [_guid(1)]
+    if splits == 1:
+        assert sum(new.values()) == len(new)
+    else:
+        assert sum(new.values()) > len(new)
+
+
+def test_stream_clock_is_required(spark, tmp_path):
+    """The poller has no default clock.  Rows stamped with a default 1970
+    ``first_seen`` would expire on the first pass that runs with a real
+    clock, and be published again."""
+    feeds, sink, ckpt = (str(tmp_path / d) for d in ("feeds", "sink", "ckpt"))
+    _land(spark, feeds, _rss([1]))
+    with pytest.raises(TypeError, match="now_utc"):
+        run_streaming_feed_ingestion_exactly_once(spark, feeds, sink, ckpt)
+    with pytest.raises(TypeError, match="now_utc"):
+        exactly_once_news_sink(sink)
 
 
 def test_exactly_once_sink_handles_empty_dir_and_uri_path(spark, tmp_path):
@@ -418,7 +475,7 @@ def test_exactly_once_sink_does_not_mutate_session_confs(spark, tmp_path):
         spark.conf.get("spark.sql.parquet.compression.codec", None),
     )
     sink = str(tmp_path / "sink")
-    fn = exactly_once_news_sink(sink)
+    fn = exactly_once_news_sink(sink, now_utc=NOW)
     batch = spark.createDataFrame(
         [(1, "a", "2024-01-01 00:00:00")],
         "id int, text string, datetime string",
